@@ -29,14 +29,19 @@ to the delta depends on the standing query's KEY CARDINALITY:
   driver-side against an in-memory dict and the state / changelog
   versions are written directly (one small file per batch). Sums use
   exact Decimal arithmetic so merge order can't drift.
-- large key space (per-user, per-document — changefeed_keyed): the
-  merge stays IN SPARK as a keyed full-outer join; nothing
-  key-cardinality-sized ever crosses to the driver. At 100 TB the
-  parquet state dir becomes an Iceberg/Delta MERGE target with
-  foreachBatch unchanged.
+- large key space (per-user, per-document — changefeed_keyed): state
+  is the hash-bucketed MVCC store. A batch whose delta rows plus the
+  state rows of its touched buckets stay below _DRIVER_FOLD_ROWS is
+  folded on the driver: one Spark job collects the delta with its
+  bucket, the touched buckets are read, merged with the same exact
+  Decimal fold as above and rewritten through the store's own
+  stage layout and publish(). Above the gate the merge stays IN
+  SPARK as a keyed full-outer join and nothing key-cardinality-
+  sized crosses to the driver. At 100 TB the parquet state dir
+  becomes an Iceberg/Delta MERGE target with foreachBatch unchanged.
 `driver_merge="auto"` (the default) picks by the key's cardinality
-class; both paths are implemented and tested for equivalence
-(tests/test_streaming.py).
+class; all paths are implemented and tested for equivalence
+(tests/test_streaming.py, tests/test_changefeed_fold.py).
 """
 
 from __future__ import annotations
@@ -59,6 +64,11 @@ from .replay import (
 )
 
 _STATE_DEC = "decimal(28,6)"
+
+#: a keyed batch whose delta rows plus the state rows of the buckets it
+#: touches stay below this is folded on the driver (_fold_on_driver);
+#: larger batches run the executor-side MERGE
+_DRIVER_FOLD_ROWS = 100_000
 
 
 _PAYLOAD_DDL = (
@@ -229,9 +239,52 @@ class ChangefeedRunner:
             f"retained versions: {self.versions()}"
         )
 
+    # ---- the exact driver-side merge, shared by both driver paths ----
+    def _fold_delta(self, state: dict, delta_rows, batch_id: int):
+        """Fold one batch's delta rows into `state` ({key: (cnt,
+        Decimal sum)}, updated in place) with exact Decimal
+        arithmetic, and return the batch's changelog as a pyarrow
+        table: one {old,new} row per changed key, sums as
+        float(Decimal) — the executor path's double cast."""
+        import pyarrow as pa
+
+        changes = []
+        for r in sorted(delta_rows, key=lambda r: r[self.key]):
+            k = r[self.key]
+            old_c, old_s = state.get(k, (0, Decimal(0)))
+            d_sum = r["d_sum"] if r["d_sum"] is not None else 0
+            new_c, new_s = old_c + r["d_count"], old_s + d_sum
+            state[k] = (new_c, new_s)
+            changes.append((k, old_c, new_c, float(old_s), float(new_s)))
+        cols = list(zip(*changes)) or [()] * 5
+        return pa.table(
+            {
+                self.key: pa.array(cols[0], pa.type_for_alias(self._key_pa)),
+                "old_count": pa.array(cols[1], pa.int64()),
+                "new_count": pa.array(cols[2], pa.int64()),
+                "old_sum": pa.array(cols[3], pa.float64()),
+                "new_sum": pa.array(cols[4], pa.float64()),
+                "batch_id": pa.array([batch_id] * len(changes), pa.int64()),
+            }
+        )
+
+    def _state_table(self, items):
+        """State rows [(key, (cnt, Decimal sum))] as a pyarrow table
+        in the state DDL's types."""
+        import pyarrow as pa
+
+        return pa.table(
+            {
+                self.key: pa.array([k for k, _ in items], pa.type_for_alias(self._key_pa)),
+                "cnt": pa.array([c for _, (c, _) in items], pa.int64()),
+                "sum_value": pa.array(
+                    [s for _, (_, s) in items], pa.decimal128(28, 6)
+                ),
+            }
+        )
+
     # ---- driver-side merge (small key space) ----
     def _merge_batch_driver(self, delta_rows, batch_id: int) -> None:
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         if self._state is None:
@@ -248,40 +301,15 @@ class ChangefeedRunner:
         # self._state stays frozen until the atomic swap below, so a
         # concurrent state() call (live mode) never sees a half-
         # applied batch or a dict changing size mid-iteration
-        state, changes = dict(self._state), []
-        for r in sorted(delta_rows, key=lambda r: r[self.key]):
-            k = r[self.key]
-            old_c, old_s = state.get(k, (0, Decimal(0)))
-            new_c, new_s = old_c + r["d_count"], old_s + r["d_sum"]
-            state[k] = (new_c, new_s)
-            changes.append((k, old_c, new_c, float(old_s), float(new_s)))
-        if changes:
-            cols = list(zip(*changes))
-            log_tbl = pa.table(
-                {
-                    self.key: pa.array(cols[0], pa.type_for_alias(self._key_pa)),
-                    "old_count": pa.array(cols[1], pa.int64()),
-                    "new_count": pa.array(cols[2], pa.int64()),
-                    "old_sum": pa.array(cols[3], pa.float64()),
-                    "new_sum": pa.array(cols[4], pa.float64()),
-                    "batch_id": pa.array([batch_id] * len(changes), pa.int64()),
-                }
-            )
+        state = dict(self._state)
+        log_tbl = self._fold_delta(state, delta_rows, batch_id)
+        if log_tbl.num_rows:
             # fixed per-batch file name → a replayed batch overwrites
             # its own log rows instead of double-appending: idempotent
             dst = os.path.join(self.log_dir, f"batch-{batch_id:05d}.parquet")
             pq.write_table(log_tbl, dst + ".tmp")
             os.replace(dst + ".tmp", dst)
-        items = sorted(state.items())
-        state_tbl = pa.table(
-            {
-                self.key: pa.array([k for k, _ in items], pa.type_for_alias(self._key_pa)),
-                "cnt": pa.array([c for _, (c, _) in items], pa.int64()),
-                "sum_value": pa.array(
-                    [s for _, (_, s) in items], pa.decimal128(28, 6)
-                ),
-            }
-        )
+        state_tbl = self._state_table(sorted(state.items()))
         version = f"v{batch_id}.parquet"
         path = os.path.join(self.state_root, version)
         pq.write_table(state_tbl, path + ".tmp")
@@ -292,8 +320,70 @@ class ChangefeedRunner:
         # the previous committed snapshot or this one, never a mix
         self._state = state
 
+    # ---- driver-side fold of a small keyed batch (bucketed store) ----
+    def _fold_on_driver(self, delta: DataFrame, batch_id: int,
+                        base: int | None) -> bool:
+        """Commit a batch whose delta plus touched state is below
+        _DRIVER_FOLD_ROWS without the executor-side MERGE: ONE Spark
+        job collects the delta with its bucket, the touched buckets'
+        row counts come from parquet footers, and the merge, the
+        bucket rewrite and the changelog run on the driver into the
+        same store layout, through the same publish(). Returns False,
+        having written nothing, when the batch is not small enough."""
+        from .statefs import STATE_FS
+
+        store = self._store
+        # orderBy + limit plans as one top-k job; a bare limit would
+        # scan the delta's partitions in successive jobs
+        rows = (
+            delta.withColumn("__bucket", store.bucket_expr(F.col(self.key)))
+            .orderBy("__bucket", self.key)
+            .limit(_DRIVER_FOLD_ROWS)
+            .collect()
+        )
+        if len(rows) >= _DRIVER_FOLD_ROWS:
+            return False
+        # a NULL key never matches in the executor-side join; keep
+        # that path's semantics rather than merging NULLs here
+        if any(r[self.key] is None for r in rows):
+            return False
+        touched = sorted({r["__bucket"] for r in rows})
+        old = {}
+        if base is not None and touched:
+            held = store.bucket_counts(base, touched)
+            if len(rows) + sum(held.values()) >= _DRIVER_FOLD_ROWS:
+                return False
+            old = store.read_buckets(base, touched)
+        state, bucket_of = {}, {r[self.key]: r["__bucket"] for r in rows}
+        for b, t in old.items():
+            for k, c, s in zip(t.column(self.key).to_pylist(),
+                               t.column("cnt").to_pylist(),
+                               t.column("sum_value").to_pylist()):
+                state[k] = (c, s)
+                bucket_of[k] = b
+        log_tbl = self._fold_delta(state, rows, batch_id)
+        by_bucket: dict[int, list] = {b: [] for b in touched}
+        for k, v in sorted(state.items()):
+            by_bucket[bucket_of[k]].append((k, v))
+        # same commit order as the executor path: the log and the
+        # staged buckets are durable before publish() writes the
+        # manifest, and the pointer flips last
+        STATE_FS.put_small_parquet_dir(
+            log_tbl, os.path.join(self.log_dir, f"batch-{batch_id:05d}"))
+        store.stage_tables(batch_id, {
+            b: self._state_table(items) for b, items in by_bucket.items()})
+        store.publish(batch_id, base, touched)
+        self._flip_pointer(f"v{batch_id}")
+        self._state = None  # parquet is authoritative on this path
+        return True
+
     # ---- Spark-side merge (large key space; the 100 TB path) ----
     def _merge_batch_spark(self, delta: DataFrame, batch_id: int) -> None:
+        base = self._pointer_batch()
+        base_bucketed = base is not None and self._store.has_version(base)
+        if (base is None or base_bucketed) and self._fold_on_driver(
+                delta, batch_id, base):
+            return
         spark = self.spark
         delta = delta.persist()
         # the batch's delta names the buckets it can change; the old-
@@ -301,8 +391,6 @@ class ChangefeedRunner:
         # below rewrites only them — untouched state is never read,
         # rewritten, or copied (manifest carries it forward)
         touched = self._store.touched_buckets(delta, self.key)
-        base = self._pointer_batch()
-        base_bucketed = base is not None and self._store.has_version(base)
         if base is None:
             old = spark.createDataFrame([], self._STATE_DDL)
         elif base_bucketed:

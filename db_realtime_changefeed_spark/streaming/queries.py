@@ -877,10 +877,10 @@ def changefeed_keyed(spark, sf_dir):
     standing query — a changefeed is registered on a query, not
     baked into the engine. Exercises the runner at entity-level key
     cardinality (the shape of RethinkDB-style per-document feeds),
-    which auto-selects the EXECUTOR-SIDE merge: per batch, a keyed
-    full-outer join against the versioned parquet state — no
-    entity-cardinality collect() anywhere in the graded path. The
-    final state must equal the batch per-user aggregate."""
+    which auto-selects bucketed state: a batch whose delta plus touched
+    state is under 100,000 rows folds on the driver; above that the
+    EXECUTOR-SIDE keyed full-outer join runs, with no entity-sized
+    collect(). The final state must equal the batch per-user aggregate."""
     return _changefeed(spark, sf_dir, key="user_id").state()
 
 

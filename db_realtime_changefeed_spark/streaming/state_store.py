@@ -158,6 +158,22 @@ class BucketedMvccState:
             for k, v in man.items()
         }
 
+    def read_buckets(self, batch_id: int, buckets: list[int]) -> dict:
+        """Driver-side read of the `buckets` of version `batch_id`:
+        {bucket: pyarrow Table}, unpopulated buckets omitted. No
+        Spark job — for a driver fold whose touched buckets were
+        checked small with bucket_counts() first."""
+        from .statefs import STATE_FS
+
+        man = self.manifest(batch_id)
+        out = {}
+        for k in buckets:
+            if k in man:
+                t = STATE_FS.read_parquet_dir(self._bucket_dir(k, man[k]))
+                if t is not None:
+                    out[k] = t
+        return out
+
     def touched_buckets(self, delta_df: DataFrame,
                         key: str | None = None) -> list[int]:
         """Distinct buckets of the batch's keys — at most B small
@@ -200,6 +216,19 @@ class BucketedMvccState:
                 .mode("overwrite")
                 .parquet(tmp)
             )
+
+    def stage_tables(self, batch_id: int, tables: dict) -> None:
+        """Driver-side phase 1: write {bucket: pyarrow Table} into the
+        same private tmp layout stage() produces (one
+        `__bucket=<k>/` dir per bucket), so publish() is shared by
+        both paths."""
+        from .statefs import STATE_FS
+
+        tmp = os.path.join(self.root, f"tmp-v{batch_id}")
+        shutil.rmtree(tmp, ignore_errors=True)
+        for k, t in tables.items():
+            STATE_FS.put_small_parquet_dir(
+                t, os.path.join(tmp, f"__bucket={k}"))
 
     def publish(self, batch_id: int, base_batch: int | None,
                 touched: list[int]) -> None:

@@ -207,6 +207,54 @@ def test_rescale_gc_reclaims_untagged_dirs(rescaled):
         assert store.df_at(b).count() > 0
 
 
+@pytest.mark.parametrize("path", ["fold", "executor"])
+def test_keyed_lifecycle_on_both_merge_paths(spark, sf_smoke, monkeypatch,
+                                             path):
+    """Rescale, restart and compact on the per-user feed, once with
+    every batch below the driver-fold gate and once with the gate at 0
+    (the executor-side MERGE): the restarted runner adopts the new
+    bucket count, folds onto the rescaled buckets, and the final state
+    equals the batch aggregate on both paths. Replays on both paths
+    are tested in tests/test_changefeed_fold.py."""
+    from db_realtime_changefeed_spark.catalog import load_table
+    from db_realtime_changefeed_spark.streaming import changefeed
+    from db_realtime_changefeed_spark.streaming.changefeed import (
+        cdc_envelope,
+    )
+    from db_realtime_changefeed_spark.streaming.replay import (
+        streaming_shuffle,
+    )
+
+    if path == "executor":
+        monkeypatch.setattr(changefeed, "_DRIVER_FOLD_ROWS", 0)
+    ev = load_table(spark, sf_smoke, "events")
+    halves = [cdc_envelope(ev.where(F.col("event_id") % 2 == i))
+              for i in range(2)]
+    r1 = ChangefeedRunner(spark, sf_smoke, driver_merge=False,
+                          key="user_id", state_buckets=4)
+    with streaming_shuffle(spark, 2):
+        r1._merge_batch(halves[0], 0)
+        r1.rescale_state(8)
+        r2 = ChangefeedRunner(spark, sf_smoke, driver_merge=False,
+                              key="user_id", root=r1.root)
+        assert r2._store.n_buckets == 8
+        r2._merge_batch(halves[1], 1)
+    assert r2.compact(keep_last=1) == [0]
+    assert r2.versions() == [1]
+    want = {
+        (r["user_id"], r["cnt"], r["s"])
+        for r in ev.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(F.col("value").cast("decimal(28,6)"))
+            .cast("double").alias("s"),
+        ).collect()
+    }
+    assert set(map(tuple, r2.state().collect())) == want
+    last = {r["user_id"]: r["new_count"]
+            for r in r2.log().orderBy("batch_id").collect()}
+    assert last == {u: c for u, c, _ in want}
+
+
 def test_rescale_requires_bucketed_path(spark, sf_smoke):
     r = ChangefeedRunner(spark, sf_smoke, driver_merge=True)
     with pytest.raises(NotImplementedError):
