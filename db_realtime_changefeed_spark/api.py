@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .catalog import TABLE_NAMES, load_table
 from .streaming.changefeed import ChangefeedRunner
+from .streaming.replay import LIVE_TRIGGER
 
 
 class Cursor:
@@ -491,7 +492,7 @@ class TableRef:
     def changes(self, key: str | None = None,
                 driver_merge: bool | str = "auto",
                 mode: str = "replay",
-                processing_time: str = "500 milliseconds",
+                processing_time: str = LIVE_TRIGGER,
                 initial_scan: str = "yes",
                 envelope: str = "full",
                 diff: bool = False) -> Feed:
@@ -507,6 +508,12 @@ class TableRef:
         incrementally with Feed.cursor().poll(), stop with
         LiveFeed.stop() — the subscribe-and-keep-receiving behavior
         of RethinkDB changes() / CREATE CHANGEFEED.
+        `processing_time` defaults to replay.LIVE_TRIGGER (250 ms):
+        a batch that outlasts it starts the next at once, and a file
+        landing on an idle feed waits at most that long. Each poll
+        lists the live source dir: an idle feed used about 6% of one
+        core at 250 ms and at 500 ms, 13% at 100 ms and half a core
+        with a "0 seconds" trigger (4-core host, Python plus JVM).
 
         `initial_scan` (the CREATE CHANGEFEED option) controls what a
         NEW consumer sees of history (any feed table — r11):

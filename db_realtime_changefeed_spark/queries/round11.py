@@ -1390,7 +1390,7 @@ def changefeed_view_live_orders(spark, sf_dir):
         spark, sf_dir, table="orders", key="o_custkey",
         seq="o_orderkey", ts="o_orderdate",
         group="o_orderstatus", value="o_totalprice")
-    r.start_live(processing_time="250 milliseconds")
+    r.start_live()
     try:
         for f in sorted(_glob.glob(
                 _os.path.join(chunks, "chunk-*.parquet"))):

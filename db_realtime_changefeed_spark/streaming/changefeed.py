@@ -21,24 +21,27 @@ Semantics (docs/changefeed-semantics.md):
   committed source offsets instead of replaying every chunk onto the
   recovered state.
 
-Scale notes: the per-batch delta is always computed by Spark (a
-shuffle on the group key — that is the O(rows) work). What happens
-to the delta depends on the standing query's KEY CARDINALITY:
+Scale notes: where the per-batch delta is computed, and what happens
+to it, depends on the standing query's KEY CARDINALITY:
 - small key space (dashboards, per-category rollups — changefeed_core:
-  5 event types): the delta and the state are tiny, so the merge runs
-  driver-side against an in-memory dict and the state / changelog
-  versions are written directly (one small file per batch). Sums use
-  exact Decimal arithmetic so merge order can't drift.
+  5 event types): Spark computes the delta (a shuffle on the group
+  key — the O(rows) work); the delta and the state are tiny, so the
+  merge runs driver-side against an in-memory dict and the state /
+  changelog versions are written directly (one small file per
+  batch). Sums use exact Decimal arithmetic so merge order can't
+  drift.
 - large key space (per-user, per-document — changefeed_keyed): state
-  is the hash-bucketed MVCC store. A batch whose delta rows plus the
+  is the hash-bucketed MVCC store. A batch whose change rows plus the
   state rows of its touched buckets stay below _DRIVER_FOLD_ROWS is
-  folded on the driver: one Spark job collects the delta with its
-  bucket, the touched buckets are read, merged with the same exact
-  Decimal fold as above and rewritten through the store's own
-  stage layout and publish(). Above the gate the merge stays IN
-  SPARK as a keyed full-outer join and nothing key-cardinality-
-  sized crosses to the driver. At 100 TB the parquet state dir
-  becomes an Iceberg/Delta MERGE target with foreachBatch unchanged.
+  folded on the driver: one Spark job, with no shuffle, collects the
+  raw (key, value, bucket) rows as Arrow, the driver aggregates them
+  exactly, reads the touched buckets, merges with the same Decimal
+  fold as above and rewrites them through the store's own stage
+  layout and publish(). Above the gate Spark computes the delta and
+  the merge stays IN SPARK as a keyed full-outer join, and nothing
+  key-cardinality-sized crosses to the driver. At 100 TB the parquet
+  state dir becomes an Iceberg/Delta MERGE target with foreachBatch
+  unchanged.
 `driver_merge="auto"` (the default) picks by the key's cardinality
 class; all paths are implemented and tested for equivalence
 (tests/test_streaming.py, tests/test_changefeed_fold.py).
@@ -56,7 +59,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .replay import (
+    LIVE_TRIGGER,
     build_replay_chunks,
+    drop_live_file,
     fresh_sink_name,
     guard_not_phase_fed,
     read_events_stream,
@@ -65,9 +70,9 @@ from .replay import (
 
 _STATE_DEC = "decimal(28,6)"
 
-#: a keyed batch whose delta rows plus the state rows of the buckets it
-#: touches stay below this is folded on the driver (_fold_on_driver);
-#: larger batches run the executor-side MERGE
+#: a keyed batch whose change rows plus the state rows of the buckets
+#: it touches stay below this is folded on the driver
+#: (_fold_on_driver); larger batches run the executor-side MERGE
 _DRIVER_FOLD_ROWS = 100_000
 
 
@@ -321,40 +326,56 @@ class ChangefeedRunner:
         self._state = state
 
     # ---- driver-side fold of a small keyed batch (bucketed store) ----
-    def _fold_on_driver(self, delta: DataFrame, batch_id: int,
+    def _fold_on_driver(self, changes: DataFrame, batch_id: int,
                         base: int | None) -> bool:
-        """Commit a batch whose delta plus touched state is below
-        _DRIVER_FOLD_ROWS without the executor-side MERGE: ONE Spark
-        job collects the delta with its bucket, the touched buckets'
-        row counts come from parquet footers, and the merge, the
-        bucket rewrite and the changelog run on the driver into the
-        same store layout, through the same publish(). Returns False,
-        having written nothing, when the batch is not small enough."""
+        """Commit a batch whose change rows plus touched state stay
+        below _DRIVER_FOLD_ROWS without the executor-side MERGE: ONE
+        Spark job collects the batch's raw (key, value, bucket) rows
+        as Arrow, with no exchange, and the driver aggregates them;
+        the touched buckets' row counts come from parquet footers, and
+        the merge, the bucket rewrite and the changelog run on the
+        driver into the same store layout, through the same
+        publish(). Returns False, having written nothing, when the
+        batch is not small enough."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         from .statefs import STATE_FS
 
         store = self._store
-        # orderBy + limit plans as one top-k job; a bare limit would
-        # scan the delta's partitions in successive jobs
-        rows = (
-            delta.withColumn("__bucket", store.bucket_expr(F.col(self.key)))
-            .orderBy("__bucket", self.key)
+        # limit bounds what crosses to the driver; toArrow runs it as
+        # one job, a single stage when the batch is one partition
+        raw = (
+            changes.withColumn("__bucket", store.bucket_expr(F.col(self.key)))
             .limit(_DRIVER_FOLD_ROWS)
-            .collect()
+            .toArrow()
         )
-        if len(rows) >= _DRIVER_FOLD_ROWS:
+        if raw.num_rows >= _DRIVER_FOLD_ROWS:
             return False
         # a NULL key never matches in the executor-side join; keep
         # that path's semantics rather than merging NULLs here
-        if any(r[self.key] is None for r in rows):
+        if raw.column(self.key).null_count:
             return False
-        touched = sorted({r["__bucket"] for r in rows})
+        # the executor path's delta: count(1) and an exact decimal sum,
+        # NULL when every value of a key is NULL
+        raw = raw.set_column(
+            raw.schema.get_field_index("value"), "value",
+            pc.cast(raw.column("value"), pa.decimal128(38, 6)))
+        delta = raw.group_by([self.key, "__bucket"]).aggregate(
+            [([], "count_all"), ("value", "sum")])
+        keys = delta.column(self.key).to_pylist()
+        buckets = delta.column("__bucket").to_pylist()
+        touched = sorted(set(buckets))
         old = {}
         if base is not None and touched:
             held = store.bucket_counts(base, touched)
-            if len(rows) + sum(held.values()) >= _DRIVER_FOLD_ROWS:
+            if raw.num_rows + sum(held.values()) >= _DRIVER_FOLD_ROWS:
                 return False
             old = store.read_buckets(base, touched)
-        state, bucket_of = {}, {r[self.key]: r["__bucket"] for r in rows}
+        rows = [{self.key: k, "d_count": c, "d_sum": s} for k, c, s in zip(
+            keys, delta.column("count_all").to_pylist(),
+            delta.column("value_sum").to_pylist())]
+        state, bucket_of = {}, dict(zip(keys, buckets))
         for b, t in old.items():
             for k, c, s in zip(t.column(self.key).to_pylist(),
                                t.column("cnt").to_pylist(),
@@ -378,14 +399,14 @@ class ChangefeedRunner:
         return True
 
     # ---- Spark-side merge (large key space; the 100 TB path) ----
-    def _merge_batch_spark(self, delta: DataFrame, batch_id: int) -> None:
+    def _merge_batch_spark(self, changes: DataFrame, batch_id: int) -> None:
         base = self._pointer_batch()
         base_bucketed = base is not None and self._store.has_version(base)
         if (base is None or base_bucketed) and self._fold_on_driver(
-                delta, batch_id, base):
+                changes, batch_id, base):
             return
         spark = self.spark
-        delta = delta.persist()
+        delta = self._keyed_delta(changes).persist()
         # the batch's delta names the buckets it can change; the old-
         # state read is PRUNED to those bucket paths, and the commit
         # below rewrites only them — untouched state is never read,
@@ -451,26 +472,28 @@ class ChangefeedRunner:
             delta.unpersist()
 
     # ---- the standing query ----
+    def _keyed_delta(self, changes: DataFrame) -> DataFrame:
+        """The batch's keyed partial aggregate: count and exact sum of
+        the (key, decimal value) change rows per key."""
+        return changes.groupBy(self.key).agg(
+            F.count(F.lit(1)).alias("d_count"),
+            F.sum("value").cast(_STATE_DEC).alias("d_sum"),
+        )
+
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self._last_batch is not None and batch_id <= self._last_batch:
             self._rewind_before(batch_id)
         payload = batch_df.select("after.*")
         if self.filter_sql is not None:
             payload = payload.where(self.filter_sql)
-        delta = (
-            payload.select(self.key, "value")
-            .groupBy(self.key)
-            .agg(
-                F.count(F.lit(1)).alias("d_count"),
-                F.sum(F.col("value").cast(_STATE_DEC)).cast(_STATE_DEC)
-                .alias("d_sum"),
-            )
-        )
+        changes = payload.select(
+            self.key, F.col("value").cast(_STATE_DEC).alias("value"))
         if self.driver_merge:
             # ONE Spark job per batch: the keyed partial aggregate.
-            self._merge_batch_driver(delta.collect(), batch_id)
+            self._merge_batch_driver(
+                self._keyed_delta(changes).collect(), batch_id)
         else:
-            self._merge_batch_spark(delta, batch_id)
+            self._merge_batch_spark(changes, batch_id)
         self._last_batch = batch_id
         self._push(batch_id)
 
@@ -583,7 +606,7 @@ class ChangefeedRunner:
             q.awaitTermination()
 
     def start_live(self, source_dir: str | None = None,
-                   processing_time: str = "500 milliseconds"):
+                   processing_time: str = LIVE_TRIGGER):
         """Continuous subscription mode — the namesake behavior a
         replay-and-terminate run() lacks: the standing query keeps
         running with a ProcessingTime trigger over a LIVE source
@@ -611,14 +634,7 @@ class ChangefeedRunner:
         """Drop one change file into the live source dir (producer
         side of the feed). File names are sequenced so the file
         source processes them in ingest order."""
-        import time as _time
-
-        n = len([f for f in os.listdir(self.source_dir)
-                 if f.endswith(".parquet")])
-        dst = os.path.join(self.source_dir, f"live-{n:06d}.parquet")
-        shutil.copyfile(parquet_file, dst + ".tmp")
-        os.replace(dst + ".tmp", dst)
-        os.utime(dst, (_time.time(), 1_800_000_000.0 + n))
+        drop_live_file(self.source_dir, parquet_file)
 
     def stop_live(self) -> None:
         q = getattr(self, "_live_query", None)

@@ -19,7 +19,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import load_table, table_path
 from ..queries import query
 from ..tmputil import scratch_dir
-from .replay import default_chunks, fresh_sink_name, streaming_shuffle
+from .replay import (
+    LIVE_TRIGGER,
+    default_chunks,
+    drop_live_file,
+    fresh_sink_name,
+    streaming_shuffle,
+)
 from .state_store import BucketedMvccState
 
 _DEC = "decimal(18,6)"
@@ -579,7 +585,7 @@ class GenericAggViewRunner:
     # ---- continuous maintenance (r11: the events runner's live
     # ---- mode, mirrored so ANY table's standing views run live)
 
-    def start_live(self, processing_time: str = "500 milliseconds"):
+    def start_live(self, processing_time: str = LIVE_TRIGGER):
         """Continuous maintenance: the same per-batch merge+fold
         runs under a ProcessingTime trigger over a LIVE source dir
         (the table's own schema); every view keeps updating as
@@ -606,15 +612,7 @@ class GenericAggViewRunner:
         return self.source_dir
 
     def ingest(self, parquet_file: str) -> None:
-        import shutil as _shutil
-        import time as _time
-
-        n = len([f for f in os.listdir(self.source_dir)
-                 if f.endswith(".parquet")])
-        dst = os.path.join(self.source_dir, f"live-{n:06d}.parquet")
-        _shutil.copyfile(parquet_file, dst + ".tmp")
-        os.replace(dst + ".tmp", dst)
-        os.utime(dst, (_time.time(), 1_800_000_000.0 + n))
+        drop_live_file(self.source_dir, parquet_file)
 
     def stop_live(self) -> None:
         q = getattr(self, "_live_query", None)

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from .replay import _chunk_dir, _write_chunk, default_chunks
+from .replay import LIVE_TRIGGER, drop_live_file
 from .replay import fresh_sink_name, streaming_shuffle
 
 _STATE_DEC = "decimal(28,6)"
@@ -723,14 +724,13 @@ class MultiTableChangefeedRunner:
             q.awaitTermination()
 
     # ---- continuous subscription mode (live feeds on any table) ----
-    def start_live(self, processing_time: str = "500 milliseconds"):
+    def start_live(self, processing_time: str = LIVE_TRIGGER):
         """Keep the standing query RUNNING over per-table live source
         dirs (ProcessingTime trigger): producers push change files
         with ingest(tbl, file), consumers poll state(); stop with
         stop_live(). Same merge/MVCC path as run() — mode only
         changes the trigger and the source dirs."""
         self.live_root = os.path.join(self.root, "live-src")
-        self._live_seq: dict[str, int] = {}
         dirs = []
         for tbl in self.tables:
             d = os.path.join(self.live_root, tbl)
@@ -752,8 +752,6 @@ class MultiTableChangefeedRunner:
         """Producer side of a live feed: normalize one change file
         (the TABLE's own schema) to the envelope and drop it into the
         table's live source dir, sequenced for in-order pickup."""
-        import time as _time
-
         from ..catalog import (
             EVENTS_NS_SCHEMA,
             SCHEMAS,
@@ -772,14 +770,7 @@ class MultiTableChangefeedRunner:
                       with_after=self.with_after,
                       after_cols=self._after_cols.get(tbl),
                       with_value=not self.key_only).toArrow()
-        import pyarrow.parquet as pq
-
-        n = self._live_seq.get(tbl, 0)
-        dst = os.path.join(self.live_root, tbl, f"live-{n:06d}.parquet")
-        pq.write_table(t, dst + ".tmp")
-        os.replace(dst + ".tmp", dst)
-        os.utime(dst, (_time.time(), 1_800_000_000.0 + n))
-        self._live_seq[tbl] = n + 1
+        drop_live_file(os.path.join(self.live_root, tbl), t)
 
     def stop_live(self) -> None:
         q = getattr(self, "_live_query", None)

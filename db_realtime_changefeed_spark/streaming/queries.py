@@ -877,9 +877,9 @@ def changefeed_keyed(spark, sf_dir):
     standing query — a changefeed is registered on a query, not
     baked into the engine. Exercises the runner at entity-level key
     cardinality (the shape of RethinkDB-style per-document feeds),
-    which auto-selects bucketed state: a batch whose delta plus touched
-    state is under 100,000 rows folds on the driver; above that the
-    EXECUTOR-SIDE keyed full-outer join runs, with no entity-sized
+    which auto-selects bucketed state: a batch whose change rows plus
+    touched state stay under 100,000 rows folds on the driver; above
+    the gate the EXECUTOR-SIDE full-outer join runs, with no entity-sized
     collect(). The final state must equal the batch per-user aggregate."""
     return _changefeed(spark, sf_dir, key="user_id").state()
 
@@ -1058,7 +1058,7 @@ def changefeed_live(spark, sf_dir):
     key = (id(spark), sf_dir, "__live__")
     if key not in _CF_CACHE:
         runner = ChangefeedRunner(spark, sf_dir)
-        runner.start_live(processing_time="250 milliseconds")
+        runner.start_live()
         chunks = build_replay_chunks(spark, sf_dir)
         files = sorted(glob.glob(os.path.join(chunks, "chunk-*.parquet")))
         total = load_table(spark, sf_dir, "events").count()

@@ -140,6 +140,37 @@ def _write_chunk(tbl, out: str, idx: int) -> None:
     os.utime(dst, (time.time(), 1_700_000_000.0 + idx))
 
 
+#: ProcessingTime trigger of every live (start_live) query. A live
+#: batch that runs longer than this starts the next one as soon as it
+#: ends, so a producer that keeps up never waits on the trigger; an
+#: idle feed lists its source dir this often, so a shorter interval
+#: costs idle CPU (docs/changefeed-semantics.md, "Continuous
+#: delivery").
+LIVE_TRIGGER = "250 milliseconds"
+
+
+def drop_live_file(source_dir: str, src) -> None:
+    """Producer side of a live file-stream source: put one change file
+    (`src`, a parquet path to copy or a pyarrow table to write) into
+    `source_dir` as `live-<seq>.parquet`, where seq counts the files
+    already there, so names and mtimes sort in ingest order, also
+    across a restart over the same dir. The file is written under a
+    dot-prefixed temp name, which Spark's file listing skips, and
+    renamed into place, so a poll never reads a half-written file."""
+    import pyarrow.parquet as pq
+
+    seq = sum(f.endswith(".parquet") for f in os.listdir(source_dir))
+    name = f"live-{seq:06d}.parquet"
+    tmp = os.path.join(source_dir, f".{name}.tmp")
+    if isinstance(src, str):
+        shutil.copyfile(src, tmp)
+    else:
+        pq.write_table(src, tmp)
+    dst = os.path.join(source_dir, name)
+    os.replace(tmp, dst)
+    os.utime(dst, (time.time(), 1_800_000_000.0 + seq))
+
+
 def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:

@@ -453,7 +453,7 @@ def changefeed_view_live(spark, sf_dir):
     key = (id(spark), sf_dir, "__view_live__")
     if key not in _CACHE:
         live = MaintainedViewsRunner(spark, sf_dir)
-        live.start_live(processing_time="250 milliseconds")
+        live.start_live()
         chunks = build_replay_chunks(spark, sf_dir)
         files = sorted(
             glob.glob(os.path.join(chunks, "chunk-*.parquet")))

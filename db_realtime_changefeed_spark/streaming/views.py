@@ -46,7 +46,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..tmputil import scratch_dir
 from .changefeed import cdc_envelope
 from .replay import (
+    LIVE_TRIGGER,
     build_replay_chunks,
+    drop_live_file,
     fresh_sink_name,
     read_events_stream,
     streaming_shuffle,
@@ -915,7 +917,7 @@ class MaintainedViewsRunner:
             q.awaitTermination()
 
     def start_live(self, source_dir: str | None = None,
-                   processing_time: str = "500 milliseconds"):
+                   processing_time: str = LIVE_TRIGGER):
         """Continuous maintenance mode: the same per-batch merge+fold
         runs under a ProcessingTime trigger over a LIVE source dir —
         every view (agg, support, range index, top-k log) keeps
@@ -938,15 +940,7 @@ class MaintainedViewsRunner:
         return self.source_dir
 
     def ingest(self, parquet_file: str) -> None:
-        import shutil as _shutil
-        import time as _time
-
-        n = len([f for f in os.listdir(self.source_dir)
-                 if f.endswith(".parquet")])
-        dst = os.path.join(self.source_dir, f"live-{n:06d}.parquet")
-        _shutil.copyfile(parquet_file, dst + ".tmp")
-        os.replace(dst + ".tmp", dst)
-        os.utime(dst, (_time.time(), 1_800_000_000.0 + n))
+        drop_live_file(self.source_dir, parquet_file)
 
     def stop_live(self) -> None:
         q = getattr(self, "_live_query", None)

@@ -9,6 +9,7 @@ each test stays cheap at sf_smoke."""
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -101,8 +102,10 @@ def test_fold_gate_crossing(spark, sf_smoke, monkeypatch, crossing):
     executor committed leaves one copy of its log rows and the same
     state."""
     batches, ref_states, ref_log = crossing
-    # one key stays below 8; the other users' keys alone exceed it
-    monkeypatch.setattr(changefeed, "_DRIVER_FOLD_ROWS", 8)
+    # the gate counts raw change rows: one user's events (60 at
+    # sf_smoke) stay below it, the other users' events alone exceed it
+    monkeypatch.setattr(changefeed, "_DRIVER_FOLD_ROWS",
+                        batches[0].count() + 1)
     r, staged = _keyed_runner(spark, sf_smoke)
     _feed(r, batches)
     assert staged == [1], "the batches must take different paths"
@@ -136,3 +139,60 @@ def test_keyed_replay_idempotent(spark, sf_smoke, monkeypatch, path):
     assert _log_rows(r) == l1
     assert [t for t in l1 if t[-1] < 1] == [t for t in log0 if t[-1] < 1]
     assert staged == ([] if path == "fold" else [1, 1])
+
+
+def test_fold_null_values(spark, sf_smoke, monkeypatch):
+    """Change rows with a NULL value count but add nothing to the sum,
+    also for a key whose values are all NULL: the fold gives the same
+    state at every version and the same log rows as the executor-side
+    MERGE."""
+    ev = load_table(spark, sf_smoke, "events")
+    user = ev.agg(F.min("user_id")).collect()[0][0]
+    nulled = ev.withColumn("value", F.when(
+        (F.col("user_id") == user) | (F.col("event_id") % 3 == 0),
+        F.lit(None).cast("double")).otherwise(F.col("value")))
+    batches = [nulled.where(F.col("event_id") % 2 == i) for i in range(2)]
+    fold, staged = _keyed_runner(spark, sf_smoke)
+    _feed(fold, batches)
+    assert staged == []
+    monkeypatch.setattr(changefeed, "_DRIVER_FOLD_ROWS", 0)
+    ref, staged = _keyed_runner(spark, sf_smoke)
+    _feed(ref, batches)
+    assert staged == [0, 1]
+    assert _states(fold) == _states(ref)
+    assert _log_rows(fold) == _log_rows(ref)
+    n_user = ev.where(F.col("user_id") == user).count()
+    assert (user, n_user, 0.0) in _states(fold)[1]
+
+
+def _jobs_of(spark, group: str, action) -> list[list[int]]:
+    """The stage ids of every Spark job `action` runs, job by job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status store fills from the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return [list(tracker.getJobInfo(j).stageIds)
+            for j in sorted(tracker.getJobIdsForGroup(group))]
+
+
+def test_fold_of_one_file_runs_one_single_stage_job(spark, sf_smoke,
+                                                    tmp_path):
+    """A batch read from one change file folds with one Spark job of
+    one stage: the raw rows are collected without an exchange, on the
+    first batch and on a batch that rewrites existing buckets."""
+    ev = load_table(spark, sf_smoke, "events")
+    r, staged = _keyed_runner(spark, sf_smoke)
+    for b in range(2):
+        path = str(tmp_path / f"change-{b}.parquet")
+        pq.write_table(
+            ev.where(F.col("event_id") % 2 == b).toArrow(), path)
+        batch = cdc_envelope(spark.read.parquet(path))
+        jobs = _jobs_of(spark, f"fold-one-file-{b}",
+                        lambda: r._merge_batch(batch, b))
+        assert len(jobs) == 1 and len(jobs[0]) == 1, jobs
+    assert staged == []

@@ -501,6 +501,47 @@ def test_live_feed_restart_resumes(spark, sf_smoke):
     assert n2 == expected, f"resumed feed double- or under-counted: {n2}"
 
 
+def test_live_ingest_temp_file_invisible_to_spark(spark, sf_smoke,
+                                                  tmp_path, monkeypatch):
+    """A change file being written into a live source dir is never in
+    Spark's listing of that dir: at the moment each write ends (a
+    runner's ingest() copy and a written table alike), the temp file
+    exists but spark.read.parquet(dir).inputFiles() lists only the
+    finished live-*.parquet files."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from db_realtime_changefeed_spark.streaming import replay
+
+    events = os.path.join(sf_smoke, "events.parquet")
+    src = tmp_path / "live"
+    src.mkdir()
+    runner = ChangefeedRunner(spark, sf_smoke, key="user_id")
+    runner.source_dir = str(src)
+    runner.ingest(events)  # a first file gives the dir a schema
+    checked = []
+
+    def listed_after(write):
+        def wrapped(data, tmp, *args, **kwargs):
+            write(data, tmp, *args, **kwargs)
+            assert os.path.exists(tmp)
+            names = [os.path.basename(f)
+                     for f in spark.read.parquet(str(src)).inputFiles()]
+            assert not [n for n in names if n.endswith(".tmp")], names
+            checked.append(sorted(names))
+        return wrapped
+
+    monkeypatch.setattr(shutil, "copyfile", listed_after(shutil.copyfile))
+    monkeypatch.setattr(pq, "write_table", listed_after(pq.write_table))
+    runner.ingest(events)
+    replay.drop_live_file(str(src), pq.read_table(events))
+    assert checked == [["live-000000.parquet"],
+                       ["live-000000.parquet", "live-000001.parquet"]]
+    assert sorted(os.listdir(src)) == [
+        f"live-{n:06d}.parquet" for n in range(3)]
+
+
 def test_multitable_resolved_snapshot_consistency(spark, sf_smoke):
     """Multi-TABLE feed: at every committed batch, each table's
     state slice holds exactly that table's rows with ts <= its
