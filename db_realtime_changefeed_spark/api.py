@@ -508,11 +508,13 @@ class TableRef:
         incrementally with Feed.cursor().poll(), stop with
         LiveFeed.stop() — the subscribe-and-keep-receiving behavior
         of RethinkDB changes() / CREATE CHANGEFEED.
-        `processing_time` defaults to replay.LIVE_TRIGGER (250 ms):
-        a batch that outlasts it starts the next at once, and a file
+        `processing_time` defaults to replay.LIVE_TRIGGER (400 ms),
+        above a live batch's cost even on a loaded host, so a producer
+        that keeps up gets one batch per tick at a steady latency; a
+        batch that outlasts it starts the next at once, and a file
         landing on an idle feed waits at most that long. Each poll
-        lists the live source dir: an idle feed used about 6% of one
-        core at 250 ms and at 500 ms, 13% at 100 ms and half a core
+        lists the live source dir: an idle feed used about 5% of one
+        core at 400 ms and at 500 ms, 13% at 100 ms and half a core
         with a "0 seconds" trigger (4-core host, Python plus JVM).
 
         `initial_scan` (the CREATE CHANGEFEED option) controls what a

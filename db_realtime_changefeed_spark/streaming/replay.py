@@ -140,13 +140,15 @@ def _write_chunk(tbl, out: str, idx: int) -> None:
     os.utime(dst, (time.time(), 1_700_000_000.0 + idx))
 
 
-#: ProcessingTime trigger of every live (start_live) query. A live
-#: batch that runs longer than this starts the next one as soon as it
-#: ends, so a producer that keeps up never waits on the trigger; an
-#: idle feed lists its source dir this often, so a shorter interval
-#: costs idle CPU (docs/changefeed-semantics.md, "Continuous
+#: ProcessingTime trigger of every live (start_live) query. It sits
+#: above a live per-user batch's cost (about 0.2 s on an idle 4-core
+#: host, up to about 0.43 s with three of its cores busy), so a
+#: producer that keeps up gets one batch per tick and the same latency
+#: on a quiet host and a loaded one; a batch that runs longer starts
+#: the next one as soon as it ends. An idle feed lists its source dir
+#: once per tick (docs/changefeed-semantics.md, "Continuous
 #: delivery").
-LIVE_TRIGGER = "250 milliseconds"
+LIVE_TRIGGER = "400 milliseconds"
 
 
 def drop_live_file(source_dir: str, src) -> None:
@@ -166,9 +168,11 @@ def drop_live_file(source_dir: str, src) -> None:
         shutil.copyfile(src, tmp)
     else:
         pq.write_table(src, tmp)
-    dst = os.path.join(source_dir, name)
-    os.replace(tmp, dst)
-    os.utime(dst, (time.time(), 1_800_000_000.0 + seq))
+    # the mtime is set before the rename: a poll that listed the file
+    # with its write time would take it as older than the files seen
+    # so far and skip it for good
+    os.utime(tmp, (time.time(), 1_800_000_000.0 + seq))
+    os.replace(tmp, os.path.join(source_dir, name))
 
 
 def read_events_stream(

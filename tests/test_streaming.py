@@ -542,6 +542,31 @@ def test_live_ingest_temp_file_invisible_to_spark(spark, sf_smoke,
         f"live-{n:06d}.parquet" for n in range(3)]
 
 
+def test_live_ingest_file_lands_with_its_sequence_mtime(tmp_path,
+                                                        monkeypatch):
+    """A live change file carries its sequence mtime before it shows
+    up under its final name: Spark's file source skips, for good, a
+    file it lists with an mtime older than the files it has already
+    seen, so a poll between the rename and a later utime would lose
+    the file."""
+    import pyarrow as pa
+
+    from db_realtime_changefeed_spark.streaming import replay
+
+    renamed = []
+    real_replace = os.replace
+
+    def replace(src, dst):
+        renamed.append((os.path.basename(dst), os.stat(src).st_mtime))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    for _ in range(2):
+        replay.drop_live_file(str(tmp_path), pa.table({"x": [1]}))
+    assert renamed == [("live-000000.parquet", 1_800_000_000.0),
+                       ("live-000001.parquet", 1_800_000_001.0)]
+
+
 def test_multitable_resolved_snapshot_consistency(spark, sf_smoke):
     """Multi-TABLE feed: at every committed batch, each table's
     state slice holds exactly that table's rows with ts <= its
