@@ -490,7 +490,6 @@ class TableRef:
         return StandingViews(_CACHE[key])
 
     def changes(self, key: str | None = None,
-                driver_merge: bool | str = "auto",
                 mode: str = "replay",
                 processing_time: str = LIVE_TRIGGER,
                 initial_scan: str = "yes",
@@ -499,7 +498,11 @@ class TableRef:
         """Register a standing keyed count+sum over this table's CDC
         stream (only `events` replays in this fixture set). Filters
         apply to the change payload, so rows that never match never
-        touch state.
+        touch state. For any key, state is the bucketed MVCC store,
+        and each batch merges by one size gate: on the driver when
+        its change rows, and its keyed delta plus the state of the
+        buckets it touches, are few, executor-side otherwise
+        (docs/changefeed-semantics.md, "Merge execution").
 
         `mode="replay"` (default) runs the feed to completion over
         the available changes and returns. `mode="live"` keeps the
@@ -632,7 +635,6 @@ class TableRef:
         runner = ChangefeedRunner(
             self._db.spark,
             self._db.sf_dir,
-            driver_merge=driver_merge,
             key=key,
             filter_sql=filter_sql,
         )

@@ -21,37 +21,25 @@ Semantics (docs/changefeed-semantics.md):
   committed source offsets instead of replaying every chunk onto the
   recovered state.
 
-Scale notes: where the per-batch delta is computed, and what happens
-to it, depends on the standing query's KEY CARDINALITY:
-- small key space (dashboards, per-category rollups — changefeed_core:
-  5 event types): Spark computes the delta (a shuffle on the group
-  key — the O(rows) work); the delta and the state are tiny, so the
-  merge runs driver-side against an in-memory dict and the state /
-  changelog versions are written directly (one small file per
-  batch). Sums use exact Decimal arithmetic so merge order can't
-  drift.
-- large key space (per-user, per-document — changefeed_keyed): state
-  is the hash-bucketed MVCC store. A batch whose change rows plus the
-  state rows of its touched buckets stay below _DRIVER_FOLD_ROWS is
-  folded on the driver: one Spark job, with no shuffle, collects the
-  raw (key, value, bucket) rows as Arrow, the driver aggregates them
-  exactly, reads the touched buckets, merges with the same Decimal
-  fold as above and rewrites them through the store's own stage
-  layout and publish(). Above the gate Spark computes the delta and
-  the merge stays IN SPARK as a keyed full-outer join, and nothing
-  key-cardinality-sized crosses to the driver. At 100 TB the parquet
-  state dir becomes an Iceberg/Delta MERGE target with foreachBatch
-  unchanged.
-`driver_merge="auto"` (the default) picks by the key's cardinality
-class; all paths are implemented and tested for equivalence
+Scale notes: for every key (a 5-value event_type rollup or a per-user
+feed alike) state is the hash-bucketed MVCC store (state_store.py),
+and one gate picks where a batch merges. A batch whose change rows,
+and whose keyed delta plus the state rows of its touched buckets,
+stay below _DRIVER_FOLD_ROWS is folded on the driver: one Spark job
+collects the batch's raw (key, value, bucket) rows as Arrow with no
+shuffle, the driver aggregates and merges them with exact Decimal
+arithmetic and rewrites the touched buckets through the store's own
+stage layout and publish(). Above the gate Spark computes the delta
+and the merge stays IN SPARK as a keyed full-outer join, and nothing
+key-cardinality-sized crosses to the driver. At 100 TB the parquet
+state dir becomes an Iceberg/Delta MERGE target with foreachBatch
+unchanged. Both sides of the gate are tested for equivalence
 (tests/test_streaming.py, tests/test_changefeed_fold.py).
 """
 
 from __future__ import annotations
 
 import os
-import re
-import shutil
 from ..tmputil import scratch_dir
 from decimal import Decimal
 
@@ -67,12 +55,13 @@ from .replay import (
     read_events_stream,
     streaming_shuffle,
 )
+from .state_store import BucketedMvccState, VersionPointer
 
 _STATE_DEC = "decimal(28,6)"
 
-#: a keyed batch whose change rows plus the state rows of the buckets
-#: it touches stay below this is folded on the driver
-#: (_fold_on_driver); larger batches run the executor-side MERGE
+#: a batch whose change rows, and whose keyed delta plus the state
+#: rows of the buckets it touches, stay below this is folded on the
+#: driver (_fold_on_driver); larger batches run the executor-side MERGE
 _DRIVER_FOLD_ROWS = 100_000
 
 
@@ -96,11 +85,10 @@ def cdc_envelope(events: DataFrame) -> DataFrame:
     )
 
 
-#: grouping keys the CDC payload supports →
-#: (Spark DDL, pyarrow type, cardinality class for merge-path auto-select)
+#: grouping keys the CDC payload supports → (Spark DDL, pyarrow type)
 _KEY_TYPES = {
-    "event_type": ("string", "string", "small"),
-    "user_id": ("long", "int64", "large"),
+    "event_type": ("string", "string"),
+    "user_id": ("long", "int64"),
 }
 
 
@@ -120,17 +108,14 @@ class ChangefeedRunner:
     (user_id) alike."""
 
     def __init__(self, spark: SparkSession, sf_dir: str,
-                 driver_merge: bool | str = "auto", key: str = "event_type",
+                 key: str = "event_type",
                  root: str | None = None, filter_sql: str | None = None,
                  state_buckets: int | None = None):
-        """`driver_merge`: "auto" picks the merge path by key
-        cardinality class (small → driver dict, large → Spark join);
-        pass True/False to force a path (tests do, for equivalence).
-        `root`: pass a previous runner's root to RESTART from its
-        durable state — the pointer file names the current version,
-        the warm cache rebuilds from parquet, and the checkpoint
-        under root resumes from committed offsets (crash-recovery
-        semantics; tested in tests/test_streaming.py).
+        """`root`: pass a previous runner's root to RESTART from its
+        durable state — the pointer file names the current version
+        and the checkpoint under root resumes from committed offsets
+        (crash-recovery semantics; tested in tests/test_streaming.py).
+        A root whose pointer is not a bucketed-store version raises.
         `filter_sql`: SQL predicate over the CDC payload columns
         (e.g. "event_type = 'purchase'") — the standing query
         becomes a FILTERED aggregate; the predicate runs before the
@@ -139,10 +124,7 @@ class ChangefeedRunner:
         self.sf_dir = sf_dir
         self.key = key
         self.filter_sql = filter_sql
-        self._key_ddl, self._key_pa, card = _KEY_TYPES[key]
-        if driver_merge == "auto":
-            driver_merge = card == "small"
-        self.driver_merge = driver_merge
+        self._key_ddl, self._key_pa = _KEY_TYPES[key]
         self._STATE_DDL = (
             f"{key} {self._key_ddl}, cnt long, sum_value decimal(28,6)"
         )
@@ -153,25 +135,18 @@ class ChangefeedRunner:
         self.root = root or scratch_dir(prefix="dbrcf-changefeed-")
         self.log_dir = os.path.join(self.root, "changelog")
         self.state_root = os.path.join(self.root, "state")
-        self.pointer = os.path.join(self.root, "CURRENT")
         self.ckpt = os.path.join(self.root, "checkpoint")
         os.makedirs(self.state_root, exist_ok=True)
         os.makedirs(self.log_dir, exist_ok=True)
-        # Spark-merge path state layout: hash-bucketed MVCC store so a
-        # micro-batch rewrites only the buckets its delta touches
-        # (state_store.py) — the partial-rewrite design 100 TB needs
-        from .state_store import BucketedMvccState
-
+        # hash-bucketed MVCC store so a micro-batch rewrites only the
+        # buckets its delta touches (state_store.py) — the
+        # partial-rewrite design 100 TB needs
         self._store = BucketedMvccState(
             self.spark, self.state_root, self._STATE_DDL, self.key,
             n_buckets=state_buckets,
         )
-        # warm cache of current state {key: (cnt, sum)} — group-key
-        # cardinality sized, driver-merge path only. Parquet remains
-        # the source of truth; a restarted runner re-reads via the
-        # pointer.
-        self._state: dict[str, tuple[int, Decimal]] | None = None
-        self._last_batch = self._pointer_batch()
+        self._ptr = VersionPointer(self.root, self._store)
+        self._last_batch = self._ptr.batch()
         # push-delivery subscribers (streaming/push.py); the lock
         # serializes live pushes against subscription catch-up so
         # every subscriber sees batch ids strictly increasing
@@ -180,71 +155,11 @@ class ChangefeedRunner:
         self._subscribers: list = []
         self._sub_lock = threading.Lock()
 
-    # ---- state versioning (MVCC pointer flip) ----
-    def _pointer_batch(self) -> int | None:
-        if not os.path.exists(self.pointer):
-            return None
-        with open(self.pointer) as f:
-            v = f.read().strip()
-        m = re.fullmatch(r"v(\d+)(?:\.parquet)?", v)
-        return int(m.group(1)) if m else None
-
     def _current_state_df(self) -> DataFrame | None:
-        # grab ONE reference: the merge thread never mutates a
-        # published dict (it builds a fresh one and swaps the
-        # reference after the pointer flip), so whichever dict we see
-        # is a complete committed snapshot — no torn mid-batch reads
-        # even while start_live()'s foreachBatch thread is merging
-        state = self._state
-        if state is not None:
-            rows = [(k, c, s) for k, (c, s) in sorted(state.items())]
-            return self.spark.createDataFrame(rows, self._STATE_DDL)
-        b = self._pointer_batch()
-        if b is None:
-            return None
-        if self._store.has_version(b):
-            return self._store.df_at(b)
-        with open(self.pointer) as f:
-            v = f.read().strip()
-        return self.spark.read.parquet(os.path.join(self.state_root, v))
+        b = self._ptr.batch()
+        return None if b is None else self._store.df_at(b)
 
-    def _flip_pointer(self, version: str) -> None:
-        tmp = self.pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, self.pointer)
-
-    def _rewind_before(self, batch_id: int) -> None:
-        """At-least-once replay support: a re-delivered batch must
-        merge onto the state AS OF the preceding batch, not onto its
-        own result. MVCC versions are retained, so rewinding is a
-        pointer flip (or pointer removal back to the empty state).
-
-        Replaying past the retention horizon FAILS LOUDLY (the
-        compact() contract): batch ids are consecutive, so batch b>0
-        must rebase onto version b-1 exactly — silently merging onto
-        an older surviving version (or the empty state) would corrupt
-        counts/sums without any error."""
-        self._state = None
-        if batch_id == 0:
-            if os.path.exists(self.pointer):
-                os.remove(self.pointer)
-            return
-        b = batch_id - 1
-        if self._store.has_version(b):
-            self._flip_pointer(f"v{b}")
-            return
-        for name in (f"v{b}", f"v{b}.parquet"):
-            if os.path.exists(os.path.join(self.state_root, name)):
-                self._flip_pointer(name)
-                return
-        raise RuntimeError(
-            f"cannot rewind to version v{b} for replayed batch "
-            f"{batch_id}: it was garbage-collected by compact(); "
-            f"retained versions: {self.versions()}"
-        )
-
-    # ---- the exact driver-side merge, shared by both driver paths ----
+    # ---- the exact driver-side merge ----
     def _fold_delta(self, state: dict, delta_rows, batch_id: int):
         """Fold one batch's delta rows into `state` ({key: (cnt,
         Decimal sum)}, updated in place) with exact Decimal
@@ -288,53 +203,16 @@ class ChangefeedRunner:
             }
         )
 
-    # ---- driver-side merge (small key space) ----
-    def _merge_batch_driver(self, delta_rows, batch_id: int) -> None:
-        import pyarrow.parquet as pq
-
-        if self._state is None:
-            prev = self._current_state_df()
-            self._state = (
-                {}
-                if prev is None
-                else {
-                    r[self.key]: (r["cnt"], r["sum_value"])
-                    for r in prev.collect()
-                }
-            )
-        # copy-on-write: mutate a PRIVATE dict; the published
-        # self._state stays frozen until the atomic swap below, so a
-        # concurrent state() call (live mode) never sees a half-
-        # applied batch or a dict changing size mid-iteration
-        state = dict(self._state)
-        log_tbl = self._fold_delta(state, delta_rows, batch_id)
-        if log_tbl.num_rows:
-            # fixed per-batch file name → a replayed batch overwrites
-            # its own log rows instead of double-appending: idempotent
-            dst = os.path.join(self.log_dir, f"batch-{batch_id:05d}.parquet")
-            pq.write_table(log_tbl, dst + ".tmp")
-            os.replace(dst + ".tmp", dst)
-        state_tbl = self._state_table(sorted(state.items()))
-        version = f"v{batch_id}.parquet"
-        path = os.path.join(self.state_root, version)
-        pq.write_table(state_tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-        self._flip_pointer(version)
-        # publish the new warm cache only after the durable pointer
-        # flip — reference assignment is atomic, so readers see either
-        # the previous committed snapshot or this one, never a mix
-        self._state = state
-
-    # ---- driver-side fold of a small keyed batch (bucketed store) ----
+    # ---- driver-side fold of a batch below the gate ----
     def _fold_on_driver(self, changes: DataFrame, batch_id: int,
                         base: int | None) -> bool:
-        """Commit a batch whose change rows plus touched state stay
-        below _DRIVER_FOLD_ROWS without the executor-side MERGE: ONE
-        Spark job collects the batch's raw (key, value, bucket) rows
-        as Arrow, with no exchange, and the driver aggregates them;
-        the touched buckets' row counts come from parquet footers, and
-        the merge, the bucket rewrite and the changelog run on the
-        driver into the same store layout, through the same
+        """Commit a batch whose change rows, and whose keyed delta
+        plus touched state, stay below _DRIVER_FOLD_ROWS without the
+        executor-side MERGE. ONE Spark job brings the batch's raw
+        (key, value, bucket) rows to the driver as Arrow, with no
+        exchange. The touched buckets' row counts come from parquet
+        footers, and the merge, the bucket rewrite and the changelog
+        run on the driver into the same store layout, through the same
         publish(). Returns False, having written nothing, when the
         batch is not small enough."""
         import pyarrow as pa
@@ -343,18 +221,15 @@ class ChangefeedRunner:
         from .statefs import STATE_FS
 
         store = self._store
+        bucket = store.bucket_expr(F.col(self.key))
         # limit bounds what crosses to the driver; toArrow runs it as
         # one job, a single stage when the batch is one partition
-        raw = (
-            changes.withColumn("__bucket", store.bucket_expr(F.col(self.key)))
-            .limit(_DRIVER_FOLD_ROWS)
-            .toArrow()
-        )
-        if raw.num_rows >= _DRIVER_FOLD_ROWS:
-            return False
+        raw = (changes.withColumn("__bucket", bucket)
+               .limit(_DRIVER_FOLD_ROWS).toArrow())
         # a NULL key never matches in the executor-side join; keep
         # that path's semantics rather than merging NULLs here
-        if raw.column(self.key).null_count:
+        if (raw.num_rows >= _DRIVER_FOLD_ROWS
+                or raw.column(self.key).null_count):
             return False
         # the executor path's delta: count(1) and an exact decimal sum,
         # NULL when every value of a key is NULL
@@ -369,7 +244,7 @@ class ChangefeedRunner:
         old = {}
         if base is not None and touched:
             held = store.bucket_counts(base, touched)
-            if raw.num_rows + sum(held.values()) >= _DRIVER_FOLD_ROWS:
+            if delta.num_rows + sum(held.values()) >= _DRIVER_FOLD_ROWS:
                 return False
             old = store.read_buckets(base, touched)
         rows = [{self.key: k, "d_count": c, "d_sum": s} for k, c, s in zip(
@@ -394,16 +269,13 @@ class ChangefeedRunner:
         store.stage_tables(batch_id, {
             b: self._state_table(items) for b, items in by_bucket.items()})
         store.publish(batch_id, base, touched)
-        self._flip_pointer(f"v{batch_id}")
-        self._state = None  # parquet is authoritative on this path
+        self._ptr.flip(batch_id)
         return True
 
-    # ---- Spark-side merge (large key space; the 100 TB path) ----
+    # ---- the one merge gate: driver fold, else executor-side MERGE ----
     def _merge_batch_spark(self, changes: DataFrame, batch_id: int) -> None:
-        base = self._pointer_batch()
-        base_bucketed = base is not None and self._store.has_version(base)
-        if (base is None or base_bucketed) and self._fold_on_driver(
-                changes, batch_id, base):
+        base = self._ptr.batch()
+        if self._fold_on_driver(changes, batch_id, base):
             return
         spark = self.spark
         delta = self._keyed_delta(changes).persist()
@@ -414,13 +286,8 @@ class ChangefeedRunner:
         touched = self._store.touched_buckets(delta, self.key)
         if base is None:
             old = spark.createDataFrame([], self._STATE_DDL)
-        elif base_bucketed:
-            old = self._store.df_at(base, buckets=touched)
         else:
-            # legacy whole-dir layout (e.g. a driver-merge run being
-            # continued on this path): migrate with one full rewrite
-            old = self._current_state_df()
-            touched = list(range(self._store.n_buckets))
+            old = self._store.df_at(base, buckets=touched)
         zero = F.lit(0).cast(_STATE_DEC)
         merged = (
             old.join(delta, self.key, "full")
@@ -463,10 +330,8 @@ class ChangefeedRunner:
                 fs = ex.submit(self._store.stage, batch_id,
                                state_df, touched)
                 fl.result(), fs.result()
-            self._store.publish(
-                batch_id, base if base_bucketed else None, touched)
-            self._flip_pointer(f"v{batch_id}")
-            self._state = None  # parquet is authoritative on this path
+            self._store.publish(batch_id, base, touched)
+            self._ptr.flip(batch_id)
         finally:
             merged.unpersist()
             delta.unpersist()
@@ -482,18 +347,13 @@ class ChangefeedRunner:
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self._last_batch is not None and batch_id <= self._last_batch:
-            self._rewind_before(batch_id)
+            self._ptr.rewind_before(batch_id)
         payload = batch_df.select("after.*")
         if self.filter_sql is not None:
             payload = payload.where(self.filter_sql)
         changes = payload.select(
             self.key, F.col("value").cast(_STATE_DEC).alias("value"))
-        if self.driver_merge:
-            # ONE Spark job per batch: the keyed partial aggregate.
-            self._merge_batch_driver(
-                self._keyed_delta(changes).collect(), batch_id)
-        else:
-            self._merge_batch_spark(changes, batch_id)
+        self._merge_batch_spark(changes, batch_id)
         self._last_batch = batch_id
         self._push(batch_id)
 
@@ -540,21 +400,8 @@ class ChangefeedRunner:
         """Re-shard the bucketed MVCC state to `new_buckets` hash
         buckets at a committed batch boundary (stream stopped) — the
         stop-with-savepoint → restore-at-new-parallelism operation.
-        Spark-merge (bucketed) path only: the driver-merge path keys
-        on small cardinality where bucket count is irrelevant. The
-        new count is durable in the republished manifest, so a runner
-        restarted over this root adopts it automatically."""
-        if self.driver_merge:
-            raise NotImplementedError(
-                "rescale_state applies to the bucketed (spark-merge) "
-                "state layout; the driver-merge path has no buckets")
-        b = self._pointer_batch()
-        if b is not None and not self._store.has_version(b):
-            raise RuntimeError(
-                f"current version v{b} is not a bucketed-store "
-                "manifest (legacy layout); run one batch on the "
-                "spark-merge path to migrate before rescaling")
-        self._state = None
+        The new count is durable in the republished manifest, so a
+        runner restarted over this root adopts it automatically."""
         return self._store.rescale(new_buckets)
 
     def batch_for_ts(self, ts, n_chunks: int | None = None):
@@ -655,36 +502,22 @@ class ChangefeedRunner:
         )
 
     def versions(self) -> list[int]:
-        """Batch ids of all retained MVCC state versions (driver-path
-        single files and bucketed-store manifests alike)."""
-        out = set(self._store.versions())
-        for name in os.listdir(self.state_root):
-            m = re.fullmatch(r"v(\d+)(?:\.parquet)?", name)
-            if m:
-                out.add(int(m.group(1)))
-        return sorted(out)
+        """Batch ids of all retained MVCC state versions."""
+        return self._store.versions()
 
     def state_at(self, batch_id: int) -> DataFrame:
         """Time travel: the materialized state AS OF a past batch —
         MVCC versions are retained, not garbage-collected, so any
         trigger's view stays readable (the AS OF SYSTEM TIME analogue
         of versioned changefeed stores)."""
-        if self._store.has_version(batch_id):
-            return self._store.df_at(batch_id).select(
-                self.key,
-                "cnt",
-                F.col("sum_value").cast("double").alias("sum_value"),
-            )
-        for name in (f"v{batch_id}.parquet", f"v{batch_id}"):
-            path = os.path.join(self.state_root, name)
-            if os.path.exists(path):
-                return self.spark.read.parquet(path).select(
-                    self.key,
-                    "cnt",
-                    F.col("sum_value").cast("double").alias("sum_value"),
-                )
-        raise KeyError(
-            f"no state version for batch {batch_id}; have {self.versions()}"
+        if not self._store.has_version(batch_id):
+            raise KeyError(
+                f"no state version for batch {batch_id}; "
+                f"have {self.versions()}")
+        return self._store.df_at(batch_id).select(
+            self.key,
+            "cnt",
+            F.col("sum_value").cast("double").alias("sum_value"),
         )
 
     def log(self) -> DataFrame:
@@ -709,23 +542,11 @@ class ChangefeedRunner:
         the same contract as AS OF SYSTEM TIME retention windows.
         Returns the batch ids removed."""
         versions = self.versions()
-        current = self._pointer_batch()
+        current = self._ptr.batch()
         keep = set(versions[-keep_last:])
         if current is not None:
             keep.add(current)
-        removed = list(self._store.gc(keep))
-        for b in versions:
-            if b in keep:
-                continue
-            for name in (f"v{b}.parquet", f"v{b}"):
-                path = os.path.join(self.state_root, name)
-                if os.path.isfile(path):
-                    os.remove(path)
-                    removed.append(b)
-                elif os.path.isdir(path):
-                    shutil.rmtree(path)
-                    removed.append(b)
-        return sorted(set(removed))
+        return self._store.gc(keep)
 
 
 class UpsertChangefeedRunner:
@@ -770,15 +591,13 @@ class UpsertChangefeedRunner:
         self.root = root or scratch_dir(prefix="dbrcf-upsert-")
         self.log_dir = os.path.join(self.root, "changelog")
         self.state_root = os.path.join(self.root, "state")
-        self.pointer = os.path.join(self.root, "CURRENT")
         self.ckpt = os.path.join(self.root, "checkpoint")
         os.makedirs(self.log_dir, exist_ok=True)
         os.makedirs(self.state_root, exist_ok=True)
-        from .state_store import BucketedMvccState
-
         self._store = BucketedMvccState(
             self.spark, self.state_root, self._STATE_DDL, "user_id"
         )
+        self._ptr = VersionPointer(self.root, self._store)
         import threading
 
         self._subscribers: list = []
@@ -789,41 +608,12 @@ class UpsertChangefeedRunner:
         # deleted keys keep their (ts, id) high-water mark so stale
         # pre-delete events cannot resurrect a newer tombstone
         self._tombstones: dict[int, tuple] = {}
-        self._last_batch = self._pointer_batch()
+        self._last_batch = self._ptr.batch()
 
-    _pointer_batch = ChangefeedRunner._pointer_batch
-    _flip_pointer = ChangefeedRunner._flip_pointer
+    _current_state_df = ChangefeedRunner._current_state_df
     versions = ChangefeedRunner.versions
     _push = ChangefeedRunner._push
     subscribe = ChangefeedRunner.subscribe
-
-    def _current_state_df(self) -> DataFrame | None:
-        b = self._pointer_batch()
-        if b is None:
-            return None
-        if self._store.has_version(b):
-            return self._store.df_at(b)
-        with open(self.pointer) as f:
-            v = f.read().strip()
-        return self.spark.read.parquet(os.path.join(self.state_root, v))
-
-    def _rewind_before(self, batch_id: int) -> None:
-        # same loud-failure contract as ChangefeedRunner._rewind_before
-        if batch_id == 0:
-            if os.path.exists(self.pointer):
-                os.remove(self.pointer)
-            return
-        b = batch_id - 1
-        if self._store.has_version(b) or os.path.exists(
-            os.path.join(self.state_root, f"v{b}")
-        ):
-            self._flip_pointer(f"v{b}")
-            return
-        raise RuntimeError(
-            f"cannot rewind to version v{b} for replayed batch "
-            f"{batch_id}: it was garbage-collected; "
-            f"retained versions: {self.versions()}"
-        )
 
     def _winners(self, batch_df: DataFrame) -> DataFrame:
         """Per-key LWW winner of one micro-batch: the (ts, event_id)
@@ -859,15 +649,11 @@ class UpsertChangefeedRunner:
         # pruned read + partial rewrite: only the buckets this
         # batch's keys hash into are read and rewritten (state_store)
         touched = self._store.touched_buckets(winners, "user_id")
-        base = self._pointer_batch()
-        base_bucketed = base is not None and self._store.has_version(base)
+        base = self._ptr.batch()
         if base is None:
             old = self.spark.createDataFrame([], self._STATE_DDL)
-        elif base_bucketed:
-            old = self._store.df_at(base, buckets=touched)
         else:
-            old = self._current_state_df()
-            touched = list(range(self._store.n_buckets))
+            old = self._store.df_at(base, buckets=touched)
         j = old.join(winners, "user_id", "full")
         has_w = F.col("w_eid").isNotNull()
         has_o = F.col("event_id").isNotNull()
@@ -925,9 +711,8 @@ class UpsertChangefeedRunner:
                 fs = ex.submit(self._store.stage, batch_id,
                                state_df, touched)
                 fl.result(), fs.result()
-            self._store.publish(
-                batch_id, base if base_bucketed else None, touched)
-            self._flip_pointer(f"v{batch_id}")
+            self._store.publish(batch_id, base, touched)
+            self._ptr.flip(batch_id)
         finally:
             merged.unpersist()
             winners.unpersist()
@@ -935,7 +720,8 @@ class UpsertChangefeedRunner:
     # ---- driver-side merge (equivalence-test path) ----
     def _merge_batch_driver(self, batch_df: DataFrame, batch_id: int) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
+
+        from .statefs import STATE_FS
 
         winners = (
             batch_df.select("after.user_id", "after.ts",
@@ -982,9 +768,8 @@ class UpsertChangefeedRunner:
                     "batch_id": pa.array([batch_id] * len(changes), pa.int64()),
                 }
             )
-            dst = os.path.join(self.log_dir, f"batch-{batch_id:05d}.parquet")
-            pq.write_table(tbl, dst + ".tmp")
-            os.replace(dst + ".tmp", dst)
+            STATE_FS.put_small_parquet_dir(
+                tbl, os.path.join(self.log_dir, f"batch-{batch_id:05d}"))
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.filter_sql is not None:
@@ -993,7 +778,7 @@ class UpsertChangefeedRunner:
             self._merge_batch_driver(batch_df, batch_id)
         else:
             if self._last_batch is not None and batch_id <= self._last_batch:
-                self._rewind_before(batch_id)
+                self._ptr.rewind_before(batch_id)
             self._merge_batch_spark(batch_df, batch_id)
         self._last_batch = batch_id
         self._push(batch_id)
@@ -1042,9 +827,9 @@ class MultiChangefeedRunner:
     source; each maintains its own materialized state). Per
     micro-batch the batch DataFrame is cached once and every feed
     merges from it through its own ChangefeedRunner — so each feed
-    gets the cardinality-appropriate merge path (event_type →
-    driver dict; user_id → executor-side keyed join), its own MVCC
-    state versions, and its own changelog.
+    gets its own size gate (driver fold of a small batch, else
+    the executor-side keyed join), its own MVCC state versions, and
+    its own changelog.
 
     Scale: the shared scan is the point — at 100 TB the dominant
     cost is reading the change stream, and it is paid once for all

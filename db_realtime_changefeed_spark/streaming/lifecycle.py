@@ -49,7 +49,7 @@ from .replay import (
     read_events_stream,
     streaming_shuffle,
 )
-from .state_store import BucketedMvccState
+from .state_store import BucketedMvccState, VersionPointer
 
 
 def chunk_files(spark: SparkSession, sf_dir: str,
@@ -122,7 +122,6 @@ class TtlChangefeedRunner:
         self.root = root or scratch_dir(prefix="dbrcf-ttl-")
         self.log_dir = os.path.join(self.root, "expirylog")
         self.state_root = os.path.join(self.root, "state")
-        self.pointer = os.path.join(self.root, "CURRENT")
         self.ckpt = os.path.join(self.root, "checkpoint")
         os.makedirs(self.state_root, exist_ok=True)
         os.makedirs(self.log_dir, exist_ok=True)
@@ -130,21 +129,10 @@ class TtlChangefeedRunner:
             self.spark, self.state_root, self._STATE_DDL, "user_id",
             n_buckets=state_buckets,
         )
-        self._last_batch = self._pointer_batch()
+        self._ptr = VersionPointer(self.root, self._store)
+        self._last_batch = self._ptr.batch()
 
-    # ---- pointer / sidecars ----
-    def _pointer_batch(self) -> int | None:
-        if not os.path.exists(self.pointer):
-            return None
-        with open(self.pointer) as f:
-            return int(f.read().strip().lstrip("v"))
-
-    def _flip_pointer(self, batch_id: int) -> None:
-        tmp = self.pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"v{batch_id}")
-        os.replace(tmp, self.pointer)
-
+    # ---- sidecars ----
     def _sidecar(self, kind: str, batch_id: int) -> str:
         return os.path.join(self.state_root,
                             f"{kind}-v{batch_id}.json")
@@ -168,18 +156,6 @@ class TtlChangefeedRunner:
             json.dump(obj, f)
         os.replace(path + ".tmp", path)
 
-    def _rewind_before(self, batch_id: int) -> None:
-        if batch_id == 0:
-            if os.path.exists(self.pointer):
-                os.remove(self.pointer)
-            return
-        b = batch_id - 1
-        if not self._store.has_version(b):
-            raise RuntimeError(
-                f"cannot rewind to v{b}: garbage-collected; "
-                f"retained: {self._store.versions()}")
-        self._flip_pointer(b)
-
     # ---- the standing query with TTL ----
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
@@ -189,7 +165,8 @@ class TtlChangefeedRunner:
             # merge, nothing to expire (the horizon only moves on data)
             return
         if self._last_batch is not None and batch_id <= self._last_batch:
-            self._rewind_before(batch_id)
+            # the sidecars of the rewound-to version are re-read below
+            self._ptr.rewind_before(batch_id)
         delta = (
             batch_df.select("after.*")
             .groupBy("user_id")
@@ -201,7 +178,7 @@ class TtlChangefeedRunner:
             touched = self._store.touched_buckets(delta, "user_id")
             batch_max = delta.agg(
                 F.max(F.unix_micros("d_ts"))).collect()[0][0]
-            base = self._pointer_batch()
+            base = self._ptr.batch()
             prev_cum = self._read_meta(base) if base is not None else None
             cum = max(x for x in (prev_cum, batch_max) if x is not None)
             horizon = cum - self.ttl_us
@@ -256,7 +233,7 @@ class TtlChangefeedRunner:
                                   for k, v in new_stats.items()})
                 self._write_json(self._sidecar("meta", batch_id),
                                  {"cum_max_us": cum})
-                self._flip_pointer(batch_id)
+                self._ptr.flip(batch_id)
             finally:
                 merged.unpersist()
         finally:
@@ -281,7 +258,7 @@ class TtlChangefeedRunner:
     # ---- reads ----
     def state(self) -> DataFrame:
         """Live rows (survivors) with era-local counts."""
-        b = self._pointer_batch()
+        b = self._ptr.batch()
         if b is None:
             df = self.spark.createDataFrame([], self._STATE_DDL)
         else:

@@ -161,12 +161,12 @@ def changefeed_state_rescale(spark, sf_dir):
     key = (id(spark), sf_dir, "__rescale__")
     if key not in _CACHE:
         files = chunk_files(spark, sf_dir)
-        r1 = ChangefeedRunner(spark, sf_dir, driver_merge=False,
-                              key="user_id", state_buckets=4)
+        r1 = ChangefeedRunner(spark, sf_dir, key="user_id",
+                              state_buckets=4)
         run_phase(r1, files[: max(1, len(files) // 2)])
         r1.rescale_state(8)
-        r2 = ChangefeedRunner(spark, sf_dir, driver_merge=False,
-                              key="user_id", root=r1.root)
+        r2 = ChangefeedRunner(spark, sf_dir, key="user_id",
+                              root=r1.root)
         run_phase(r2, files)
         _CACHE[key] = r2
     return _CACHE[key].state()

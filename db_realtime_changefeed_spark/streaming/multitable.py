@@ -502,7 +502,6 @@ class MultiTableChangefeedRunner:
                             else ", d_sum decimal(28,6)"))
         self.root = root or scratch_dir(prefix="dbrcf-mtable-")
         self.state_root = os.path.join(self.root, "state")
-        self.pointer = os.path.join(self.root, "CURRENT")
         self.ckpt = os.path.join(self.root, "checkpoint")
         #: per-batch keyed-delta log (r11 — delta cursors on
         #: non-events feeds): one small parquet dir per micro-batch,
@@ -515,16 +514,17 @@ class MultiTableChangefeedRunner:
         os.makedirs(self.state_root, exist_ok=True)
         # bucketed MVCC store on the composite (tbl, key) — partial
         # state rewrites per micro-batch (state_store.py)
-        from .state_store import BucketedMvccState
+        from .state_store import BucketedMvccState, VersionPointer
 
         self._store = BucketedMvccState(
             self.spark, self.state_root, self._STATE_DDL, ["tbl", "key"]
         )
+        self._ptr = VersionPointer(self.root, self._store)
         # cumulative per-table high-water marks + resolved log:
         # (batch_id, {tbl: hwm}, resolved_ts)
         self._hwm: dict[str, object] = {}
         self._resolved: list[tuple[int, dict, object]] = []
-        self._last_batch = self._pointer_batch()
+        self._last_batch = self._ptr.batch()
         # push subscribers (r11 — the events runner's subscribe()
         # contract on table feeds): serialized under one lock,
         # durable per-name acks under the runner root (push.py)
@@ -533,59 +533,16 @@ class MultiTableChangefeedRunner:
         self._subscribers: list = []
         self._sub_lock = threading.Lock()
 
-    def _pointer_batch(self) -> int | None:
-        if not os.path.exists(self.pointer):
-            return None
-        with open(self.pointer) as f:
-            m = re.fullmatch(r"v(\d+)", f.read().strip())
-        return int(m.group(1)) if m else None
-
-    def _flip_pointer(self, version: str) -> None:
-        tmp = self.pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, self.pointer)
-
     def _current_state_df(self) -> DataFrame | None:
-        b = self._pointer_batch()
-        if b is None:
-            return None
-        if self._store.has_version(b):
-            return self._store.df_at(b)
-        with open(self.pointer) as f:
-            v = f.read().strip()
-        return self.spark.read.parquet(os.path.join(self.state_root, v))
+        b = self._ptr.batch()
+        return None if b is None else self._store.df_at(b)
 
     def versions(self) -> list[int]:
-        out = set(self._store.versions())
-        for name in os.listdir(self.state_root):
-            m = re.fullmatch(r"v(\d+)", name)
-            if m:
-                out.add(int(m.group(1)))
-        return sorted(out)
-
-    def _rewind_before(self, batch_id: int) -> None:
-        # same loud-failure contract as ChangefeedRunner._rewind_before:
-        # batch b>0 rebases onto version b-1 exactly, or raises
-        if batch_id == 0:
-            if os.path.exists(self.pointer):
-                os.remove(self.pointer)
-            return
-        b = batch_id - 1
-        if self._store.has_version(b) or os.path.exists(
-            os.path.join(self.state_root, f"v{b}")
-        ):
-            self._flip_pointer(f"v{b}")
-            return
-        raise RuntimeError(
-            f"cannot rewind to version v{b} for replayed batch "
-            f"{batch_id}: it was garbage-collected; "
-            f"retained versions: {self.versions()}"
-        )
+        return self._store.versions()
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self._last_batch is not None and batch_id <= self._last_batch:
-            self._rewind_before(batch_id)
+            self._ptr.rewind_before(batch_id)
             # a replayed batch re-resolves itself and everything
             # after it; high-water marks stay (they are cumulative
             # maxima, still valid under at-least-once)
@@ -605,16 +562,11 @@ class MultiTableChangefeedRunner:
             delta = eligible.groupBy("tbl", "key").agg(*aggs).persist()
             # pruned read + partial rewrite of only touched buckets
             touched = self._store.touched_buckets(delta)
-            base = self._pointer_batch()
-            base_bucketed = (base is not None
-                             and self._store.has_version(base))
+            base = self._ptr.batch()
             if base is None:
                 old = self.spark.createDataFrame([], self._STATE_DDL)
-            elif base_bucketed:
+            else:
                 old = self._store.df_at(base, buckets=touched)
-            else:  # legacy whole-dir layout: migrate via full rewrite
-                old = self._current_state_df()
-                touched = list(range(self._store.n_buckets))
             zero = F.lit(0).cast(_STATE_DEC)
             merged_cols = [
                 F.col("tbl"),
@@ -641,8 +593,7 @@ class MultiTableChangefeedRunner:
                     batch_df.groupBy("tbl")
                     .agg(F.max("ts").alias("m")).collect)
                 hwm_rows, _ = fh.result(), fs.result()
-            self._store.publish(
-                batch_id, base if base_bucketed else None, touched)
+            self._store.publish(batch_id, base, touched)
             # delta-log segment for this batch: written BEFORE the
             # pointer flip (reads gate on the pointer, so the segment
             # is invisible until the batch commits); a re-delivered
@@ -662,7 +613,7 @@ class MultiTableChangefeedRunner:
                                       f"batch-{batch_id:05d}"))
             )
             delta.unpersist()
-            self._flip_pointer(f"v{batch_id}")
+            self._ptr.flip(batch_id)
             # per-table high-water marks → resolved = min across tables
             for r in hwm_rows:
                 prev = self._hwm.get(r["tbl"])
@@ -811,7 +762,7 @@ class MultiTableChangefeedRunner:
             # push (not yet appended) — both sides serialize on
             # _sub_lock so one of them always sees the batch; double
             # delivery is deduped by the durable ack (ADVICE r11)
-            committed = self._pointer_batch()
+            committed = self._ptr.batch()
             for b in log_batches(self.log_root):
                 if committed is not None and b <= committed \
                         and b > sub.acked:
@@ -840,7 +791,7 @@ class MultiTableChangefeedRunner:
         rewound replay hides the not-yet-recommitted tail."""
         import glob as _glob
 
-        b = self._pointer_batch()
+        b = self._ptr.batch()
         if b is None or not _glob.glob(
                 os.path.join(self.log_root, "*", "*.parquet")):
             return self.spark.createDataFrame([], self._LOG_DDL)
@@ -852,12 +803,9 @@ class MultiTableChangefeedRunner:
         )
 
     def state_at(self, batch_id: int) -> DataFrame:
-        if self._store.has_version(batch_id):
-            return self._store.df_at(batch_id)
-        path = os.path.join(self.state_root, f"v{batch_id}")
-        if not os.path.exists(path):
+        if not self._store.has_version(batch_id):
             raise KeyError(f"no version v{batch_id}; have {self.versions()}")
-        return self.spark.read.parquet(path)
+        return self._store.df_at(batch_id)
 
     def resolved(self) -> list[tuple[int, dict, object]]:
         """[(batch_id, {tbl: hwm_ts}, resolved_ts)] — resolved_ts is
@@ -887,14 +835,7 @@ def table_retention_gc(runner: MultiTableChangefeedRunner,
             if m and int(m.group(1)) < horizon:
                 shutil.rmtree(os.path.join(runner.log_root, name))
                 removed.append(int(m.group(1)))
-    keep = {b for b in runner.versions() if b >= horizon - 1}
-    runner._store.gc(keep)
-    for b in runner.versions():
-        if b in keep:
-            continue
-        path = os.path.join(runner.state_root, f"v{b}")
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+    runner._store.gc({b for b in runner.versions() if b >= horizon - 1})
     return removed
 
 
@@ -933,7 +874,7 @@ def table_resume(runner: MultiTableChangefeedRunner, table: str,
             # snapshot with an empty delta tail (state_at(-1) would
             # fail on a nonexistent version — ADVICE r11); no commits
             # at all is a genuinely unservable resume
-            snap_at = runner._pointer_batch()
+            snap_at = runner._ptr.batch()
             if snap_at is None:
                 raise ExpiredCursorError(
                     "delta log fully GC'd and no committed state "

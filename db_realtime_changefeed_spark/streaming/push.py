@@ -73,24 +73,14 @@ class Subscriber:
 
 def read_batch_log(log_dir: str, batch_id: int) -> list[dict]:
     """One batch's delta rows as plain dicts, read with pyarrow (no
-    Spark job on the push path). Both log layouts are handled: the
-    driver-merge path writes one file batch-XXXXX.parquet, the
-    Spark-merge path a subdir batch-XXXXX/ of parts."""
+    Spark job on the push path) from the parquet parts of its
+    batch-XXXXX/ dir; [] when the batch wrote none."""
     import pyarrow.parquet as pq
 
     base = os.path.join(log_dir, f"batch-{batch_id:05d}")
-    if os.path.isfile(base + ".parquet"):
-        tables = [pq.read_table(base + ".parquet")]
-    elif os.path.isdir(base):
-        tables = [
-            pq.read_table(p)
-            for p in sorted(glob.glob(os.path.join(base, "*.parquet")))
-        ]
-    else:
-        return []
     out: list[dict] = []
-    for t in tables:
-        out.extend(t.to_pylist())
+    for p in sorted(glob.glob(os.path.join(base, "*.parquet"))):
+        out.extend(pq.read_table(p).to_pylist())
     return out
 
 
@@ -98,8 +88,7 @@ def log_batches(log_dir: str) -> list[int]:
     """Batch ids present in a runner's delta log, ascending."""
     ids = set()
     for p in glob.glob(os.path.join(log_dir, "batch-*")):
-        name = os.path.basename(p)
-        digits = name.removeprefix("batch-").removesuffix(".parquet")
+        digits = os.path.basename(p).removeprefix("batch-")
         if digits.isdigit():
             ids.add(int(digits))
     return sorted(ids)

@@ -53,23 +53,9 @@ def retention_gc(runner: ChangefeedRunner, horizon: int,
     for name in sorted(os.listdir(runner.log_dir)):
         m = re.match(r"batch-(\d+)", name)
         if m and int(m.group(1)) < horizon:
-            path = os.path.join(runner.log_dir, name)
-            if os.path.isfile(path):
-                os.remove(path)
-            else:
-                shutil.rmtree(path)
+            shutil.rmtree(os.path.join(runner.log_dir, name))
             removed.append(int(m.group(1)))
-    keep = {b for b in runner.versions() if b >= horizon - 1}
-    runner._store.gc(keep)
-    for b in runner.versions():
-        if b in keep:
-            continue
-        for name in (f"v{b}.parquet", f"v{b}"):
-            path = os.path.join(runner.state_root, name)
-            if os.path.isfile(path):
-                os.remove(path)
-            elif os.path.isdir(path):
-                shutil.rmtree(path)
+    runner._store.gc({b for b in runner.versions() if b >= horizon - 1})
     return removed
 
 

@@ -24,6 +24,10 @@ overwrite their own bucket dirs + manifest — idempotent), and GC
 
 Bucketing uses pmod(xxhash64(key), N) so any key type works and the
 bucket is derivable from the key — it is never stored in the data.
+
+Which version is committed is a runner's `CURRENT` file beside its
+state root, holding `v<batch>` (VersionPointer): every keyed runner
+reads, flips and rewinds it through that one class.
 """
 
 from __future__ import annotations
@@ -48,8 +52,8 @@ class BucketedMvccState:
     """Versioned, hash-bucketed parquet state with manifest commits.
 
     The store owns the bucket/manifest layout only; the POINTER file
-    (which version is CURRENT) stays with the runner, next to its
-    changelog and checkpoint.
+    (which version is CURRENT, see VersionPointer) stays with the
+    runner, next to its changelog and checkpoint.
     """
 
     def __init__(self, spark: SparkSession, state_root: str, ddl: str,
@@ -330,3 +334,62 @@ class BucketedMvccState:
                             not in referenced:
                         shutil.rmtree(os.path.join(bdir, vname))
         return removed
+
+
+class VersionPointer:
+    """A runner's CURRENT file: `v<batch>`, naming the store version
+    its last committed batch published. A runner flips it LAST in
+    every commit, after publish(), so whatever it names has its
+    manifest and every bucket dir in place."""
+
+    def __init__(self, root: str, store: BucketedMvccState):
+        self.root = root
+        self.path = os.path.join(root, "CURRENT")
+        self.store = store
+
+    def batch(self) -> int | None:
+        """The committed batch id; None before the first commit. A
+        CURRENT that is not `v<digits>`, or that names a version the
+        store has no manifest for (a root written in an older state
+        layout), raises instead of reading as empty state."""
+        if not os.path.exists(self.path):
+            return None
+        with open(self.path) as f:
+            v = f.read().strip()
+        m = re.fullmatch(r"v(\d+)", v)
+        if m is None or not self.store.has_version(int(m.group(1))):
+            raise RuntimeError(
+                f"state root {self.root}: CURRENT names {v!r}, which "
+                "is not a version of the bucketed state store (a root "
+                "written in an older state layout); start from a fresh "
+                "root")
+        return int(m.group(1))
+
+    def flip(self, batch_id: int) -> None:
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(f"v{batch_id}")
+        os.replace(tmp, self.path)
+
+    def rewind_before(self, batch_id: int) -> None:
+        """At-least-once replay support: a re-delivered batch must
+        merge onto the state AS OF the preceding batch, not onto its
+        own result. Versions are retained, so rewinding is a pointer
+        flip (or pointer removal back to the empty state).
+
+        Replaying past the retention horizon FAILS LOUDLY: batch ids
+        are consecutive, so batch b>0 must rebase onto version b-1
+        exactly — silently merging onto an older surviving version
+        (or the empty state) would corrupt the state without any
+        error."""
+        if batch_id == 0:
+            if os.path.exists(self.path):
+                os.remove(self.path)
+            return
+        b = batch_id - 1
+        if not self.store.has_version(b):
+            raise RuntimeError(
+                f"cannot rewind to version v{b} for replayed batch "
+                f"{batch_id}: it was garbage-collected; "
+                f"retained versions: {self.store.versions()}")
+        self.flip(b)

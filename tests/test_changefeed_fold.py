@@ -33,7 +33,7 @@ def _micro_batch_conf(spark):
 def _keyed_runner(spark, sf) -> tuple[ChangefeedRunner, list[int]]:
     """A per-user bucketed runner plus the batch ids its executor-side
     path staged (the fold never calls stage())."""
-    r = ChangefeedRunner(spark, sf, key="user_id", driver_merge=False)
+    r = ChangefeedRunner(spark, sf, key="user_id")
     staged: list[int] = []
     stage = r._store.stage
 

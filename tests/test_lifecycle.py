@@ -70,7 +70,7 @@ def test_ttl_expired_rows_are_behind_horizon(ttl_runner):
     of its batch; every survivor's last_ts is not older than the
     final horizon."""
     metas = {}
-    b = ttl_runner._pointer_batch()
+    b = ttl_runner._ptr.batch()
     for v in ttl_runner._store.versions():
         metas[v] = ttl_runner._read_meta(v)
     log = ttl_runner.expiry_log().collect()
@@ -97,7 +97,7 @@ def test_ttl_bucket_skip_property(ttl_runner):
 def test_ttl_stats_sidecar_tracks_live_min(ttl_runner):
     """stats-v<b>.json min(last_ts) per bucket matches the committed
     live rows for the final version."""
-    b = ttl_runner._pointer_batch()
+    b = ttl_runner._ptr.batch()
     stats = ttl_runner._read_stats(b)
     got = {
         int(r["k"]): int(r["mn"])
@@ -127,21 +127,18 @@ def test_ttl_restart_resumes_without_change(spark, sf_smoke, ttl_runner):
 @pytest.fixture(scope="module")
 def rescaled(spark, sf_smoke):
     files = chunk_files(spark, sf_smoke)
-    r1 = ChangefeedRunner(spark, sf_smoke, driver_merge=False,
-                          key="user_id", state_buckets=4)
+    r1 = ChangefeedRunner(spark, sf_smoke, key="user_id", state_buckets=4)
     run_phase(r1, files[: len(files) // 2])
     mid = {(r["user_id"], r["cnt"]) for r in r1.state().collect()}
     r1.rescale_state(8)
-    r2 = ChangefeedRunner(spark, sf_smoke, driver_merge=False,
-                          key="user_id", root=r1.root)
+    r2 = ChangefeedRunner(spark, sf_smoke, key="user_id", root=r1.root)
     r2._mid_state = mid
     run_phase(r2, files)
     return r2
 
 
 def test_rescale_is_result_invisible(spark, sf_smoke, rescaled):
-    straight = ChangefeedRunner(spark, sf_smoke, driver_merge=False,
-                                key="user_id")
+    straight = ChangefeedRunner(spark, sf_smoke, key="user_id")
     straight.run()
     want = {(r["user_id"], r["cnt"], round(r["sum_value"], 6))
             for r in straight.state().collect()}
@@ -153,7 +150,7 @@ def test_rescale_is_result_invisible(spark, sf_smoke, rescaled):
 def test_rescale_preserves_state_at_boundary(rescaled):
     """Immediately after rescale the state contents are unchanged —
     only the sharding moved."""
-    v = rescaled._pointer_batch()
+    v = rescaled._ptr.batch()
     # pointer still names the pre-restart boundary version in the
     # manifest history; compare the rescaled version's contents
     store = rescaled._store
@@ -210,12 +207,13 @@ def test_rescale_gc_reclaims_untagged_dirs(rescaled):
 @pytest.mark.parametrize("path", ["fold", "executor"])
 def test_keyed_lifecycle_on_both_merge_paths(spark, sf_smoke, monkeypatch,
                                              path):
-    """Rescale, restart and compact on the per-user feed, once with
-    every batch below the driver-fold gate and once with the gate at 0
-    (the executor-side MERGE): the restarted runner adopts the new
-    bucket count, folds onto the rescaled buckets, and the final state
-    equals the batch aggregate on both paths. Replays on both paths
-    are tested in tests/test_changefeed_fold.py."""
+    """Rescale, restart and compact on the per-user and the
+    per-event-type feed, once with every batch below the driver-fold
+    gate and once with the gate at 0 (the executor-side MERGE): the
+    restarted runner adopts the new bucket count, folds onto the
+    rescaled buckets, and the final state equals the batch aggregate
+    on both paths. Replays on both paths are tested in
+    tests/test_changefeed_fold.py."""
     from db_realtime_changefeed_spark.catalog import load_table
     from db_realtime_changefeed_spark.streaming import changefeed
     from db_realtime_changefeed_spark.streaming.changefeed import (
@@ -230,35 +228,28 @@ def test_keyed_lifecycle_on_both_merge_paths(spark, sf_smoke, monkeypatch,
     ev = load_table(spark, sf_smoke, "events")
     halves = [cdc_envelope(ev.where(F.col("event_id") % 2 == i))
               for i in range(2)]
-    r1 = ChangefeedRunner(spark, sf_smoke, driver_merge=False,
-                          key="user_id", state_buckets=4)
-    with streaming_shuffle(spark, 2):
-        r1._merge_batch(halves[0], 0)
-        r1.rescale_state(8)
-        r2 = ChangefeedRunner(spark, sf_smoke, driver_merge=False,
-                              key="user_id", root=r1.root)
-        assert r2._store.n_buckets == 8
-        r2._merge_batch(halves[1], 1)
-    assert r2.compact(keep_last=1) == [0]
-    assert r2.versions() == [1]
-    want = {
-        (r["user_id"], r["cnt"], r["s"])
-        for r in ev.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("value").cast("decimal(28,6)"))
-            .cast("double").alias("s"),
-        ).collect()
-    }
-    assert set(map(tuple, r2.state().collect())) == want
-    last = {r["user_id"]: r["new_count"]
-            for r in r2.log().orderBy("batch_id").collect()}
-    assert last == {u: c for u, c, _ in want}
-
-
-def test_rescale_requires_bucketed_path(spark, sf_smoke):
-    r = ChangefeedRunner(spark, sf_smoke, driver_merge=True)
-    with pytest.raises(NotImplementedError):
-        r.rescale_state(8)
+    for key in ("user_id", "event_type"):
+        r1 = ChangefeedRunner(spark, sf_smoke, key=key, state_buckets=4)
+        with streaming_shuffle(spark, 2):
+            r1._merge_batch(halves[0], 0)
+            r1.rescale_state(8)
+            r2 = ChangefeedRunner(spark, sf_smoke, key=key, root=r1.root)
+            assert r2._store.n_buckets == 8
+            r2._merge_batch(halves[1], 1)
+        assert r2.compact(keep_last=1) == [0]
+        assert r2.versions() == [1]
+        want = {
+            (r[key], r["cnt"], r["s"])
+            for r in ev.groupBy(key).agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.sum(F.col("value").cast("decimal(28,6)"))
+                .cast("double").alias("s"),
+            ).collect()
+        }
+        assert set(map(tuple, r2.state().collect())) == want, key
+        last = {r[key]: r["new_count"]
+                for r in r2.log().orderBy("batch_id").collect()}
+        assert last == {k: c for k, c, _ in want}, key
 
 
 # ------------------------------------------------- feed exclusivity
@@ -271,15 +262,14 @@ def test_empty_batch_before_any_meta_is_noop(spark, sf_smoke):
     empty = spark.createDataFrame(
         [], "op string, after struct<user_id:long, ts:timestamp>")
     r._merge_batch(empty, 0)          # must not raise
-    assert r._pointer_batch() is None  # nothing committed
+    assert r._ptr.batch() is None  # nothing committed
 
 
 def test_run_after_run_phase_refuses(spark, sf_smoke):
     """run() and run_phase() share a checkpoint but stream different
     paths; mixing them would double-process (ADVICE r7)."""
     files = chunk_files(spark, sf_smoke)
-    r = ChangefeedRunner(spark, sf_smoke, driver_merge=False,
-                         key="user_id")
+    r = ChangefeedRunner(spark, sf_smoke, key="user_id")
     run_phase(r, files[:1])
     with pytest.raises(RuntimeError, match="run_phase"):
         r.run()

@@ -73,23 +73,24 @@ def test_stream_batch_equivalence_windows(spark, sf_smoke):
     assert s == b
 
 
-def test_changefeed_spark_merge_path_equivalent(spark, sf_smoke):
-    """driver_merge=False (the large-key-space Spark join-merge path)
-    must produce the same final state and coherent log as the
-    driver-side path."""
-    a = ChangefeedRunner(spark, sf_smoke, driver_merge=True)
+def test_changefeed_spark_merge_path_equivalent(spark, sf_smoke,
+                                               monkeypatch):
+    """The default event_type run (every batch below the driver-fold
+    gate) must produce the same final state and the same log rows as
+    the executor-side MERGE (the gate at 0)."""
+    from db_realtime_changefeed_spark.streaming import changefeed
+
+    a = ChangefeedRunner(spark, sf_smoke)
     a.run()
-    b = ChangefeedRunner(spark, sf_smoke, driver_merge=False)
+    monkeypatch.setattr(changefeed, "_DRIVER_FOLD_ROWS", 0)
+    b = ChangefeedRunner(spark, sf_smoke)
     b.run()
     sa = sorted(map(tuple, a.state().collect()))
     sb = sorted(map(tuple, b.state().collect()))
     assert sa == sb
-    # log totals agree too (per-key final new_count)
-    la = {r["event_type"]: r["new_count"]
-          for r in a.log().orderBy("batch_id").collect()}
-    lb = {r["event_type"]: r["new_count"]
-          for r in b.log().orderBy("batch_id").collect()}
-    assert la == lb
+    assert a.versions() == b.versions()
+    assert (sorted(map(tuple, a.log().collect()))
+            == sorted(map(tuple, b.log().collect())))
 
 
 def test_upsert_changefeed_log_coherent(spark, sf_smoke):
@@ -213,15 +214,35 @@ def test_knn_ivf_probe_exact_within_cell(spark, sf_oracle):
 
 def test_changefeed_restart_recovers_state(spark, sf_smoke):
     """Crash-recovery: a NEW runner pointed at a previous runner's
-    root must reload the durable state via the pointer file — the
-    in-memory cache is an optimization, parquet is the truth."""
+    root must reload the durable state via the pointer file."""
     a = ChangefeedRunner(spark, sf_smoke)
     a.run()
     b = ChangefeedRunner(spark, sf_smoke, root=a.root)
-    assert b._state is None  # nothing warm — must come from disk
     sa = sorted(map(tuple, a.state().collect()))
     sb = sorted(map(tuple, b.state().collect()))
     assert sa == sb
+
+
+@pytest.mark.parametrize("current", ["v3.parquet", "v3"])
+def test_changefeed_refuses_root_without_bucketed_version(
+        spark, sf_smoke, tmp_path, current):
+    """A root whose CURRENT is not `v<digits>` (the whole-file layout
+    of older runners wrote `v3.parquet`), or names a version with no
+    store manifest, is refused loudly by name instead of read as
+    empty state."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "old-root"
+    (root / "state").mkdir(parents=True)
+    pq.write_table(
+        pa.table({"event_type": ["view"], "cnt": [1]}),
+        str(root / "state" / "v3.parquet"))
+    (root / "CURRENT").write_text(current)
+    with pytest.raises(RuntimeError, match=re.escape(str(root))):
+        ChangefeedRunner(spark, sf_smoke, root=str(root))
 
 
 def test_changefeed_time_travel(spark, sf_smoke):
@@ -261,17 +282,21 @@ def test_changefeed_restart_run_does_not_double_count(spark, sf_smoke):
     assert sa == sb
 
 
-def test_changefeed_batch_replay_idempotent(spark, sf_smoke):
+def test_changefeed_batch_replay_idempotent(spark, sf_smoke,
+                                            monkeypatch):
     """At-least-once delivery: re-invoking _merge_batch with an
     already-merged batch_id must leave state AND log unchanged
-    (rewind-to-previous-version semantics), on both merge paths."""
+    (rewind-to-previous-version semantics), on both sides of the
+    driver-fold gate (the default gate, and 0 for the executor-side
+    MERGE)."""
+    from db_realtime_changefeed_spark.streaming import changefeed
     from db_realtime_changefeed_spark.streaming.changefeed import (
         cdc_envelope,
     )
 
-    for driver_merge in (True, False):
-        runner = ChangefeedRunner(spark, sf_smoke,
-                                  driver_merge=driver_merge)
+    for gate in (changefeed._DRIVER_FOLD_ROWS, 0):
+        monkeypatch.setattr(changefeed, "_DRIVER_FOLD_ROWS", gate)
+        runner = ChangefeedRunner(spark, sf_smoke)
         runner.run()
         state0 = sorted(map(tuple, runner.state().collect()))
         log0 = sorted(map(tuple, runner.log().collect()))
@@ -288,11 +313,11 @@ def test_changefeed_batch_replay_idempotent(spark, sf_smoke):
         s1 = sorted(map(tuple, runner.state().collect()))
         runner._merge_batch(cdc_envelope(ev), last)
         s2 = sorted(map(tuple, runner.state().collect()))
-        assert s1 == s2, f"replay not idempotent (driver_merge={driver_merge})"
+        assert s1 == s2, f"replay not idempotent (gate={gate})"
         l1 = sorted(map(tuple, runner.log().collect()))
         runner._merge_batch(cdc_envelope(ev), last)
         l2 = sorted(map(tuple, runner.log().collect()))
-        assert l1 == l2, f"log double-appended (driver_merge={driver_merge})"
+        assert l1 == l2, f"log double-appended (gate={gate})"
         # and rewinding back to the ORIGINAL payload restores state0
         # shape-wise: counts for replayed batch now reflect full table,
         # so only assert the pre-replay batches are untouched
@@ -474,7 +499,7 @@ def test_live_feed_restart_resumes(spark, sf_smoke):
     a = ChangefeedRunner(spark, sf_smoke)
     src = a.start_live()
     a.ingest(files[0])
-    wait_until(lambda: a._pointer_batch() is not None
+    wait_until(lambda: a._ptr.batch() is not None
                and sum(r["cnt"] for r in a.state().collect()) > 0)
     n1 = sum(r["cnt"] for r in a.state().collect())
     a.stop_live()
@@ -499,6 +524,48 @@ def test_live_feed_restart_resumes(spark, sf_smoke):
         pq.read_metadata(f).num_rows for f in files[:2]
     )
     assert n2 == expected, f"resumed feed double- or under-counted: {n2}"
+
+
+def test_multitable_live_restart_continues_file_sequence(spark, sf_smoke,
+                                                        tmp_path):
+    """A live table feed restarted over the same root numbers its next
+    live file after the ones already in the dir, and folds it on top
+    of the committed state: the count covers both files' rows."""
+    import time
+
+    import pyarrow.parquet as pq
+
+    from db_realtime_changefeed_spark.streaming.multitable import (
+        MultiTableChangefeedRunner,
+    )
+
+    rows = (load_table(spark, sf_smoke, "orders").orderBy("o_orderkey")
+            .limit(8).toArrow())
+    files = []
+    for i, (lo, n) in enumerate(((0, 3), (3, 5))):
+        files.append(str(tmp_path / f"orders-{i}.parquet"))
+        pq.write_table(rows.slice(lo, n), files[-1])
+
+    def counted_after_ingest(runner, path, want):
+        runner.start_live(processing_time="250 milliseconds")
+        try:
+            runner.ingest("orders", path)
+            deadline = time.time() + 60
+            got = 0
+            while got < want and time.time() < deadline:
+                time.sleep(0.25)
+                got = runner.state().agg(F.sum("cnt")).collect()[0][0] or 0
+            return got
+        finally:
+            runner.stop_live()
+
+    a = MultiTableChangefeedRunner(spark, sf_smoke, tables=("orders",))
+    assert counted_after_ingest(a, files[0], 3) == 3
+    b = MultiTableChangefeedRunner(spark, sf_smoke, tables=("orders",),
+                                   root=a.root)
+    assert counted_after_ingest(b, files[1], 8) == 8
+    assert sorted(os.listdir(os.path.join(b.live_root, "orders"))) == [
+        "live-000000.parquet", "live-000001.parquet"]
 
 
 def test_live_ingest_temp_file_invisible_to_spark(spark, sf_smoke,
@@ -730,9 +797,9 @@ def test_rewind_past_retention_horizon_raises(spark, sf_smoke):
     runner.compact(keep_last=1)
     assert runner.versions() == [last]
     with pytest.raises(RuntimeError, match="garbage-collected"):
-        runner._rewind_before(last)
+        runner._ptr.rewind_before(last)
     # rewind to batch 0 (empty initial state) stays legal
-    runner._rewind_before(0)
+    runner._ptr.rewind_before(0)
 
 
 def test_bucketed_partial_state_rewrites(spark, sf_smoke):
