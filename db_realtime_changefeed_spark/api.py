@@ -140,9 +140,12 @@ class SnapshotFeed(Feed):
 
 
 class LiveFeed(Feed):
-    """A continuously-running standing query (ProcessingTime trigger):
-    the producer pushes change files with ingest(), subscribers
-    follow with cursor().poll() — no restart between deltas."""
+    """A continuously-running standing query over the events table:
+    the producer pushes change files with ingest(), and the runner's
+    worker commits each one as its own batch as soon as it lands;
+    subscribers follow with cursor().poll() or subscribe() — no
+    restart between deltas. ingest() and stop() raise the error the
+    worker stopped on, naming the batch."""
 
     def ingest(self, parquet_file: str) -> None:
         self._runner.ingest(parquet_file)
@@ -506,19 +509,21 @@ class TableRef:
 
         `mode="replay"` (default) runs the feed to completion over
         the available changes and returns. `mode="live"` keeps the
-        standing query RUNNING with a ProcessingTime trigger: push
-        new change files with LiveFeed.ingest(), consume deltas
-        incrementally with Feed.cursor().poll(), stop with
-        LiveFeed.stop() — the subscribe-and-keep-receiving behavior
-        of RethinkDB changes() / CREATE CHANGEFEED.
-        `processing_time` defaults to replay.LIVE_TRIGGER (400 ms),
-        above a live batch's cost even on a loaded host, so a producer
-        that keeps up gets one batch per tick at a steady latency; a
-        batch that outlasts it starts the next at once, and a file
-        landing on an idle feed waits at most that long. Each poll
-        lists the live source dir: an idle feed used about 5% of one
-        core at 400 ms and at 500 ms, 13% at 100 ms and half a core
-        with a "0 seconds" trigger (4-core host, Python plus JVM).
+        standing query RUNNING: push new change files with
+        LiveFeed.ingest(), consume deltas incrementally with
+        Feed.cursor().poll() or subscribe(), stop with LiveFeed.stop()
+        — the subscribe-and-keep-receiving behavior of RethinkDB
+        changes() / CREATE CHANGEFEED.
+        On `events`, a live feed has no trigger: the runner's worker
+        thread commits each ingested file as its own batch as soon as
+        it lands (batch id = file sequence), and an idle feed waits
+        without polling, at under 1% of one core (Python plus JVM,
+        4-core host); `processing_time` is not used there. Table feeds
+        (below) run a Structured Streaming query whose ProcessingTime
+        trigger `processing_time` sets, by default replay.LIVE_TRIGGER
+        (400 ms): a producer that keeps up gets one batch per tick,
+        and each tick lists the live source dir (docs/
+        changefeed-semantics.md, "Continuous delivery").
 
         `initial_scan` (the CREATE CHANGEFEED option) controls what a
         NEW consumer sees of history (any feed table — r11):
@@ -653,7 +658,7 @@ class TableRef:
             # (a fresh runner has no history; a restarted root may).
             start = (_registration_cursor_start()
                      if initial_scan == "no" else 0)
-            runner.start_live(processing_time=processing_time)
+            runner.start_live()
             return LiveFeed(runner, cursor_start=start)
         runner.run()
         if initial_scan == "only":

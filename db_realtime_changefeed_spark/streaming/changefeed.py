@@ -16,10 +16,11 @@ Semantics (docs/changefeed-semantics.md):
 - feed: every key whose aggregate changed appends an
   {old_count,new_count,old_sum,new_sum,batch_id} row to a changelog
   — the {old_val,new_val} shape of classic changefeeds.
-- durability: the checkpoint lives under the runner's root next to
-  the state, so a RESTARTED runner (same root) resumes from the
-  committed source offsets instead of replaying every chunk onto the
-  recovered state.
+- durability: a RESTARTED runner (same root) resumes instead of
+  re-merging what it committed. A replay (run()) resumes from its
+  Spark checkpoint under the root. A live feed (start_live()) needs
+  none: its batch id is its file's sequence number, and the worker
+  commits every live file above the CURRENT version.
 
 Scale notes: for every key (a 5-value event_type rollup or a per-user
 feed alike) state is the hash-bucketed MVCC store (state_store.py),
@@ -40,18 +41,22 @@ unchanged. Both sides of the gate are tested for equivalence
 from __future__ import annotations
 
 import os
-from ..tmputil import scratch_dir
+import threading
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tmputil import scratch_dir
 from .replay import (
-    LIVE_TRIGGER,
+    LIVE_MARK,
     build_replay_chunks,
     drop_live_file,
     fresh_sink_name,
+    guard_not_live_fed,
     guard_not_phase_fed,
+    live_file_name,
+    read_events_file,
     read_events_stream,
     streaming_shuffle,
 )
@@ -112,10 +117,12 @@ class ChangefeedRunner:
                  root: str | None = None, filter_sql: str | None = None,
                  state_buckets: int | None = None):
         """`root`: pass a previous runner's root to RESTART from its
-        durable state — the pointer file names the current version
-        and the checkpoint under root resumes from committed offsets
-        (crash-recovery semantics; tested in tests/test_streaming.py).
-        A root whose pointer is not a bucketed-store version raises.
+        durable state — the CURRENT pointer names the committed
+        version; a replay resumes from the checkpoint under root, a
+        live feed from the live file after CURRENT (crash-recovery
+        semantics; tested in tests/test_streaming.py and
+        tests/test_live_worker.py). A root whose pointer is not a
+        bucketed-store version raises.
         `filter_sql`: SQL predicate over the CDC payload columns
         (e.g. "event_type = 'purchase'") — the standing query
         becomes a FILTERED aggregate; the predicate runs before the
@@ -150,10 +157,13 @@ class ChangefeedRunner:
         # push-delivery subscribers (streaming/push.py); the lock
         # serializes live pushes against subscription catch-up so
         # every subscriber sees batch ids strictly increasing
-        import threading
-
         self._subscribers: list = []
         self._sub_lock = threading.Lock()
+        # the live worker (start_live) and the first error it hit
+        self._live_thread: threading.Thread | None = None
+        self._live_stop = threading.Event()
+        self._live_wake = threading.Event()
+        self._live_error: Exception | None = None
 
     def _current_state_df(self) -> DataFrame | None:
         b = self._ptr.batch()
@@ -439,6 +449,7 @@ class ChangefeedRunner:
 
     def run(self, n_chunks: int | None = None) -> None:
         guard_not_phase_fed(self.root)
+        guard_not_live_fed(self.root)
         chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
         env = cdc_envelope(read_events_stream(self.spark, chunks))
         with streaming_shuffle(self.spark):
@@ -452,42 +463,91 @@ class ChangefeedRunner:
             )
             q.awaitTermination()
 
-    def start_live(self, source_dir: str | None = None,
-                   processing_time: str = LIVE_TRIGGER):
+    def start_live(self, source_dir: str | None = None) -> str:
         """Continuous subscription mode — the namesake behavior a
         replay-and-terminate run() lacks: the standing query keeps
-        running with a ProcessingTime trigger over a LIVE source
-        directory, merging new change files as they arrive, until
-        stop_live(). Consumers follow the delta log incrementally via
-        Feed.cursor() (api.py) — the resume-token/cursor surface of
-        classic changefeed clients. Returns the live source dir."""
+        merging change files as they land in a LIVE source directory,
+        until stop_live(). Consumers follow the delta log via
+        Feed.cursor() (api.py) or push (subscribe()).
+
+        The runner owns the batch sequence. One worker thread commits
+        `live-<seq>.parquet` in order, with batch id = seq, each file
+        as one batch read through the same _merge_batch as a replay
+        (one Spark job below the fold gate); ingest() wakes it, and an
+        idle feed waits on an event without polling. It starts at the
+        file after CURRENT (0 on a fresh root), so files ingested
+        before start_live(), left pending by stop_live(), or landed
+        before a crash commit now. It stops at its first error, which
+        the next ingest() and stop_live() raise. Returns the live
+        source dir."""
+        # the reverse of guard_not_live_fed
+        if os.path.exists(self.ckpt):
+            raise RuntimeError(
+                f"changefeed root {self.root} was fed by run() or "
+                "run_phase(); start_live() would reuse its batch ids — "
+                "use a fresh root")
+        if self._live_thread is not None:
+            raise RuntimeError(f"changefeed {self.root} is already live")
         self.source_dir = source_dir or scratch_dir(
             prefix="dbrcf-live-src-"
         )
-        env = cdc_envelope(read_events_stream(self.spark, self.source_dir))
-        with streaming_shuffle(self.spark):
-            # shuffle conf is captured at query start; restored after
-            self._live_query = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(processingTime=processing_time)
-                .queryName(fresh_sink_name("changefeed_live"))
-                .start()
-            )
+        open(os.path.join(self.root, LIVE_MARK), "a").close()
+        self._live_error = None
+        self._live_stop.clear()
+        self._live_thread = threading.Thread(
+            target=self._live_loop, name=f"changefeed-live-{self.root}",
+            daemon=True)
+        self._live_thread.start()
         return self.source_dir
+
+    def _live_loop(self) -> None:
+        base = self._ptr.batch()
+        seq = 0 if base is None else base + 1
+        while True:
+            # cleared before the checks, so a wake-up that lands
+            # after them still ends the wait below
+            self._live_wake.clear()
+            if self._live_stop.is_set():
+                return
+            path = os.path.join(self.source_dir, live_file_name(seq))
+            if not os.path.exists(path):
+                self._live_wake.wait()
+                continue
+            try:
+                self._merge_batch(
+                    cdc_envelope(read_events_file(self.spark, path)), seq)
+            except Exception as e:
+                self._live_error = RuntimeError(
+                    f"changefeed {self.root}: live batch {seq} "
+                    f"({path}) failed: {e!r}")
+                self._live_error.__cause__ = e
+                return
+            seq += 1
+
+    def _raise_live_error(self) -> None:
+        if self._live_error is not None:
+            raise self._live_error
 
     def ingest(self, parquet_file: str) -> None:
         """Drop one change file into the live source dir (producer
-        side of the feed). File names are sequenced so the file
-        source processes them in ingest order."""
+        side of the feed) as the next `live-<seq>.parquet`, and wake
+        the live worker if one runs. Raises the worker's error, if it
+        stopped on one, without dropping the file."""
+        self._raise_live_error()
         drop_live_file(self.source_dir, parquet_file)
+        self._live_wake.set()
 
     def stop_live(self) -> None:
-        q = getattr(self, "_live_query", None)
-        if q is not None and q.isActive:
-            q.stop()
-            q.awaitTermination()
+        """Stop the live worker after the batch it is committing, if
+        any; files still pending stay in the source dir. Raises the
+        error the worker stopped on, if it did."""
+        t = self._live_thread
+        if t is not None:
+            self._live_stop.set()
+            self._live_wake.set()
+            t.join()
+            self._live_thread = None
+        self._raise_live_error()
 
     def state(self) -> DataFrame:
         df = self._current_state_df()
@@ -598,8 +658,6 @@ class UpsertChangefeedRunner:
             self.spark, self.state_root, self._STATE_DDL, "user_id"
         )
         self._ptr = VersionPointer(self.root, self._store)
-        import threading
-
         self._subscribers: list = []
         self._sub_lock = threading.Lock()
         # driver-path state; LWW replays are inherently idempotent

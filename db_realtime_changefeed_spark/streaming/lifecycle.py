@@ -45,6 +45,7 @@ from .changefeed import cdc_envelope
 from .replay import (
     build_replay_chunks,
     fresh_sink_name,
+    guard_not_live_fed,
     guard_not_phase_fed,
     read_events_stream,
     streaming_shuffle,
@@ -76,6 +77,7 @@ def run_phase(runner, files: list[str]) -> None:
             "this runner was fed via run(); run_phase() would "
             "re-deliver the same events from a different path — "
             "use a fresh runner root")
+    guard_not_live_fed(runner.root)
     os.makedirs(src, exist_ok=True)
     for f in files:
         dst = os.path.join(src, os.path.basename(f))

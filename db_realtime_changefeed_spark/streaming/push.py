@@ -1,13 +1,17 @@
 """Push delivery for changefeeds — the subscriber side of the
 namesake: instead of polling the delta log (api.Cursor.poll), a
 subscriber registers a callback and every committed batch's delta
-rows are PUSHED to it from the foreachBatch commit path, in batch
-order, exactly once from the subscriber's point of view.
+rows are PUSHED to it from the commit path (a replay's foreachBatch,
+or a live changefeed's worker thread), in batch order, exactly once
+from the subscriber's point of view.
 
 Exactly-once across retries: the upstream is at-least-once (a
 replayed batch re-merges idempotently and re-pushes), so each
-subscriber keeps a durable ACK high-water mark (one small file under
-the runner root, written atomically after the callback returns). A
+subscriber keeps a durable ACK high-water mark under the runner root,
+swapped atomically after the callback returns: a symlink
+`subscriber-<name>.ack` whose target is the batch id
+(statefs.put_pointer; an ack written as a regular file by older
+runners still reads). A
 re-delivered batch id at or below the ack mark is dropped before the
 callback sees it; a crash between callback and ack re-delivers (the
 callback's effect must be idempotent per batch_id, which is the
@@ -29,10 +33,12 @@ from __future__ import annotations
 import glob
 import os
 
+from .statefs import STATE_FS
+
 
 class Subscriber:
     """A named push consumer of one runner's delta log. The name
-    keys the durable ack file, so a restarted subscriber with the
+    keys the durable ack pointer, so a restarted subscriber with the
     same name resumes where its predecessor acked."""
 
     def __init__(self, runner, callback, name: str = "default"):
@@ -46,8 +52,8 @@ class Subscriber:
 
     def _read_ack(self) -> int:
         try:
-            with open(self._ack_path) as f:
-                return int(f.read().strip())
+            v = STATE_FS.read_pointer(self._ack_path)
+            return -1 if v is None else int(v)
         except (OSError, ValueError):
             return -1
 
@@ -63,10 +69,7 @@ class Subscriber:
         if batch_id <= self._acked:
             return False
         self._cb(batch_id, rows)
-        tmp = self._ack_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, self._ack_path)
+        STATE_FS.put_pointer(self._ack_path, str(batch_id))
         self._acked = batch_id
         return True
 

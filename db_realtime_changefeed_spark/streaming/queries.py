@@ -1043,10 +1043,11 @@ def changefeed_multi(spark, sf_dir):
 )
 def changefeed_live(spark, sf_dir):
     """§2.I7 continuous mode — the namesake's subscribe-and-keep-
-    receiving behavior: the standing query runs with a ProcessingTime
-    trigger (NOT a terminating replay); a producer ingests change
-    files into the live source while it runs; a Cursor consumes the
-    delta batches incrementally (tests assert multi-poll delivery).
+    receiving behavior: the standing query keeps running (NOT a
+    terminating replay), its worker committing each change file as it
+    lands; a producer ingests change files into the live source while
+    it runs; a Cursor consumes the delta batches incrementally (tests
+    assert multi-poll delivery).
     After all fixture chunks are ingested and absorbed, the live
     query is stopped and the final state must equal the batch
     aggregate — same oracle as changefeed_core, reached through the

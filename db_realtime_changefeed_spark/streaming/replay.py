@@ -18,8 +18,10 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 import shutil
 import tempfile
+import threading
 
 from ..tmputil import scratch_dir
 import time
@@ -140,59 +142,83 @@ def _write_chunk(tbl, out: str, idx: int) -> None:
     os.utime(dst, (time.time(), 1_700_000_000.0 + idx))
 
 
-#: ProcessingTime trigger of every live (start_live) query. It sits
-#: above a live per-user batch's cost (about 0.2 s on an idle 4-core
-#: host, up to about 0.43 s with three of its cores busy), so a
-#: producer that keeps up gets one batch per tick and the same latency
-#: on a quiet host and a loaded one; a batch that runs longer starts
-#: the next one as soon as it ends. An idle feed lists its source dir
-#: once per tick (docs/changefeed-semantics.md, "Continuous
-#: delivery").
+#: ProcessingTime trigger of the live (start_live) queries of the
+#: table and view feeds: the views, generic-view and multitable
+#: runners. It sits above a live batch's cost (about 0.2 s on an idle
+#: 4-core host, up to about 0.43 s with three of its cores busy), so
+#: a producer that keeps up gets one batch per tick and the same
+#: latency on a quiet host and a loaded one; a batch that runs longer
+#: starts the next one as soon as it ends. An idle feed lists its
+#: source dir once per tick. ChangefeedRunner has no trigger: its
+#: worker commits each file as it lands (docs/changefeed-semantics.md,
+#: "Continuous delivery").
 LIVE_TRIGGER = "400 milliseconds"
+
+_LIVE_NAME = re.compile(r"live-(\d+)\.parquet")
+#: serializes drop_live_file within the process, so two concurrent
+#: ingests never pick the same sequence number or temp file
+_LIVE_DROP_LOCK = threading.Lock()
+
+
+def live_file_name(seq: int) -> str:
+    """The name of the live change file with sequence number `seq`."""
+    return f"live-{seq:06d}.parquet"
 
 
 def drop_live_file(source_dir: str, src) -> None:
     """Producer side of a live file-stream source: put one change file
     (`src`, a parquet path to copy or a pyarrow table to write) into
-    `source_dir` as `live-<seq>.parquet`, where seq counts the files
-    already there, so names and mtimes sort in ingest order, also
-    across a restart over the same dir. The file is written under a
-    dot-prefixed temp name, which Spark's file listing skips, and
-    renamed into place, so a poll never reads a half-written file."""
+    `source_dir` as `live-<seq>.parquet`, where seq is one above the
+    highest live-<n> already there (0 in an empty dir), so names and
+    mtimes sort in ingest order, also across a restart over the same
+    dir; other files in the dir do not shift the sequence. The whole
+    drop holds a module lock, so concurrent drops in one process get
+    distinct names and land in sequence order. The file is written
+    under a dot-prefixed temp name, which Spark's file listing skips,
+    and renamed into place, so a reader never sees a half-written
+    file."""
     import pyarrow.parquet as pq
 
-    seq = sum(f.endswith(".parquet") for f in os.listdir(source_dir))
-    name = f"live-{seq:06d}.parquet"
-    tmp = os.path.join(source_dir, f".{name}.tmp")
-    if isinstance(src, str):
-        shutil.copyfile(src, tmp)
-    else:
-        pq.write_table(src, tmp)
-    # the mtime is set before the rename: a poll that listed the file
-    # with its write time would take it as older than the files seen
-    # so far and skip it for good
-    os.utime(tmp, (time.time(), 1_800_000_000.0 + seq))
-    os.replace(tmp, os.path.join(source_dir, name))
+    with _LIVE_DROP_LOCK:
+        seqs = [int(m.group(1)) for m in map(_LIVE_NAME.fullmatch,
+                                             os.listdir(source_dir)) if m]
+        seq = max(seqs, default=-1) + 1
+        name = live_file_name(seq)
+        tmp = os.path.join(source_dir, f".{name}.tmp")
+        if isinstance(src, str):
+            shutil.copyfile(src, tmp)
+        else:
+            pq.write_table(src, tmp)
+        # the mtime is set before the rename: a poll that listed the
+        # file with its write time would take it as older than the
+        # files seen so far and skip it for good
+        os.utime(tmp, (time.time(), 1_800_000_000.0 + seq))
+        os.replace(tmp, os.path.join(source_dir, name))
+
+
+def _read_events(reader, path: str) -> DataFrame:
+    """`reader` (a batch or stream reader) over event files with the
+    same physical-layout sniffing the batch catalog applies (chunk and
+    live files preserve the source table's timestamp type
+    bit-for-bit)."""
+    if parquet_ts_unit(path) == "timestamp[ns]":
+        return ns_to_us(reader.schema(EVENTS_NS_SCHEMA).parquet(path))
+    return reader.schema(SCHEMAS["events"]).parquet(path)
 
 
 def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """readStream over event chunks with the same physical-layout
-    sniffing the batch catalog applies (chunk files preserve the
-    source table's timestamp type bit-for-bit)."""
-    if parquet_ts_unit(path) == "timestamp[ns]":
-        df = (
-            spark.readStream.schema(EVENTS_NS_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
-        return ns_to_us(df)
-    return (
-        spark.readStream.schema(SCHEMAS["events"])
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+    """readStream over event chunks, `max_files_per_trigger` files per
+    micro-batch."""
+    return _read_events(
+        spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger),
+        path)
+
+
+def read_events_file(spark: SparkSession, path: str) -> DataFrame:
+    """Batch read of one event file (a live changefeed's batch)."""
+    return _read_events(spark.read, path)
 
 
 @contextlib.contextmanager
@@ -265,6 +291,22 @@ def guard_not_phase_fed(root: str) -> None:
             "this runner was fed via run_phase(); run() would "
             "re-deliver the same events from a different path — "
             "use a fresh runner root")
+
+
+#: a file under a changefeed root that start_live() fed
+LIVE_MARK = "LIVE"
+
+
+def guard_not_live_fed(root: str) -> None:
+    """Refuse a replay (run(), run_phase()) on a changefeed root that
+    start_live() fed: a live feed numbers its batches by file sequence
+    and a replay by its checkpoint, both from 0, so the replay's batch
+    0 would rewind onto the live feed's state. (start_live() holds the
+    reverse guard.)"""
+    if os.path.exists(os.path.join(root, LIVE_MARK)):
+        raise RuntimeError(
+            f"changefeed root {root} was fed live; a replay would "
+            "reuse its batch ids — use a fresh root")
 
 
 _SINK_SEQ = [0]

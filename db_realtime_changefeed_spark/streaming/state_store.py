@@ -25,9 +25,12 @@ overwrite their own bucket dirs + manifest — idempotent), and GC
 Bucketing uses pmod(xxhash64(key), N) so any key type works and the
 bucket is derivable from the key — it is never stored in the data.
 
-Which version is committed is a runner's `CURRENT` file beside its
-state root, holding `v<batch>` (VersionPointer): every keyed runner
-reads, flips and rewinds it through that one class.
+Which version is committed is a runner's `CURRENT` pointer beside
+its state root: a symlink whose target is `v<batch>` (VersionPointer).
+The target names a version, not a file, so it dangles by design; a
+regular file holding `v<batch>`, as older runners wrote it, still
+reads. Every keyed runner reads, flips and rewinds it through that
+one class.
 """
 
 from __future__ import annotations
@@ -337,10 +340,11 @@ class BucketedMvccState:
 
 
 class VersionPointer:
-    """A runner's CURRENT file: `v<batch>`, naming the store version
-    its last committed batch published. A runner flips it LAST in
-    every commit, after publish(), so whatever it names has its
-    manifest and every bucket dir in place."""
+    """A runner's CURRENT pointer: `v<batch>`, naming the store version
+    its last committed batch published, kept as a symlink with that
+    target (statefs.put_pointer). A runner flips it LAST in every
+    commit, after publish(), so whatever it names has its manifest and
+    every bucket dir in place."""
 
     def __init__(self, root: str, store: BucketedMvccState):
         self.root = root
@@ -352,10 +356,11 @@ class VersionPointer:
         CURRENT that is not `v<digits>`, or that names a version the
         store has no manifest for (a root written in an older state
         layout), raises instead of reading as empty state."""
-        if not os.path.exists(self.path):
+        from .statefs import STATE_FS
+
+        v = STATE_FS.read_pointer(self.path)
+        if v is None:
             return None
-        with open(self.path) as f:
-            v = f.read().strip()
         m = re.fullmatch(r"v(\d+)", v)
         if m is None or not self.store.has_version(int(m.group(1))):
             raise RuntimeError(
@@ -366,10 +371,9 @@ class VersionPointer:
         return int(m.group(1))
 
     def flip(self, batch_id: int) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"v{batch_id}")
-        os.replace(tmp, self.path)
+        from .statefs import STATE_FS
+
+        STATE_FS.put_pointer(self.path, f"v{batch_id}")
 
     def rewind_before(self, batch_id: int) -> None:
         """At-least-once replay support: a re-delivered batch must
@@ -383,7 +387,7 @@ class VersionPointer:
         (or the empty state) would corrupt the state without any
         error."""
         if batch_id == 0:
-            if os.path.exists(self.path):
+            if os.path.lexists(self.path):
                 os.remove(self.path)
             return
         b = batch_id - 1

@@ -2,7 +2,7 @@
 small-object operations (r14; VERDICT r13 item 9).
 
 The bucketed MVCC store keeps data in parquet and commits via tiny
-manifests — an Iceberg/Delta-shaped layout. Three operations read
+manifests — an Iceberg/Delta-shaped layout. These operations read
 or write that layout from the driver without a Spark job:
 
 * ``parquet_row_counts`` — per-file row counts from parquet FOOTERS
@@ -14,6 +14,9 @@ or write that layout from the driver without a Spark job:
   file of driver-resident rows (top-k / cohort deltas, and the state
   buckets and changelog of a changefeed batch below the driver-fold
   gate).
+* ``put_pointer`` / ``read_pointer`` — swap and read a one-value
+  pointer (a runner's ``CURRENT`` version, a subscriber's ack mark),
+  kept as a symlink whose target is the value.
 
 This seam names them as an interface so the 100 TB deployment
 story is honest: on an object store the SAME calls are,
@@ -100,6 +103,38 @@ class LocalStateFS:
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)
             raise
+
+    def put_pointer(self, path: str, value: str) -> None:
+        """Set the small pointer at `path` (a runner's CURRENT, a
+        subscriber's ack) to `value`: a symlink whose target IS the
+        value, made under a temp name and renamed over `path`. The
+        target need not exist, so readers use read_pointer, never
+        os.path.exists. A symlink has no data blocks, so the rename
+        does not make ext4 flush a just-written file first, as
+        replacing a small regular file does (auto_da_alloc): 0.01 ms
+        instead of about 59 ms median on an ext4 root. The contract is
+        unchanged: atomic against a process crash through the rename,
+        no fsync. Object store: one PUT of the value."""
+        tmp = path + ".tmp"
+        try:  # left by a swap that crashed before its rename
+            os.remove(tmp)
+        except FileNotFoundError:
+            pass
+        os.symlink(value, tmp)
+        os.replace(tmp, path)
+
+    def read_pointer(self, path: str) -> "str | None":
+        """The value put_pointer last set at `path`, or None when there
+        is none. A regular file there (how pointers were written
+        before they became symlinks) reads as its stripped text.
+        Object store: one GET."""
+        try:
+            return os.readlink(path)
+        except FileNotFoundError:
+            return None
+        except OSError:  # EINVAL: a regular file, not a symlink
+            with open(path) as f:
+                return f.read().strip()
 
 
 #: the swap point: deployments with an object-store state root

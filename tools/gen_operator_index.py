@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Generate docs/OPERATORS.md: the full registered-query inventory —
 name, defining module:line, oracle status, one-line summary (first
-docstring sentence) — in STABLE registration order. Regenerate with
-`python tools/gen_operator_index.py` after adding queries; the
-companion test pins the file as current."""
+docstring sentence) — ordered by defining module and line, so the
+file does not depend on which query module a process imported first.
+Regenerate with `python tools/gen_operator_index.py` after adding
+queries; the companion test pins the file as current."""
 
 from __future__ import annotations
 
@@ -15,7 +16,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def build() -> str:
-    os.environ["SPARK_GRAFT_STABLE_ORDER"] = "1"
     from db_realtime_changefeed_spark.queries import (
         ORACLES,
         QUERIES,
@@ -34,9 +34,11 @@ def build() -> str:
         "| # | query | source | oracle | summary |",
         "|---|---|---|---|---|",
     ]
-    for i, (name, fn) in enumerate(QUERIES.items()):
-        src = os.path.relpath(inspect.getsourcefile(fn), root)
-        line = inspect.getsourcelines(fn)[1]
+    entries = sorted(
+        (os.path.relpath(inspect.getsourcefile(fn), root),
+         inspect.getsourcelines(fn)[1], name, fn)
+        for name, fn in QUERIES.items())
+    for i, (src, line, name, fn) in enumerate(entries):
         doc = (inspect.getdoc(fn) or "").split(". ")[0]
         doc = " ".join(doc.split())
         if len(doc) > 140:
