@@ -74,10 +74,16 @@ class Cursor:
         return b
 
     def poll(self) -> list:
-        """All not-yet-delivered delta rows, ordered by batch."""
+        """All not-yet-delivered delta rows of committed batches,
+        ordered by batch: a log segment above the runner's committed
+        batch (its commit unfinished or crashed before the pointer
+        flip) is not delivered."""
+        committed = self._runner.committed_batch()
+        if committed is None:
+            return []
         rows = (
             self._runner.log()
-            .where(F.col("batch_id") >= self._next_batch)
+            .where(F.col("batch_id").between(self._next_batch, committed))
             .orderBy("batch_id")
             .collect()
         )
@@ -282,8 +288,14 @@ class TableFeed:
         per-batch high-water marks."""
         return self._runner.batch_for_ts(ts)
 
+    def committed_batch(self) -> int | None:
+        """The runner's last committed batch id (Cursor.poll's upper
+        bound; the table log is gated to it already)."""
+        return self._runner._ptr.batch()
+
     def cursor(self) -> Cursor:
-        c = Cursor(self)  # Cursor needs .log()/.batch_for_ts()
+        # Cursor needs .log()/.batch_for_ts()/.committed_batch()
+        c = Cursor(self)
         if self._cursor_start:
             c.seek(self._cursor_start)
         return c

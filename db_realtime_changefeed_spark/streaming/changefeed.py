@@ -169,6 +169,13 @@ class ChangefeedRunner:
         b = self._ptr.batch()
         return None if b is None else self._store.df_at(b)
 
+    def committed_batch(self) -> int | None:
+        """The last committed batch id (CURRENT), None before the
+        first commit. A changelog dir above it belongs to a batch
+        whose commit has not finished, or crashed before the pointer
+        flip; push catch-up and Cursor.poll stop here."""
+        return self._ptr.batch()
+
     # ---- the exact driver-side merge ----
     def _fold_delta(self, state: dict, delta_rows, batch_id: int):
         """Fold one batch's delta rows into `state` ({key: (cnt,
@@ -392,15 +399,22 @@ class ChangefeedRunner:
     def subscribe(self, callback, name: str = "default"):
         """Register a push subscriber: `callback(batch_id, rows)` is
         invoked once per committed batch with that batch's {old,new}
-        delta rows (list of dicts), in batch order. History the
-        subscriber has not acked is delivered immediately (catch-up),
-        then live batches push as they commit. Returns the
+        delta rows (list of dicts), in batch order. Committed history
+        the subscriber has not acked is delivered immediately
+        (catch-up, up to CURRENT: a log dir above it is a batch not yet
+        committed), then live batches push as they commit. Returns the
         Subscriber (its durable ack file keys resume-on-restart)."""
         from .push import Subscriber, log_batches, read_batch_log
 
         sub = Subscriber(self, callback, name)
         with self._sub_lock:
+            # read under the lock, as _push delivers under it: a batch
+            # committing now is caught up here or pushed, and a double
+            # delivery is dropped by the ack
+            committed = self.committed_batch()
             for b in log_batches(self.log_dir):
+                if committed is None or b > committed:
+                    break
                 if b > sub.acked:
                     sub.deliver(b, read_batch_log(self.log_dir, b))
             self._subscribers.append(sub)
@@ -669,6 +683,7 @@ class UpsertChangefeedRunner:
         self._last_batch = self._ptr.batch()
 
     _current_state_df = ChangefeedRunner._current_state_df
+    committed_batch = ChangefeedRunner.committed_batch
     versions = ChangefeedRunner.versions
     _push = ChangefeedRunner._push
     subscribe = ChangefeedRunner.subscribe

@@ -35,16 +35,29 @@ delta, so adding views widens per-batch work by O(|delta|) each,
 never re-reads the source.  Squash delivery (RethinkDB
 ``changes(squash=True)``) is a pure derivation over the emitted
 delta log — see view_queries.changefeed_squash.
+
+Where a batch merges is ChangefeedRunner's one gate
+(changefeed._DRIVER_FOLD_ROWS).  A batch whose raw rows, plus the
+base and view-store rows it reads, stay below it folds on the
+driver: ONE Spark job collects the batch's events and the base's
+rows as Arrow, each carrying every value only Spark computes (the
+five stores' buckets, md5 of the key, and the value as
+decimal(18,6)); winners, the LWW merge, the {old,new} delta and the
+four view folds then run over pyarrow tables and commit through
+stage_tables() and the same ordered publish().  Larger batches, and
+batches with a NULL key, take the executor-side merge and folds.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..tmputil import scratch_dir
-from .changefeed import cdc_envelope
+from . import changefeed
+from .changefeed import _has_parquet, cdc_envelope
 from .replay import (
     LIVE_TRIGGER,
     build_replay_chunks,
@@ -56,13 +69,29 @@ from .replay import (
 from .state_store import BucketedMvccState
 
 _DEC = "decimal(18,6)"
+#: the LWW order of one user's events: the executor path's
+#: max(struct(ts, event_id, value, event_type, is_del))
+_LWW_ORDER = ("ts", "event_id", "value", "event_type", "deleted")
+#: the Spark-computed columns each side of a delta row (the old base
+#: row, the winner) carries into the driver fold's view folds
+_SIDE_COLS = ("__ab", "__sb", "__ib", "__dec")
 
 
-def _has_parquet(root: str) -> bool:
-    for base, _dirs, files in os.walk(root):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+def _populated_window(counts: dict, k: int,
+                      descending: bool = False) -> list[int]:
+    """The fewest populated buckets, in bucket order (`descending`
+    for the top-k's value bands), whose rows together reach k — every
+    bucket past them is strictly worse in that order."""
+    sel: list[int] = []
+    cum = 0
+    for b in sorted(counts, reverse=descending):
+        if counts[b] == 0:
+            continue
+        sel.append(b)
+        cum += counts[b]
+        if cum >= k:
+            break
+    return sel
 
 
 class RangeBucketedIndex(BucketedMvccState):
@@ -121,6 +150,28 @@ def _tiny_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
 _PA_TYPES = None
 
 
+def _pa_schema(ddl: str):
+    """The pyarrow schema whose parquet files Spark reads back under
+    `ddl`: timestamps as UTC-adjusted micros, decimal(18,6) as
+    decimal128(18,6), every field nullable."""
+    import pyarrow as pa
+
+    global _PA_TYPES
+    if _PA_TYPES is None:
+        _PA_TYPES = {
+            "long": pa.int64(), "bigint": pa.int64(),
+            "double": pa.float64(), "string": pa.string(),
+            "int": pa.int32(), "boolean": pa.bool_(),
+            "timestamp": pa.timestamp("us", tz="UTC"),
+            "decimal(18,6)": pa.decimal128(18, 6),
+        }
+    fields = []
+    for part in re.split(r",(?![^(]*\))", ddl):
+        name, typ = part.strip().split(" ", 1)
+        fields.append(pa.field(name, _PA_TYPES[typ.strip().lower()]))
+    return pa.schema(fields)
+
+
 def _tiny_write(rows: list, ddl: str, path: str) -> None:
     """Write O(k) driver-resident rows as one parquet file with
     pyarrow — the durable-log twin of _tiny_df that skips the Spark
@@ -140,21 +191,10 @@ def _tiny_write(rows: list, ddl: str, path: str) -> None:
 
     from .statefs import STATE_FS
 
-    global _PA_TYPES
-    if _PA_TYPES is None:
-        _PA_TYPES = {
-            "long": pa.int64(), "bigint": pa.int64(),
-            "double": pa.float64(), "string": pa.string(),
-            "int": pa.int32(), "boolean": pa.bool_(),
-        }
-    fields = []
-    for part in ddl.split(","):
-        name, typ = part.strip().rsplit(" ", 1)
-        fields.append(pa.field(name, _PA_TYPES[typ.lower()]))
-    schema = pa.schema(fields)
+    schema = _pa_schema(ddl)
     cols = [
         pa.array([r[i] for r in rows], type=f.type)
-        for i, f in enumerate(fields)
+        for i, f in enumerate(schema)
     ]
     STATE_FS.put_small_parquet_dir(
         pa.Table.from_arrays(cols, schema=schema), path)
@@ -176,6 +216,165 @@ class HashOrderedIndex(BucketedMvccState):
         return F.conv(
             F.substring(F.md5(c.cast("string")), 1, 1), 16, 10
         ).cast("int")
+
+
+# ---- the driver fold's pyarrow steps (MaintainedViewsRunner) ----
+def _ids(*cols) -> list[int]:
+    """The distinct non-NULL values of `cols`, sorted (touched
+    buckets)."""
+    return sorted({v for c in cols for v in c.to_pylist()
+                   if v is not None})
+
+
+def _bucketed(t, bucket):
+    """`t` with every row in `bucket` (`__b`, int64)."""
+    import pyarrow as pa
+
+    return t.append_column(
+        "__b", pa.repeat(pa.scalar(bucket, pa.int64()), t.num_rows))
+
+
+def _last_per_user(t):
+    """The batch's winners: the last event per user in LWW order,
+    after one vectorised sort (NULLs first, as Spark orders the
+    fields of the executor path's struct max)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if t.num_rows == 0:
+        return t
+    t = t.take(pc.sort_indices(
+        t, sort_keys=[(c, "ascending") for c in ("user_id",) + _LWW_ORDER],
+        null_placement="at_start"))
+    u = t["user_id"].combine_chunks()
+    return t.filter(pa.concat_arrays(
+        [pc.not_equal(u[1:], u[:-1]), pa.array([True])]))
+
+
+def _held(store, base: int | None, touched: list[int], schema) -> list:
+    """A store's rows of the `touched` buckets at version `base` (none
+    before the first batch), in `schema`, with their bucket as
+    `__b`."""
+    if base is None:
+        return []
+    return [_bucketed(t.select(schema.names).cast(schema), b)
+            for b, t in store.read_buckets(base, touched).items()]
+
+
+def _signed(rows, sign: int, cols: dict):
+    """One side of the retraction algebra over the delta `rows`: the
+    side's columns renamed per `cols`, cnt = `sign`, and any sum_value
+    carrying that sign."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = {name: rows[c] for name, c in cols.items()}
+    out["cnt"] = pa.repeat(pa.scalar(sign, pa.int64()), rows.num_rows)
+    if sign < 0 and "sum_value" in out:
+        out["sum_value"] = pc.negate(out["sum_value"])
+    return pa.table(out)
+
+
+def _lww_merge(w, old):
+    """The executor path's full-outer LWW merge over Arrow: winners
+    `w` against the base rows `old` of the buckets they touch, with
+    its three-valued logic (a NULL comparison never wins). Returns
+    (the touched buckets' new rows with `__b`, the emitted {old,new}
+    delta with each side's Spark-computed columns: `__o*` of the old
+    row, `__n*` of the winner, and the user's `__hb` and `__h`)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    o = old.take(pc.index_in(w["user_id"], value_set=old["user_id"]))
+    keep = old.filter(pc.invert(
+        pc.is_in(old["user_id"], value_set=w["user_id"])))
+    has_o = pc.is_valid(o["event_id"])
+    newer = pc.or_kleene(
+        pc.greater(w["ts"], o["ts"]),
+        pc.and_kleene(pc.equal(w["ts"], o["ts"]),
+                      pc.greater(w["event_id"], o["event_id"])))
+    wins = pc.fill_null(pc.and_kleene(
+        pc.is_valid(w["event_id"]), pc.or_kleene(pc.invert(has_o), newer)),
+        False)
+    is_del = pc.and_(wins, w["deleted"])
+    o_del = pc.fill_null(o["deleted"], False)
+    old_vis = pc.and_(has_o, pc.invert(o_del))
+    new_vis = pc.invert(is_del)
+    emit = pc.and_(wins, pc.invert(pc.and_(is_del, pc.invert(old_vis))))
+
+    def pick(c):
+        return pc.if_else(wins, w[c], o[c])
+
+    def only(cond, col):
+        return pc.if_else(cond, col, pa.scalar(None, col.type))
+
+    cols = ("user_id", "ts", "event_id", "value", "event_type")
+    base_rows = pa.concat_tables([
+        pa.table({**{c: keep[c] for c in cols},
+                  "deleted": pc.fill_null(keep["deleted"], False),
+                  "__b": keep["__bb"]}),
+        pa.table({"user_id": w["user_id"],
+                  **{c: pick(c) for c in cols[1:]},
+                  "deleted": pc.if_else(wins, is_del, o_del),
+                  "__b": w["__bb"]}),
+    ])
+    delta = pa.table({
+        "user_id": w["user_id"],
+        "old_value": only(old_vis, o["value"]),
+        "new_value": only(new_vis, w["value"]),
+        "old_event_id": only(old_vis, o["event_id"]),
+        "new_event_id": only(new_vis, w["event_id"]),
+        "old_type": only(old_vis, o["event_type"]),
+        "new_type": only(new_vis, w["event_type"]),
+        **{f"__o{c[2:]}": o[c] for c in _SIDE_COLS},
+        **{f"__n{c[2:]}": w[c] for c in _SIDE_COLS},
+        "__hb": w["__hb"], "__h": w["__h"],
+    }).filter(emit)
+    return base_rows, delta
+
+
+def _summed(parts: list, schema, keys: list[str]):
+    """Old store rows and ± contributions, summed per (keys, `__b`)
+    with groups whose cnt falls to 0 dropped — the executor path's
+    union + grouped sum."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    with_b = schema.append(pa.field("__b", pa.int64()))
+    t = pa.concat_tables([p.select(with_b.names).cast(with_b)
+                          for p in parts])
+    sums = [n for n in schema.names if n not in keys]
+    g = t.group_by(keys + ["__b"]).aggregate([(c, "sum") for c in sums])
+    g = g.rename_columns([n.removesuffix("_sum") for n in g.column_names])
+    return g.filter(pc.greater(g["cnt"], 0))
+
+
+def _replaced(parts: list, users, adds):
+    """Old index rows minus every delta user's, plus the delta's
+    visible new rows (`adds`) — the executor path's anti join +
+    union."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = adds.schema
+    kept = [p.filter(pc.invert(pc.is_in(p["user_id"], value_set=users)))
+            .select(schema.names) for p in parts]
+    adds = adds.set_column(schema.get_field_index("__b"), "__b",
+                           pc.cast(adds["__b"], pa.int64()))
+    return pa.concat_tables(
+        [k.cast(adds.schema) for k in kept] + [adds])
+
+
+def _split(t, schema) -> dict:
+    """{bucket: rows in the store's `schema`} of a fold's result — the
+    stage_tables() input."""
+    import pyarrow.compute as pc
+
+    return {
+        b: t.filter(pc.equal(t["__b"], b)).select(schema.names)
+        .cast(schema)
+        for b in _ids(t["__b"])
+    }
 
 
 class MaintainedViewsRunner:
@@ -274,8 +473,6 @@ class MaintainedViewsRunner:
         )
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        winners = self._winners(batch_df).persist()
-        touched = self._base.touched_buckets(winners, "user_id")
         # base = the PREVIOUS version, derived from batch_id (not from
         # mutable runner state) so a foreachBatch retry of batch N
         # re-merges against N-1 and every commit below overwrites its
@@ -290,6 +487,11 @@ class MaintainedViewsRunner:
                 f"v{batch_id - 1} is missing; retained: "
                 f"{self._base.versions()}"
             )
+        if self._fold_on_driver(batch_df, batch_id, base):
+            self._last_batch = batch_id
+            return
+        winners = self._winners(batch_df).persist()
+        touched = self._base.touched_buckets(winners, "user_id")
         if base is None:
             old = self.spark.createDataFrame([], self._STATE_DDL)
         else:
@@ -345,17 +547,7 @@ class MaintainedViewsRunner:
                 F.col("log_new_type").alias("new_type"),
                 F.lit(batch_id).cast("long").alias("batch_id"),
             )
-            # previous refresh memberships, taken ONLY when both
-            # caches sit exactly at batch-1 (a retry or restart
-            # leaves them stale → extras stay off → the refreshes
-            # fall back to reading the durable indexes)
-            tk_prev = sm_prev = None
-            if (self._topk_cache is not None
-                    and self._topk_cache[0] == batch_id - 1
-                    and self._sample_cache is not None
-                    and self._sample_cache[0] == batch_id - 1):
-                tk_prev = self._topk_cache[1]
-                sm_prev = self._sample_cache[1]
+            tk_prev, sm_prev = self._prev_memberships(batch_id)
             t_agg, t_sup, t_idx, t_hx, extras = self._fold_touched(
                 delta, tk_prev, sm_prev)
             base_new = merged.select(
@@ -402,26 +594,8 @@ class MaintainedViewsRunner:
             self._support.publish(batch_id, base, t_sup)
             self._index.publish(batch_id, base, t_idx)
             self._hashidx.publish(batch_id, base, t_hx)
-            # the two O(k) refreshes: incremental driver-side when
-            # the fused fold_touched job shipped provably-complete
-            # candidate sets (r13 — zero extra Spark jobs on the
-            # warm path), else read the DISJOINT published stores
-            # (range index / hash index) concurrently (guide §2.6)
-            cur_tk = cur_sm = None
-            if extras is not None:
-                cur_tk = self._inc_topk(tk_prev, extras)
-                cur_sm = self._inc_sample(sm_prev, extras)
-            if cur_tk is not None and cur_sm is not None:
-                self._refresh_topk(batch_id, cur_tk)
-                self._refresh_sample(batch_id, cur_sm)
-            else:
-                with ThreadPoolExecutor(max_workers=2) as ex:
-                    f_topk = ex.submit(
-                        self._refresh_topk, batch_id, cur_tk)
-                    f_smpl = ex.submit(
-                        self._refresh_sample, batch_id, cur_sm)
-                    f_topk.result()
-                    f_smpl.result()
+            self._refresh_memberships(batch_id, tk_prev, sm_prev,
+                                      extras)
             # the BASE publication is the batch's COMMIT POINT and
             # runs LAST: `_batches` (derived from base versions) then
             # implies every view fold for that batch is durable — a
@@ -434,6 +608,233 @@ class MaintainedViewsRunner:
             merged.unpersist()
             winners.unpersist()
         self._last_batch = batch_id
+
+    def _prev_memberships(self, batch_id: int):
+        """The previous refresh memberships (top-k rows, cohort
+        pairs), taken ONLY when both caches sit exactly at batch-1 (a
+        retry or restart leaves them stale → extras stay off → the
+        refreshes fall back to reading the durable indexes)."""
+        if (self._topk_cache is not None
+                and self._topk_cache[0] == batch_id - 1
+                and self._sample_cache is not None
+                and self._sample_cache[0] == batch_id - 1):
+            return self._topk_cache[1], self._sample_cache[1]
+        return None, None
+
+    def _refresh_memberships(self, batch_id: int, tk_prev, sm_prev,
+                             extras: dict | None,
+                             on_driver: bool = False) -> None:
+        """The two O(k) refreshes: incremental driver-side when the
+        batch shipped provably-complete candidate sets (`extras`; no
+        Spark job on the warm path), else read the DISJOINT published
+        stores (range index / hash index) — with read_buckets for a
+        batch folded on the driver, else as Spark reads run
+        concurrently (guide §2.6)."""
+        cur_tk = cur_sm = None
+        if extras is not None:
+            cur_tk = self._inc_topk(tk_prev, extras)
+            cur_sm = self._inc_sample(sm_prev, extras)
+        if on_driver:
+            self._refresh_topk(batch_id, cur_tk, self._topk_read)
+            self._refresh_sample(batch_id, cur_sm, self._sample_read)
+        elif cur_tk is not None and cur_sm is not None:
+            self._refresh_topk(batch_id, cur_tk)
+            self._refresh_sample(batch_id, cur_sm)
+        else:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=2) as ex:
+                f_topk = ex.submit(self._refresh_topk, batch_id, cur_tk)
+                f_smpl = ex.submit(self._refresh_sample, batch_id, cur_sm)
+                f_topk.result()
+                f_smpl.result()
+
+    # ---- driver-side fold of a batch below the gate ----
+    def _fold_rows(self, batch_df: DataFrame,
+                   base: int | None) -> DataFrame:
+        """The rows of the fold's one Spark job: the batch's events
+        and, with a previous version, every base row (`__old`), each
+        with the values only Spark computes — the base, agg, support,
+        range-index and hash-index buckets, md5 of the key, and the
+        value as decimal(18,6) with NULL as 0 (the contributions'
+        cast). The delete flag of an event is its `deleted`."""
+        is_del = (
+            (F.col("event_type") == F.lit(self.delete_on))
+            if self.delete_on is not None else F.lit(False)
+        )
+        cols = ["user_id", "ts", "event_id", "value", "event_type"]
+        rows = batch_df.select("after.*").select(
+            *cols, F.coalesce(is_del, F.lit(False)).alias("deleted"),
+            F.lit(False).alias("__old"))
+        if base is not None:
+            rows = rows.unionByName(self._base.df_at(base).select(
+                *cols, "deleted", F.lit(True).alias("__old")))
+        uid, etype, val = (F.col("user_id"), F.col("event_type"),
+                           F.col("value"))
+        return rows.select(
+            "*",
+            self._base.bucket_expr(uid).alias("__bb"),
+            self._agg.bucket_expr(etype).alias("__ab"),
+            self._support.bucket_expr(etype, val).alias("__sb"),
+            self._index.bucket_expr(val).alias("__ib"),
+            self._hashidx.bucket_expr(uid).alias("__hb"),
+            F.md5(uid.cast("string")).alias("__h"),
+            F.coalesce(val, F.lit(0.0)).cast(_DEC).alias("__dec"),
+        )
+
+    def _fold_on_driver(self, batch_df: DataFrame, batch_id: int,
+                        base: int | None) -> bool:
+        """Commit a batch whose raw rows, plus the base and view-store
+        rows it reads, stay below changefeed._DRIVER_FOLD_ROWS, from
+        ONE Spark job: `_fold_rows` collected as Arrow, limited to the
+        gate (the base's rows are read only when its footer counts are
+        below it). Winners, the LWW merge, the {old,new} delta and the
+        four view folds run over pyarrow tables and commit in the
+        executor path's order: the changelog and every staged store,
+        then the view stores' publish(), the top-k and cohort logs
+        (read_buckets, not Spark, when the incremental refresh falls
+        back), and the base's publish() last. Returns False, having
+        written nothing, when the batch is too large or has a NULL
+        key."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from .statefs import STATE_FS
+
+        gate = changefeed._DRIVER_FOLD_ROWS
+        if base is not None and sum(
+                self._base.bucket_counts(base).values()) >= gate:
+            return False
+        raw = self._fold_rows(batch_df, base).limit(gate).toArrow()
+        # a NULL key never matches in the executor-side join; keep
+        # that path's semantics rather than merging NULLs here
+        if raw.num_rows >= gate or raw.column("user_id").null_count:
+            return False
+        raw = raw.combine_chunks()
+        w = _last_per_user(raw.filter(pc.invert(raw["__old"])))
+        touched = _ids(w["__bb"])
+        old = raw.filter(raw["__old"])
+        old = old.filter(pc.is_in(old["__bb"], value_set=pa.array(
+            touched, old.schema.field("__bb").type)))
+        base_rows, d = _lww_merge(w, old)
+        has_old = pc.is_valid(d["old_event_id"])
+        has_new = pc.is_valid(d["new_event_id"])
+        t_agg = _ids(d["__oab"].filter(has_old), d["__nab"].filter(has_new))
+        t_sup = _ids(d["__osb"].filter(has_old), d["__nsb"].filter(has_new))
+        t_idx = _ids(d["__oib"].filter(has_old), d["__nib"].filter(has_new))
+        t_hx = _ids(d["__hb"])
+        views = ((self._agg, t_agg), (self._support, t_sup),
+                 (self._index, t_idx), (self._hashidx, t_hx))
+        if base is not None and raw.num_rows + sum(
+                sum(st.bucket_counts(base, t).values())
+                for st, t in views) >= gate:
+            return False
+
+        minus, plus = d.filter(has_old), d.filter(has_new)
+        agg_work = pa.schema([("event_type", pa.string()),
+                              ("cnt", pa.int64()),
+                              ("sum_value", pa.decimal128(38, 6))])
+        agg = _summed(
+            _held(self._agg, base, t_agg, agg_work)
+            + [_signed(minus, -1, {"event_type": "old_type",
+                                   "sum_value": "__odec",
+                                   "__b": "__oab"}),
+               _signed(plus, 1, {"event_type": "new_type",
+                                 "sum_value": "__ndec", "__b": "__nab"})],
+            agg_work, ["event_type"])
+        sup_schema = _pa_schema(self._SUPPORT_DDL)
+        sup = _summed(
+            _held(self._support, base, t_sup, sup_schema)
+            + [_signed(minus, -1, {"event_type": "old_type",
+                                   "value": "old_value",
+                                   "__b": "__osb"}),
+               _signed(plus, 1, {"event_type": "new_type",
+                                 "value": "new_value", "__b": "__nsb"})],
+            sup_schema, ["event_type", "value"])
+        users = d["user_id"].combine_chunks()
+        idx_schema = _pa_schema(self._INDEX_DDL)
+        # a NULL value has no band: the executor path's stage drops it
+        adds = plus.filter(pc.is_valid(plus["__nib"]))
+        idx = _replaced(_held(self._index, base, t_idx, idx_schema), users,
+                        pa.table({"user_id": adds["user_id"],
+                                  "value": adds["new_value"],
+                                  "event_id": adds["new_event_id"],
+                                  "__b": adds["__nib"]}))
+        hx_schema = _pa_schema("user_id long")
+        hx = _replaced(_held(self._hashidx, base, t_hx, hx_schema), users,
+                       pa.table({"user_id": plus["user_id"],
+                                 "__b": plus["__hb"]}))
+        tk_prev, sm_prev = self._prev_memberships(batch_id)
+        extras = None
+        if tk_prev is not None:
+            extras = self._driver_extras(d, has_new, tk_prev, sm_prev)
+
+        log_schema = _pa_schema(self._LOG_DDL)
+        log = d.select(log_schema.names[:-1]).append_column(
+            "batch_id", pa.repeat(pa.scalar(batch_id, pa.int64()),
+                                  d.num_rows))
+        STATE_FS.put_small_parquet_dir(
+            log.cast(log_schema),
+            os.path.join(self.log_dir, f"batch-{batch_id:05d}"))
+        for store, rows, schema in (
+                (self._agg, agg, _pa_schema(self._AGG_DDL)),
+                (self._support, sup, sup_schema),
+                (self._index, idx, idx_schema),
+                (self._hashidx, hx, hx_schema),
+                (self._base, base_rows, _pa_schema(self._STATE_DDL))):
+            store.stage_tables(batch_id, _split(rows, schema))
+        # the executor path's publish order: view stores, the two
+        # refreshes (they read the published indexes), base LAST
+        self._agg.publish(batch_id, base, t_agg)
+        self._support.publish(batch_id, base, t_sup)
+        self._index.publish(batch_id, base, t_idx)
+        self._hashidx.publish(batch_id, base, t_hx)
+        self._refresh_memberships(batch_id, tk_prev, sm_prev, extras,
+                                  on_driver=True)
+        self._base.publish(batch_id, base, touched)
+        return True
+
+    def _driver_extras(self, d, has_new, tk_prev: list,
+                       sm_prev: list) -> dict:
+        """_fold_touched's top-k and cohort candidate sets, computed
+        from the fold's delta table `d`: the k best new-visible rows
+        at or above the previous k-th (value DESC, event_id ASC), the
+        k smallest (md5, user) at or below the previous k-th, and the
+        delta users in either previous membership."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        k = self.k
+        nv, ne = d["new_value"], d["new_event_id"]
+        cond_tk = has_new
+        if len(tk_prev) == k:
+            kv, ke = tk_prev[-1][1], tk_prev[-1][2]
+            if kv is None:
+                above = pc.or_kleene(pc.is_valid(nv),
+                                     pc.less_equal(ne, ke))
+            else:
+                above = pc.greater_equal(nv, float(kv))
+            cond_tk = pc.and_(has_new, pc.fill_null(above, False))
+        tk = pa.table({
+            "s": pc.if_else(pc.is_valid(nv), pc.negate(nv),
+                            float("inf")),
+            "e": ne, "u": d["user_id"], "v": nv,
+        }).filter(cond_tk).sort_by(
+            [("s", "ascending"), ("e", "ascending"), ("u", "ascending")])
+        cond_sm = has_new
+        if len(sm_prev) == k:
+            cond_sm = pc.and_(has_new, pc.fill_null(
+                pc.less_equal(d["__h"], sm_prev[-1][0]), False))
+        sm = pa.table({"h": d["__h"], "u": d["user_id"]}) \
+            .filter(cond_sm) \
+            .sort_by([("h", "ascending"), ("u", "ascending")])
+        prev_users = ({r[0] for r in tk_prev}
+                      | {p[1] for p in sm_prev})
+        return {
+            "tk_adds": tk.slice(0, k).to_pylist(),
+            "sm_adds": sm.slice(0, k).to_pylist(),
+            "pv_touch": set(d["user_id"].to_pylist()) & prev_users,
+        }
 
     def _fold_touched(self, delta: DataFrame,
                       tk_prev: list | None = None,
@@ -709,16 +1110,8 @@ class MaintainedViewsRunner:
         # are equivalent: every unread band is strictly worse than
         # everything read, so top-k of the selected bands is top-k of
         # the whole state.
-        counts = self._index.bucket_counts(batch_id)
-        sel: list[int] = []
-        cum = 0
-        for b in sorted(counts, reverse=True):
-            if counts[b] == 0:
-                continue
-            sel.append(b)
-            cum += counts[b]
-            if cum >= self.k:
-                break
+        sel = _populated_window(self._index.bucket_counts(batch_id),
+                                self.k, descending=True)
         if not sel:
             return []
         rows = (
@@ -749,8 +1142,8 @@ class MaintainedViewsRunner:
         return old.join(keys, "user_id", "anti") \
             .unionByName(additions)
 
-    def _refresh_topk(self, batch_id: int,
-                      cur: list | None = None) -> None:
+    def _refresh_topk(self, batch_id: int, cur: list | None = None,
+                      topk_at=None) -> None:
         """Emit this batch's enter/leave/update deltas to the durable
         top-k log (parquet, one file per batch, OVERWRITTEN on a
         retry — idempotent).  The previous membership comes from the
@@ -771,14 +1164,15 @@ class MaintainedViewsRunner:
 
         `cur`: membership already computed incrementally on the
         driver (_inc_topk — O(k), no Spark job); None reads the
-        durable index."""
+        durable index with `topk_at` (default _topk_at)."""
+        topk_at = topk_at or self._topk_at
         if cur is None:
-            cur = self._topk_at(batch_id)
+            cur = topk_at(batch_id)
         if (self._topk_cache is not None
                 and self._topk_cache[0] == batch_id - 1):
             prev_rows = self._topk_cache[1]
         elif batch_id > 0:
-            prev_rows = self._topk_at(batch_id - 1)
+            prev_rows = topk_at(batch_id - 1)
         else:
             prev_rows = []
         prev = {u: (v, e) for u, v, e in prev_rows}
@@ -809,7 +1203,8 @@ class MaintainedViewsRunner:
 
     # ---- run ----
     def _refresh_sample(self, batch_id: int,
-                        cur_pairs: list | None = None) -> None:
+                        cur_pairs: list | None = None,
+                        sample_at=None) -> None:
         """Maintained HOLDOUT COHORT — the k visible users smallest
         by md5(user_id): a deterministic uniform key sample that is
         STABLE under churn (a member's row updates never move it;
@@ -820,18 +1215,19 @@ class MaintainedViewsRunner:
 
         `cur_pairs`: ordered (hash, user) membership already computed
         incrementally on the driver (_inc_sample); None reads the
-        durable hash index.  The cache holds the ordered pairs (the
-        k-th hash is the next batch's incremental threshold)."""
+        durable hash index with `sample_at` (default _sample_at).
+        The cache holds the ordered pairs (the k-th hash is the next
+        batch's incremental threshold)."""
+        sample_at = sample_at or self._sample_at
         if cur_pairs is None:
             cur_pairs = [(r["h"], r["user_id"])
-                         for r in self._sample_at(batch_id)]
+                         for r in sample_at(batch_id)]
         cur = {u for _h, u in cur_pairs}
         if (self._sample_cache is not None
                 and self._sample_cache[0] == batch_id - 1):
             prev = {u for _h, u in self._sample_cache[1]}
         elif batch_id > 0:
-            prev = {r["user_id"]
-                    for r in self._sample_at(batch_id - 1)}
+            prev = {r["user_id"] for r in sample_at(batch_id - 1)}
         else:
             prev = set()
         out = [(batch_id, u, "enter") for u in sorted(cur - prev)]
@@ -851,16 +1247,8 @@ class MaintainedViewsRunner:
         # >= k keys, selected from parquet footers and read in ONE
         # Spark job (the ascending twin of the _topk_at band pick;
         # every unread bucket is strictly larger in hash order).
-        counts = self._hashidx.bucket_counts(batch_id)
-        sel: list[int] = []
-        cum = 0
-        for b in sorted(counts):
-            if counts[b] == 0:
-                continue
-            sel.append(b)
-            cum += counts[b]
-            if cum >= self.k:
-                break
+        sel = _populated_window(self._hashidx.bucket_counts(batch_id),
+                                self.k)
         if not sel:
             return []
         return (
@@ -872,6 +1260,45 @@ class MaintainedViewsRunner:
             .limit(self.k)
             .collect()
         )
+
+    def _topk_read(self, batch_id: int) -> list[tuple]:
+        """_topk_at for a batch folded on the driver: the same band
+        pick, read with read_buckets and ordered with pyarrow — no
+        Spark job."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        sel = _populated_window(self._index.bucket_counts(batch_id),
+                                self.k, descending=True)
+        if not sel:
+            return []
+        schema = _pa_schema(self._INDEX_DDL)
+        t = pa.concat_tables(
+            r.select(schema.names).cast(schema)
+            for r in self._index.read_buckets(batch_id, sel).values())
+        t = t.take(pc.sort_indices(
+            t, sort_keys=[("value", "descending"),
+                          ("event_id", "ascending")],
+            null_placement="at_end")).slice(0, self.k)
+        return list(zip(t["user_id"].to_pylist(),
+                        t["value"].to_pylist(),
+                        t["event_id"].to_pylist()))
+
+    def _sample_read(self, batch_id: int) -> list[dict]:
+        """_sample_at for a batch folded on the driver: the same
+        bucket pick, read with read_buckets, ordered by md5 of the
+        key's decimal text (Spark's md5(cast(user_id as string))) —
+        no Spark job."""
+        import hashlib
+
+        sel = _populated_window(self._hashidx.bucket_counts(batch_id),
+                                self.k)
+        users = [u for r in self._hashidx.read_buckets(batch_id,
+                                                       sel).values()
+                 for u in r.column("user_id").to_pylist()]
+        pairs = sorted((hashlib.md5(str(u).encode()).hexdigest(), u)
+                       for u in users)
+        return [{"h": h, "user_id": u} for h, u in pairs[:self.k]]
 
     def sample_log(self) -> DataFrame:
         ddl = "batch_id long, user_id long, change string"

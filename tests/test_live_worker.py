@@ -146,6 +146,53 @@ def test_live_restart_after_crash_point_matches_clean_run(
     assert pushes.rows == want_pushes.rows
 
 
+def test_catch_up_and_poll_stop_at_the_committed_batch(
+        spark, sf_smoke, clean_run, tmp_path, monkeypatch):
+    """A worker that dies after stage_tables of batch 2 leaves batch
+    2's changelog dir behind an uncommitted CURRENT (v1). Over the
+    reopened root a fresh subscriber catches up on [0, 1] only and a
+    cursor polls no batch-2 rows; once the batch recommits, batch 2
+    arrives once on both."""
+    from db_realtime_changefeed_spark.api import Cursor
+
+    files, _state, want_log, want_pushes = clean_run
+    real = BucketedMvccState.stage_tables
+
+    def crash(self, batch_id, *args):
+        real(self, batch_id, *args)
+        if batch_id == 2:
+            raise OSError("injected crash after_stage")
+
+    monkeypatch.setattr(BucketedMvccState, "stage_tables", crash)
+    src = _dropped(files, tmp_path / "src")
+    a = ChangefeedRunner(spark, sf_smoke, key="user_id")
+    a.start_live(source_dir=str(src))
+    a._live_thread.join(60)
+    assert not a._live_thread.is_alive()
+    with pytest.raises(RuntimeError, match="live batch 2"):
+        a.stop_live()
+    monkeypatch.setattr(BucketedMvccState, "stage_tables", real)
+
+    b = ChangefeedRunner(spark, sf_smoke, key="user_id", root=a.root)
+    assert b.committed_batch() == 1
+    assert os.path.isdir(os.path.join(b.log_dir, "batch-00002"))
+    pushes = _Pushes()
+    b.subscribe(pushes, name="fresh")
+    assert pushes.order == [0, 1]
+    cursor = Cursor(b)
+    assert sorted({r["batch_id"] for r in cursor.poll()}) == [0, 1]
+    assert cursor.position == 2
+
+    b.start_live(source_dir=str(src))
+    _wait_until(lambda: b.committed_batch() == N_FILES - 1)
+    b.stop_live()
+    assert pushes.order == list(range(N_FILES))
+    assert pushes.rows == want_pushes.rows
+    polled = cursor.poll()
+    assert sorted({r["batch_id"] for r in polled}) == [2, 3]
+    assert _rows(b.log()) == want_log
+
+
 def test_live_worker_error_surfaces_from_ingest_and_stop(
         spark, sf_smoke, tmp_path):
     """A batch that cannot be read stops the worker; the next ingest()

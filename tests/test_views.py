@@ -115,13 +115,16 @@ def test_views_runner_driver_state_is_bounded(spark, sf_smoke):
     driver-side state must be the O(k) top-k cache — never
     entity-cardinality (the top-k delta log itself is durable
     parquet, not driver memory). Also pin the source: no collect()
-    outside the top-k refresh / touched-bucket helpers."""
+    outside the top-k refresh / touched-bucket helpers, and the one
+    Arrow collect of the driver fold only behind `.limit(gate)`, the
+    fold gate read from changefeed._DRIVER_FOLD_ROWS."""
     QUERIES["changefeed_topk_view"](spark, sf_smoke)
     r = _runner(spark, sf_smoke)
     assert r._topk_cache is not None
     assert len(r._topk_cache[1]) <= r.k
     assert r.topk_log().count() <= 3 * r.k * len(r._batches)
     import inspect
+    import re
 
     from db_realtime_changefeed_spark.streaming import views as mod
 
@@ -133,6 +136,15 @@ def test_views_runner_driver_state_is_bounded(spark, sf_smoke):
         "bucket cohort read; "
         f"found {collects} collect() sites"
     )
+    arrow = src.count(".toArrow()")
+    assert arrow == 1, (
+        "views.py may collect Arrow only in the driver fold; "
+        f"found {arrow} toArrow() sites")
+    assert re.search(r"\.limit\(gate\)\.toArrow\(\)", src), (
+        "the driver fold's Arrow collect must be limited to the gate")
+    fold = inspect.getsource(mod.MaintainedViewsRunner._fold_on_driver)
+    assert "gate = changefeed._DRIVER_FOLD_ROWS" in fold
+    assert ".limit(gate).toArrow()" in fold
 
 
 def test_delta_join_final_equals_direct_join(spark, sf_smoke):
