@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from .catalog import TABLE_NAMES, load_table
 from .streaming.changefeed import ChangefeedRunner
-from .streaming.replay import LIVE_TRIGGER
 
 
 class Cursor:
@@ -346,8 +345,11 @@ class SnapshotTableFeed(TableFeed):
 
 class LiveTableFeed(TableFeed):
     """A continuously-running table feed: the producer pushes change
-    files (the table's own schema) with ingest(); consumers poll
-    state(); stop() ends the standing query."""
+    files (the table's own schema) with ingest(), and the runner's
+    worker commits each one as its own batch as soon as it lands;
+    consumers poll state() or follow cursor() / subscribe(); stop()
+    ends the feed. ingest() and stop() raise the error the worker
+    stopped on, naming the batch."""
 
     def ingest(self, parquet_file: str) -> None:
         self._runner.ingest(self._table, parquet_file)
@@ -506,7 +508,6 @@ class TableRef:
 
     def changes(self, key: str | None = None,
                 mode: str = "replay",
-                processing_time: str = LIVE_TRIGGER,
                 initial_scan: str = "yes",
                 envelope: str = "full",
                 diff: bool = False) -> Feed:
@@ -526,15 +527,11 @@ class TableRef:
         Feed.cursor().poll() or subscribe(), stop with LiveFeed.stop()
         — the subscribe-and-keep-receiving behavior of RethinkDB
         changes() / CREATE CHANGEFEED.
-        On `events`, a live feed has no trigger: the runner's worker
-        thread commits each ingested file as its own batch as soon as
-        it lands (batch id = file sequence), and an idle feed waits
-        without polling, at under 1% of one core (Python plus JVM,
-        4-core host); `processing_time` is not used there. Table feeds
-        (below) run a Structured Streaming query whose ProcessingTime
-        trigger `processing_time` sets, by default replay.LIVE_TRIGGER
-        (400 ms): a producer that keeps up gets one batch per tick,
-        and each tick lists the live source dir (docs/
+        A live feed, on `events` and on every other table, has no
+        trigger: the runner's worker thread (replay.LiveWorker) commits
+        each ingested file as its own batch as soon as it lands (batch
+        id = file sequence), and an idle feed waits without polling,
+        at under 1% of one core (Python plus JVM, 4-core host; docs/
         changefeed-semantics.md, "Continuous delivery").
 
         `initial_scan` (the CREATE CHANGEFEED option) controls what a
@@ -633,7 +630,7 @@ class TableRef:
                 # standing query starts (mirrors the events path)
                 start = (_table_cursor_start()
                          if initial_scan == "no" else 0)
-                runner.start_live(processing_time=processing_time)
+                runner.start_live()
                 return LiveTableFeed(runner, self._name,
                                      cursor_start=start,
                                      diff_default=diff)

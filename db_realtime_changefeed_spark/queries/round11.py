@@ -82,7 +82,7 @@ def changefeed_table_cursor(spark, sf_dir):
     """DELTA-CURSOR resume on a NON-events table feed — the r10
     verdict item-4 gap (api.py refused initial_scan='no' off
     events): db.table('orders').changes() now maintains a committed
-    per-batch keyed-delta log (multitable.py log_root, written from
+    per-batch keyed-delta log (multitable.py log_dir, written from
     the merge's own persisted delta relation and gated to the
     committed pointer prefix), and TableFeed serves the full Cursor
     contract over it. The graded trajectory is the
@@ -1368,17 +1368,14 @@ def changefeed_view_live_orders(spark, sf_dir):
     """LIVE standing views on a SECOND table (r11: the events
     runner's continuous mode, mirrored onto GenericAggViewRunner so
     any table's view family runs live, not just replays): a fresh
-    orders runner starts under a ProcessingTime trigger, a producer
-    ingests the four arrival-log chunk files while it runs,
-    convergence is detected from the engine's own progress
-    telemetry (completed-batch numInputRows covering the table),
-    and the stream stops. Graded on the FINAL agg view — live batch
-    boundaries are timing-dependent, but the retraction fold is
+    orders runner's live worker commits each of the four arrival-log
+    chunk files a producer ingests as its own batch, the producer
+    waits until every file has committed (drain()), and the worker
+    stops. Graded on the FINAL agg view: the retraction fold is
     chunking-invariant, so the final state must equal the batch
     latest-order-per-customer aggregate however the batches fell."""
     import glob as _glob
     import os as _os
-    import time as _time
 
     from ..streaming.generic_views import (
         GenericAggViewRunner,
@@ -1395,19 +1392,10 @@ def changefeed_view_live_orders(spark, sf_dir):
         for f in sorted(_glob.glob(
                 _os.path.join(chunks, "chunk-*.parquet"))):
             r.ingest(f)
-        total = load_table(spark, sf_dir, "orders").count()
-        absorbed: dict = {}
-        deadline = _time.time() + 180
-        while _time.time() < deadline:
-            for p in r._live_query.recentProgress:
-                absorbed[p["batchId"]] = p["numInputRows"]
-            if sum(absorbed.values()) >= total:
-                break
-            _time.sleep(0.25)
-        if sum(absorbed.values()) < total:
+        if not r.drain(180):
             raise AssertionError(
-                f"live view absorbed {sum(absorbed.values())} of "
-                f"{total} rows before the deadline")
+                "live view did not commit every ingested file before "
+                "the deadline")
     finally:
         r.stop_live()
     last = max(r._batches)

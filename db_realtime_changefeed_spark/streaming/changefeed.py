@@ -49,13 +49,11 @@ from pyspark.sql import functions as F
 
 from ..tmputil import scratch_dir
 from .replay import (
-    LIVE_MARK,
+    LiveWorker,
     build_replay_chunks,
-    drop_live_file,
     fresh_sink_name,
     guard_not_live_fed,
     guard_not_phase_fed,
-    live_file_name,
     read_events_file,
     read_events_stream,
     streaming_shuffle,
@@ -159,11 +157,10 @@ class ChangefeedRunner:
         # every subscriber sees batch ids strictly increasing
         self._subscribers: list = []
         self._sub_lock = threading.Lock()
-        # the live worker (start_live) and the first error it hit
-        self._live_thread: threading.Thread | None = None
-        self._live_stop = threading.Event()
-        self._live_wake = threading.Event()
-        self._live_error: Exception | None = None
+        self._live = LiveWorker(
+            self.root, self.ckpt,
+            lambda path: cdc_envelope(read_events_file(spark, path)),
+            self._merge_batch, self.committed_batch)
 
     def _current_state_df(self) -> DataFrame | None:
         b = self._ptr.batch()
@@ -484,84 +481,31 @@ class ChangefeedRunner:
         until stop_live(). Consumers follow the delta log via
         Feed.cursor() (api.py) or push (subscribe()).
 
-        The runner owns the batch sequence. One worker thread commits
-        `live-<seq>.parquet` in order, with batch id = seq, each file
-        as one batch read through the same _merge_batch as a replay
-        (one Spark job below the fold gate); ingest() wakes it, and an
-        idle feed waits on an event without polling. It starts at the
-        file after CURRENT (0 on a fresh root), so files ingested
-        before start_live(), left pending by stop_live(), or landed
-        before a crash commit now. It stops at its first error, which
-        the next ingest() and stop_live() raise. Returns the live
+        The runner owns the batch sequence (replay.LiveWorker): each
+        `live-<seq>.parquet` commits as batch seq, read as one batch
+        through the same _merge_batch as a replay (one Spark job below
+        the fold gate), from the file after CURRENT. Returns the live
         source dir."""
-        # the reverse of guard_not_live_fed
-        if os.path.exists(self.ckpt):
-            raise RuntimeError(
-                f"changefeed root {self.root} was fed by run() or "
-                "run_phase(); start_live() would reuse its batch ids — "
-                "use a fresh root")
-        if self._live_thread is not None:
-            raise RuntimeError(f"changefeed {self.root} is already live")
-        self.source_dir = source_dir or scratch_dir(
-            prefix="dbrcf-live-src-"
-        )
-        open(os.path.join(self.root, LIVE_MARK), "a").close()
-        self._live_error = None
-        self._live_stop.clear()
-        self._live_thread = threading.Thread(
-            target=self._live_loop, name=f"changefeed-live-{self.root}",
-            daemon=True)
-        self._live_thread.start()
-        return self.source_dir
-
-    def _live_loop(self) -> None:
-        base = self._ptr.batch()
-        seq = 0 if base is None else base + 1
-        while True:
-            # cleared before the checks, so a wake-up that lands
-            # after them still ends the wait below
-            self._live_wake.clear()
-            if self._live_stop.is_set():
-                return
-            path = os.path.join(self.source_dir, live_file_name(seq))
-            if not os.path.exists(path):
-                self._live_wake.wait()
-                continue
-            try:
-                self._merge_batch(
-                    cdc_envelope(read_events_file(self.spark, path)), seq)
-            except Exception as e:
-                self._live_error = RuntimeError(
-                    f"changefeed {self.root}: live batch {seq} "
-                    f"({path}) failed: {e!r}")
-                self._live_error.__cause__ = e
-                return
-            seq += 1
-
-    def _raise_live_error(self) -> None:
-        if self._live_error is not None:
-            raise self._live_error
+        return self._live.start(
+            source_dir or scratch_dir(prefix="dbrcf-live-src-"))
 
     def ingest(self, parquet_file: str) -> None:
         """Drop one change file into the live source dir (producer
         side of the feed) as the next `live-<seq>.parquet`, and wake
         the live worker if one runs. Raises the worker's error, if it
         stopped on one, without dropping the file."""
-        self._raise_live_error()
-        drop_live_file(self.source_dir, parquet_file)
-        self._live_wake.set()
+        self._live.ingest(parquet_file)
+
+    def drain(self, timeout: float) -> bool:
+        """Wait until every file ingested so far has committed; False
+        on timeout (replay.LiveWorker.drain)."""
+        return self._live.drain(timeout)
 
     def stop_live(self) -> None:
         """Stop the live worker after the batch it is committing, if
         any; files still pending stay in the source dir. Raises the
         error the worker stopped on, if it did."""
-        t = self._live_thread
-        if t is not None:
-            self._live_stop.set()
-            self._live_wake.set()
-            t.join()
-            self._live_thread = None
-        self._raise_live_error()
+        self._live.stop()
 
     def state(self) -> DataFrame:
         df = self._current_state_df()

@@ -19,14 +19,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import load_table, table_path
 from ..queries import query
 from ..tmputil import scratch_dir
+from .changefeed import ChangefeedRunner
 from .replay import (
-    LIVE_TRIGGER,
+    LiveWorker,
     default_chunks,
-    drop_live_file,
     fresh_sink_name,
+    guard_not_live_fed,
     streaming_shuffle,
 )
 from .state_store import BucketedMvccState
+from .views import MaintainedViewsRunner
 
 _DEC = "decimal(18,6)"
 
@@ -165,9 +167,19 @@ class GenericAggViewRunner:
                 self._index_ddl, band_width=index_band_width,
                 n_bands=index_bands)
 
+        self._live = LiveWorker(self.root, self.ckpt, self._read_file,
+                                self._merge_batch, self.committed_batch)
+
     @property
     def _batches(self) -> list[int]:
         return self._base.versions()
+
+    committed_batch = MaintainedViewsRunner.committed_batch
+
+    def _read_file(self, path: str) -> DataFrame:
+        """One live change file, in the table's own schema."""
+        schema = load_table(self.spark, self.sf_dir, self.table).schema
+        return self.spark.read.schema(schema).parquet(path)
 
     def _fold_idx(self, delta: DataFrame,
                   base: int | None, touched: list[int]) -> DataFrame:
@@ -563,6 +575,7 @@ class GenericAggViewRunner:
             winners.unpersist()
 
     def run(self, n_chunks: int | None = None) -> None:
+        guard_not_live_fed(self.root)
         chunks = _keyed_chunks(self.spark, self.sf_dir, self.table,
                                self.arrival, n_chunks)
         schema = load_table(self.spark, self.sf_dir,
@@ -585,40 +598,18 @@ class GenericAggViewRunner:
     # ---- continuous maintenance (r11: the events runner's live
     # ---- mode, mirrored so ANY table's standing views run live)
 
-    def start_live(self, processing_time: str = LIVE_TRIGGER):
-        """Continuous maintenance: the same per-batch merge+fold
-        runs under a ProcessingTime trigger over a LIVE source dir
-        (the table's own schema); every view keeps updating as
-        change files arrive, until stop_live(). Returns the live
-        source dir."""
-        self.source_dir = scratch_dir(
-            prefix=f"dbrcf-gview-live-{self.table}-")
-        schema = load_table(self.spark, self.sf_dir,
-                            self.table).schema
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.source_dir)
-        )
-        with streaming_shuffle(self.spark):
-            self._live_query = (
-                stream.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(processingTime=processing_time)
-                .queryName(fresh_sink_name("genericview_live"))
-                .start()
-            )
-        return self.source_dir
+    def start_live(self) -> str:
+        """Continuous maintenance: every view keeps updating as change
+        files (the table's own schema) arrive, until stop_live(). Each
+        `live-<seq>.parquet` commits as batch seq through the same
+        merge+fold as a replay (replay.LiveWorker), from the batch
+        after the newest base version. Returns the live source dir."""
+        return self._live.start(
+            scratch_dir(prefix=f"dbrcf-gview-live-{self.table}-"))
 
-    def ingest(self, parquet_file: str) -> None:
-        drop_live_file(self.source_dir, parquet_file)
-
-    def stop_live(self) -> None:
-        q = getattr(self, "_live_query", None)
-        if q is not None and q.isActive:
-            q.stop()
-            q.awaitTermination()
+    ingest = ChangefeedRunner.ingest
+    drain = ChangefeedRunner.drain
+    stop_live = ChangefeedRunner.stop_live
 
     def delta_log(self) -> DataFrame:
         """The full per-row {old,new} change log across all committed

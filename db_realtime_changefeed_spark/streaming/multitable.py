@@ -14,6 +14,9 @@ version at any committed batch is a consistent cross-table
 snapshot. resolved(batch) = min over tables of that table's
 cumulative max processed ts — a reader at resolved_ts sees every
 change from EVERY table up to that time, and possibly none after.
+In live mode (start_live) the enveloped rows of every table land in
+one live-<seq> file sequence, each file one batch of the same merge
+(replay.LiveWorker).
 
 Scale: the merge is the executor-side full-outer join on the
 composite (tbl, key) — at 100 TB each table's partial aggregate
@@ -33,8 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from .changefeed import ChangefeedRunner
 from .replay import _chunk_dir, _write_chunk, default_chunks
-from .replay import LIVE_TRIGGER, drop_live_file
+from .replay import LiveWorker, guard_not_live_fed
 from .replay import fresh_sink_name, streaming_shuffle
 
 _STATE_DEC = "decimal(28,6)"
@@ -510,7 +514,7 @@ class MultiTableChangefeedRunner:
         #: committed prefix (batch_id <= pointer) — a crash between
         #: the log write and the pointer flip must not surface a
         #: phantom batch, the house manifest-published-last contract.
-        self.log_root = os.path.join(self.root, "delta_log")
+        self.log_dir = os.path.join(self.root, "delta_log")
         os.makedirs(self.state_root, exist_ok=True)
         # bucketed MVCC store on the composite (tbl, key) — partial
         # state rewrites per micro-batch (state_store.py)
@@ -532,10 +536,20 @@ class MultiTableChangefeedRunner:
 
         self._subscribers: list = []
         self._sub_lock = threading.Lock()
+        #: the live source dir: one live-<seq> sequence for every table,
+        #: each file holding enveloped rows that carry `tbl`
+        self.live_root = os.path.join(self.root, "live-src")
+        self._live = LiveWorker(
+            self.root, self.ckpt,
+            lambda path: spark.read.schema(self._env_ddl).parquet(path),
+            self._merge_batch, self.committed_batch,
+            source_dir=self.live_root)
 
-    def _current_state_df(self) -> DataFrame | None:
-        b = self._ptr.batch()
-        return None if b is None else self._store.df_at(b)
+    _current_state_df = ChangefeedRunner._current_state_df
+    committed_batch = ChangefeedRunner.committed_batch
+    subscribe = ChangefeedRunner.subscribe
+    drain = ChangefeedRunner.drain
+    stop_live = ChangefeedRunner.stop_live
 
     def versions(self) -> list[int]:
         return self._store.versions()
@@ -609,7 +623,7 @@ class MultiTableChangefeedRunner:
             (
                 delta.select(*log_cols)
                 .write.mode("overwrite")
-                .parquet(os.path.join(self.log_root,
+                .parquet(os.path.join(self.log_dir,
                                       f"batch-{batch_id:05d}"))
             )
             delta.unpersist()
@@ -634,35 +648,29 @@ class MultiTableChangefeedRunner:
 
             with self._sub_lock:
                 if self._subscribers:
-                    rows = read_batch_log(self.log_root, batch_id)
+                    rows = read_batch_log(self.log_dir, batch_id)
                     for sub in self._subscribers:
                         sub.deliver(batch_id, rows)
         finally:
             batch_df.unpersist()
         self._last_batch = batch_id
 
-    def _union_streams(self, dirs: list[str]) -> DataFrame:
+    def run(self, n_chunks: int | None = None) -> None:
+        guard_not_live_fed(self.root)
         streams = [
             self.spark.readStream.schema(self._env_ddl)
             .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-            for d in dirs
+            .parquet(build_table_chunks(
+                self.spark, self.sf_dir, tbl, n_chunks,
+                self.key_overrides.get(tbl), key_type=self._key_ddl,
+                with_after=self.with_after,
+                after_cols=self._after_cols.get(tbl),
+                with_value=not self.key_only))
+            for tbl in self.tables
         ]
         env = streams[0]
         for s in streams[1:]:
             env = env.unionByName(s)
-        return env
-
-    def run(self, n_chunks: int | None = None) -> None:
-        env = self._union_streams([
-            build_table_chunks(self.spark, self.sf_dir, tbl, n_chunks,
-                               self.key_overrides.get(tbl),
-                               key_type=self._key_ddl,
-                               with_after=self.with_after,
-                               after_cols=self._after_cols.get(tbl),
-                               with_value=not self.key_only)
-            for tbl in self.tables
-        ])
         with streaming_shuffle(self.spark):
             q = (
                 env.writeStream.foreachBatch(self._merge_batch)
@@ -675,34 +683,20 @@ class MultiTableChangefeedRunner:
             q.awaitTermination()
 
     # ---- continuous subscription mode (live feeds on any table) ----
-    def start_live(self, processing_time: str = LIVE_TRIGGER):
-        """Keep the standing query RUNNING over per-table live source
-        dirs (ProcessingTime trigger): producers push change files
-        with ingest(tbl, file), consumers poll state(); stop with
-        stop_live(). Same merge/MVCC path as run() — mode only
-        changes the trigger and the source dirs."""
-        self.live_root = os.path.join(self.root, "live-src")
-        dirs = []
-        for tbl in self.tables:
-            d = os.path.join(self.live_root, tbl)
-            os.makedirs(d, exist_ok=True)
-            dirs.append(d)
-        env = self._union_streams(dirs)
-        with streaming_shuffle(self.spark):
-            self._live_query = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(processingTime=processing_time)
-                .queryName(fresh_sink_name("mtable_live"))
-                .start()
-            )
-        return self.live_root
+    def start_live(self) -> str:
+        """Keep the standing query RUNNING: producers push change files
+        with ingest(tbl, file), consumers poll state() or subscribe();
+        stop with stop_live(). Every table's files share one live-<seq>
+        sequence under live_root; each commits as batch seq through the
+        same merge/MVCC path as run() (replay.LiveWorker), from the
+        batch after CURRENT. Returns live_root."""
+        return self._live.start()
 
     def ingest(self, tbl: str, parquet_file: str) -> None:
         """Producer side of a live feed: normalize one change file
         (the TABLE's own schema) to the envelope and drop it into the
-        table's live source dir, sequenced for in-order pickup."""
+        live source dir as the next live-<seq> file. Raises the live
+        worker's error, if it stopped on one, without dropping."""
         from ..catalog import (
             EVENTS_NS_SCHEMA,
             SCHEMAS,
@@ -721,13 +715,7 @@ class MultiTableChangefeedRunner:
                       with_after=self.with_after,
                       after_cols=self._after_cols.get(tbl),
                       with_value=not self.key_only).toArrow()
-        drop_live_file(os.path.join(self.live_root, tbl), t)
-
-    def stop_live(self) -> None:
-        q = getattr(self, "_live_query", None)
-        if q is not None and q.isActive:
-            q.stop()
-            q.awaitTermination()
+        self._live.ingest(t)
 
     def state(self) -> DataFrame:
         df = self._current_state_df()
@@ -744,31 +732,6 @@ class MultiTableChangefeedRunner:
             cols.append(
                 F.col("sum_value").cast("double").alias("sum_value"))
         return df.select(*cols)
-
-    def subscribe(self, callback, name: str = "default"):
-        """Register a push subscriber on the table feed's delta log
-        (the events runner's contract, mirrored): committed history
-        the subscriber has not acked delivers immediately in batch
-        order, then live batches push from the commit path. The
-        durable per-name ack file keys resume-on-restart; batch_id
-        is the idempotency token."""
-        from .push import Subscriber, log_batches, read_batch_log
-
-        sub = Subscriber(self, callback, name)
-        with self._sub_lock:
-            # the committed pointer is read UNDER the lock: read
-            # before it, a batch committing concurrently could be
-            # invisible to catch-up (stale pointer) AND missed by the
-            # push (not yet appended) — both sides serialize on
-            # _sub_lock so one of them always sees the batch; double
-            # delivery is deduped by the durable ack (ADVICE r11)
-            committed = self._ptr.batch()
-            for b in log_batches(self.log_root):
-                if committed is not None and b <= committed \
-                        and b > sub.acked:
-                    sub.deliver(b, read_batch_log(self.log_root, b))
-            self._subscribers.append(sub)
-        return sub
 
     def batch_for_ts(self, ts):
         """First batch containing any change with event time >= ts —
@@ -793,12 +756,12 @@ class MultiTableChangefeedRunner:
 
         b = self._ptr.batch()
         if b is None or not _glob.glob(
-                os.path.join(self.log_root, "*", "*.parquet")):
+                os.path.join(self.log_dir, "*", "*.parquet")):
             return self.spark.createDataFrame([], self._LOG_DDL)
         return (
             self.spark.read.schema(self._LOG_DDL)
             .option("recursiveFileLookup", "true")
-            .parquet(self.log_root)
+            .parquet(self.log_dir)
             .where(F.col("batch_id") <= b)
         )
 
@@ -829,11 +792,11 @@ def table_retention_gc(runner: MultiTableChangefeedRunner,
     if pins:
         horizon = min(horizon, min(pins))
     removed = []
-    if os.path.isdir(runner.log_root):
-        for name in sorted(os.listdir(runner.log_root)):
+    if os.path.isdir(runner.log_dir):
+        for name in sorted(os.listdir(runner.log_dir)):
             m = re.match(r"batch-(\d+)", name)
             if m and int(m.group(1)) < horizon:
-                shutil.rmtree(os.path.join(runner.log_root, name))
+                shutil.rmtree(os.path.join(runner.log_dir, name))
                 removed.append(int(m.group(1)))
     runner._store.gc({b for b in runner.versions() if b >= horizon - 1})
     return removed
@@ -841,10 +804,10 @@ def table_retention_gc(runner: MultiTableChangefeedRunner,
 
 def table_oldest_retained(runner: MultiTableChangefeedRunner
                           ) -> int | None:
-    if not os.path.isdir(runner.log_root):
+    if not os.path.isdir(runner.log_dir):
         return None
     ids = [int(m.group(1))
-           for name in os.listdir(runner.log_root)
+           for name in os.listdir(runner.log_dir)
            if (m := re.match(r"batch-(\d+)", name))]
     return min(ids) if ids else None
 

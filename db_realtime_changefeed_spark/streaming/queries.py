@@ -1054,7 +1054,6 @@ def changefeed_live(spark, sf_dir):
     live path."""
     import glob
     import os
-    import time
 
     key = (id(spark), sf_dir, "__live__")
     if key not in _CF_CACHE:
@@ -1062,18 +1061,15 @@ def changefeed_live(spark, sf_dir):
         runner.start_live()
         chunks = build_replay_chunks(spark, sf_dir)
         files = sorted(glob.glob(os.path.join(chunks, "chunk-*.parquet")))
-        total = load_table(spark, sf_dir, "events").count()
-        for f in files:
-            runner.ingest(f)
-        deadline = time.time() + 180
-        while time.time() < deadline:
-            df = runner._current_state_df()
-            if df is not None:
-                got = df.agg(F.sum("cnt")).collect()[0][0] or 0
-                if got >= total:
-                    break
-            time.sleep(0.25)
-        runner.stop_live()
+        try:
+            for f in files:
+                runner.ingest(f)
+            if not runner.drain(180):
+                raise AssertionError(
+                    "live changefeed did not commit every ingested "
+                    "file before the deadline")
+        finally:
+            runner.stop_live()
         _CF_CACHE[key] = runner
     return _CF_CACHE[key].state()
 
@@ -1108,20 +1104,33 @@ def changefeed_cdc_ops(spark, sf_dir):
     return _CF_CACHE[key].state()
 
 
-def _final_watermark_ms(ckpt: str) -> int:
+def _final_watermark_ms(spark, ckpt: str) -> int:
     """The engine's own final event-time watermark for a completed
     replay, read from the checkpoint's LAST offsets entry (the WAL
     the next batch would have planned against — AvailableNow runs a
     final no-new-data batch after the watermark advances past the
     last data, so this is the watermark that governed the final
-    append emission). Driver-side metadata read, O(1) tiny files."""
+    append emission). Driver-side metadata read, O(1) tiny files.
+    Raises, naming the checkpoint, when that entry has no
+    batchWatermarkMs, or when the session runs no no-data batches:
+    the last entry then holds a watermark from before the last data."""
     import json as _json
     import os
 
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    if spark.conf.get(conf, "true").lower() != "true":
+        raise RuntimeError(
+            f"checkpoint {ckpt}: {conf} is false, so its last offsets "
+            "entry does not hold the final watermark")
     odir = os.path.join(ckpt, "offsets")
     last = max((f for f in os.listdir(odir) if f.isdigit()), key=int)
     with open(os.path.join(odir, last)) as f:
-        return _json.loads(f.read().splitlines()[1])["batchWatermarkMs"]
+        meta = _json.loads(f.read().splitlines()[1])
+    if "batchWatermarkMs" not in meta:
+        raise RuntimeError(
+            f"checkpoint {ckpt}: offsets entry {last} has no "
+            "batchWatermarkMs")
+    return meta["batchWatermarkMs"]
 
 
 @query(
@@ -1176,7 +1185,7 @@ def stream_chained_agg(spark, sf_dir):
     )
     name = fresh_sink_name("chained_l1")
     ckpt = run_available_now(lvl1, name, "append")
-    wm = F.timestamp_millis(F.lit(_final_watermark_ms(ckpt)))
+    wm = F.timestamp_millis(F.lit(_final_watermark_ms(spark, ckpt)))
     hour = F.window(F.col("window.start"), "1 hour")
     return (
         spark.table(name)

@@ -142,18 +142,6 @@ def _write_chunk(tbl, out: str, idx: int) -> None:
     os.utime(dst, (time.time(), 1_700_000_000.0 + idx))
 
 
-#: ProcessingTime trigger of the live (start_live) queries of the
-#: table and view feeds: the views, generic-view and multitable
-#: runners. It sits above a live batch's cost (about 0.2 s on an idle
-#: 4-core host, up to about 0.43 s with three of its cores busy), so
-#: a producer that keeps up gets one batch per tick and the same
-#: latency on a quiet host and a loaded one; a batch that runs longer
-#: starts the next one as soon as it ends. An idle feed lists its
-#: source dir once per tick. ChangefeedRunner has no trigger: its
-#: worker commits each file as it lands (docs/changefeed-semantics.md,
-#: "Continuous delivery").
-LIVE_TRIGGER = "400 milliseconds"
-
 _LIVE_NAME = re.compile(r"live-(\d+)\.parquet")
 #: serializes drop_live_file within the process, so two concurrent
 #: ingests never pick the same sequence number or temp file
@@ -165,10 +153,17 @@ def live_file_name(seq: int) -> str:
     return f"live-{seq:06d}.parquet"
 
 
+def _last_live_seq(source_dir: str) -> int:
+    """The highest live-<n> sequence in `source_dir`, -1 if none."""
+    return max((int(m.group(1)) for m in map(_LIVE_NAME.fullmatch,
+                                             os.listdir(source_dir)) if m),
+               default=-1)
+
+
 def drop_live_file(source_dir: str, src) -> None:
-    """Producer side of a live file-stream source: put one change file
+    """Producer side of a live feed (LiveWorker): put one change file
     (`src`, a parquet path to copy or a pyarrow table to write) into
-    `source_dir` as `live-<seq>.parquet`, where seq is one above the
+    `source_dir`, created if missing, as `live-<seq>.parquet`, where seq is one above the
     highest live-<n> already there (0 in an empty dir), so names and
     mtimes sort in ingest order, also across a restart over the same
     dir; other files in the dir do not shift the sequence. The whole
@@ -180,9 +175,8 @@ def drop_live_file(source_dir: str, src) -> None:
     import pyarrow.parquet as pq
 
     with _LIVE_DROP_LOCK:
-        seqs = [int(m.group(1)) for m in map(_LIVE_NAME.fullmatch,
-                                             os.listdir(source_dir)) if m]
-        seq = max(seqs, default=-1) + 1
+        os.makedirs(source_dir, exist_ok=True)
+        seq = _last_live_seq(source_dir) + 1
         name = live_file_name(seq)
         tmp = os.path.join(source_dir, f".{name}.tmp")
         if isinstance(src, str):
@@ -307,6 +301,127 @@ def guard_not_live_fed(root: str) -> None:
         raise RuntimeError(
             f"changefeed root {root} was fed live; a replay would "
             "reuse its batch ids — use a fresh root")
+
+
+class LiveWorker:
+    """The live (start_live) mode of every live runner: the runner
+    owns the batch sequence. One worker thread commits
+    `live-<seq>.parquet` from the source dir in order, with batch id =
+    seq, as `merge_batch(read_batch(path), seq)` (the runner's
+    foreachBatch body, so a batch merges exactly as a replay's
+    micro-batch does); ingest() wakes it, and an idle feed waits on a
+    condition without polling. It starts at `committed()` + 1 (0 on a
+    fresh root), so files dropped before start(), left pending by
+    stop(), or landed before a crash commit then. It stops at its
+    first error, which the next ingest(), drain() and stop() raise. It
+    never sets session conf: a concurrent reader of the session would
+    see it change."""
+
+    def __init__(self, root: str, ckpt: str, read_batch, merge_batch,
+                 committed, source_dir: str | None = None):
+        self.root = root
+        self._ckpt = ckpt
+        self._read = read_batch
+        self._merge = merge_batch
+        self._committed = committed
+        self.source_dir = source_dir
+        self._thread: threading.Thread | None = None
+        # guards _next, _stopping and _error; ingest(), stop() and each
+        # commit notify it
+        self._cv = threading.Condition()
+        self._next = 0
+        self._stopping = False
+        self._error: Exception | None = None
+
+    def start(self, source_dir: str | None = None) -> str:
+        """Start the worker over `source_dir` (or the one given at
+        construction) and mark the root live-fed. Refuses a root that a
+        replay fed (it has a checkpoint): both number batches from 0.
+        Returns the source dir."""
+        # the reverse of guard_not_live_fed
+        if os.path.exists(self._ckpt):
+            raise RuntimeError(
+                f"changefeed root {self.root} was fed by a replay "
+                "(run()); start_live() would reuse its batch ids — use "
+                "a fresh root")
+        if self._thread is not None:
+            raise RuntimeError(f"changefeed {self.root} is already live")
+        self.source_dir = source_dir or self.source_dir
+        os.makedirs(self.source_dir, exist_ok=True)
+        open(os.path.join(self.root, LIVE_MARK), "a").close()
+        base = self._committed()
+        self._next = 0 if base is None else base + 1
+        self._stopping = False
+        self._error = None
+        self._thread = threading.Thread(
+            target=self._loop, name=f"live-{self.root}", daemon=True)
+        self._thread.start()
+        return self.source_dir
+
+    def _loop(self) -> None:
+        while True:
+            seq = self._next
+            path = os.path.join(self.source_dir, live_file_name(seq))
+            with self._cv:
+                while not self._stopping and not os.path.exists(path):
+                    self._cv.wait()
+                if self._stopping:
+                    return
+            try:
+                self._merge(self._read(path), seq)
+            except Exception as e:
+                err = RuntimeError(
+                    f"changefeed {self.root}: live batch {seq} "
+                    f"({path}) failed: {e!r}")
+                err.__cause__ = e
+                with self._cv:
+                    self._error = err
+                    self._cv.notify_all()
+                return
+            with self._cv:
+                self._next = seq + 1
+                self._cv.notify_all()
+
+    def _raise_error(self) -> None:
+        if self._error is not None:
+            raise self._error
+
+    def ingest(self, src) -> None:
+        """Drop one change file (a parquet path or a pyarrow table) as
+        the next `live-<seq>.parquet` and wake the worker. Raises the
+        worker's error, if it stopped on one, without dropping."""
+        self._raise_error()
+        drop_live_file(self.source_dir, src)
+        with self._cv:
+            self._cv.notify_all()
+
+    def drain(self, timeout: float) -> bool:
+        """Wait until every file dropped into the source dir so far has
+        committed. Returns False if `timeout` seconds pass first or the
+        worker is not running; raises the error it stopped on."""
+        if self._thread is None:
+            self._raise_error()
+            return False
+        last = _last_live_seq(self.source_dir)
+        with self._cv:
+            self._cv.wait_for(
+                lambda: self._next > last or self._error is not None
+                or self._stopping, timeout)
+            self._raise_error()
+            return self._next > last
+
+    def stop(self) -> None:
+        """Stop the worker after the batch it is committing, if any;
+        files still pending stay in the source dir. Raises the error the
+        worker stopped on, if it did."""
+        t = self._thread
+        if t is not None:
+            with self._cv:
+                self._stopping = True
+                self._cv.notify_all()
+            t.join()
+            self._thread = None
+        self._raise_error()
 
 
 _SINK_SEQ = [0]

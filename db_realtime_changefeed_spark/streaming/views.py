@@ -59,10 +59,11 @@ from ..tmputil import scratch_dir
 from . import changefeed
 from .changefeed import _has_parquet, cdc_envelope
 from .replay import (
-    LIVE_TRIGGER,
+    LiveWorker,
     build_replay_chunks,
-    drop_live_file,
     fresh_sink_name,
+    guard_not_live_fed,
+    read_events_file,
     read_events_stream,
     streaming_shuffle,
 )
@@ -440,12 +441,21 @@ class MaintainedViewsRunner:
         # refresh threshold (_inc_topk / _inc_sample).
         self._topk_cache: tuple[int, list] | None = None
         self._sample_cache: tuple[int, list] | None = None
+        self._live = LiveWorker(
+            self.root, self.ckpt,
+            lambda path: cdc_envelope(read_events_file(spark, path)),
+            self._merge_batch, self.committed_batch)
 
     @property
     def _batches(self) -> list[int]:
         """Committed batch ids, derived from the durable base-store
         manifests — survives restart, immune to retry double-count."""
         return self._base.versions()
+
+    def committed_batch(self) -> int | None:
+        """The newest committed batch (base version), None before the
+        first commit."""
+        return max(self._base.versions(), default=None)
 
     # ---- per-batch base merge + delta emission ----
     def _winners(self, batch_df: DataFrame) -> DataFrame:
@@ -599,7 +609,7 @@ class MaintainedViewsRunner:
             # the BASE publication is the batch's COMMIT POINT and
             # runs LAST: `_batches` (derived from base versions) then
             # implies every view fold for that batch is durable — a
-            # crash or live-query stop mid-batch leaves the base at
+            # crash or live-worker stop mid-batch leaves the base at
             # N-1 and the retry re-runs the idempotent folds, so a
             # reader never sees a base version whose views are
             # missing (live-mode crash consistency; tested)
@@ -1311,6 +1321,7 @@ class MaintainedViewsRunner:
         )
 
     def run(self, n_chunks: int | None = None) -> None:
+        guard_not_live_fed(self.root)
         chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
         env = cdc_envelope(read_events_stream(self.spark, chunks))
         with streaming_shuffle(self.spark):
@@ -1331,6 +1342,7 @@ class MaintainedViewsRunner:
         source (queries/scans.py TailStreamSource) feed the
         maintained views end to end: wire bytes -> Arrow-parsed
         micro-batches -> CDC envelope -> IVM folds."""
+        guard_not_live_fed(self.root)
         env = cdc_envelope(env_source)
         with streaming_shuffle(self.spark):
             q = (
@@ -1343,37 +1355,19 @@ class MaintainedViewsRunner:
             )
             q.awaitTermination()
 
-    def start_live(self, source_dir: str | None = None,
-                   processing_time: str = LIVE_TRIGGER):
-        """Continuous maintenance mode: the same per-batch merge+fold
-        runs under a ProcessingTime trigger over a LIVE source dir —
-        every view (agg, support, range index, top-k log) keeps
-        updating as change files arrive, until stop_live().  Returns
-        the live source dir (drop sequenced parquet files in via
-        ingest())."""
-        self.source_dir = source_dir or scratch_dir(
-            prefix="dbrcf-views-live-")
-        env = cdc_envelope(
-            read_events_stream(self.spark, self.source_dir))
-        with streaming_shuffle(self.spark):
-            self._live_query = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(processingTime=processing_time)
-                .queryName(fresh_sink_name("views_live"))
-                .start()
-            )
-        return self.source_dir
+    def start_live(self, source_dir: str | None = None) -> str:
+        """Continuous maintenance mode: every view (agg, support, range
+        index, top-k log) keeps updating as change files arrive, until
+        stop_live(). Each `live-<seq>.parquet` commits as batch seq
+        through the same merge+fold as a replay (replay.LiveWorker),
+        from the batch after the newest base version. Returns the live
+        source dir (drop change files in via ingest())."""
+        return self._live.start(
+            source_dir or scratch_dir(prefix="dbrcf-views-live-"))
 
-    def ingest(self, parquet_file: str) -> None:
-        drop_live_file(self.source_dir, parquet_file)
-
-    def stop_live(self) -> None:
-        q = getattr(self, "_live_query", None)
-        if q is not None and q.isActive:
-            q.stop()
-            q.awaitTermination()
+    ingest = changefeed.ChangefeedRunner.ingest
+    drain = changefeed.ChangefeedRunner.drain
+    stop_live = changefeed.ChangefeedRunner.stop_live
 
     def vacuum(self, keep_last: int = 2) -> dict:
         """Retention for the view stores (the state half of what

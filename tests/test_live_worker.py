@@ -1,9 +1,11 @@
-"""The live worker of ChangefeedRunner: each ingested file commits as
-its own batch (batch id = file sequence) through the same merge as a
-replay, with no streaming query. Covers concurrent ingests, restarts
-after a crash at each commit step, worker errors, the one Spark job
-per batch, and the symlink CURRENT and ack pointers next to the
-regular files older runners wrote."""
+"""The live worker (replay.LiveWorker) of every live runner family —
+ChangefeedRunner, MaintainedViewsRunner and MultiTableChangefeedRunner
+here: each ingested file commits as its own batch (batch id = file
+sequence) through the same merge as a replay, with no streaming
+query. Covers concurrent ingests, restarts after a crash at each
+commit step, worker errors, the one Spark job per batch, the refusal
+to mix live and replay feeds on one root, and the symlink CURRENT and
+ack pointers next to the regular files older runners wrote."""
 
 from __future__ import annotations
 
@@ -19,18 +21,54 @@ from db_realtime_changefeed_spark.streaming.changefeed import (
     ChangefeedRunner,
 )
 from db_realtime_changefeed_spark.streaming.lifecycle import run_phase
+from db_realtime_changefeed_spark.streaming.multitable import (
+    MultiTableChangefeedRunner,
+)
 from db_realtime_changefeed_spark.streaming.replay import drop_live_file
 from db_realtime_changefeed_spark.streaming.state_store import (
     BucketedMvccState,
     VersionPointer,
 )
+from db_realtime_changefeed_spark.streaming.views import (
+    MaintainedViewsRunner,
+)
 
 N_FILES = 4
+FAMILIES = ("changefeed", "views", "multitable")
+#: the table each family's change files come from
+_TABLE = {"changefeed": "events", "views": "events",
+          "multitable": "orders"}
 
 
-def _change_files(sf, tmp_path, n: int, rows: int) -> list[str]:
-    """`n` change files of `rows` consecutive events each."""
-    t = pq.read_table(os.path.join(sf, "events.parquet"))
+def _runner(family, spark, sf, root=None):
+    if family == "changefeed":
+        return ChangefeedRunner(spark, sf, key="user_id", root=root)
+    if family == "views":
+        return MaintainedViewsRunner(spark, sf, root=root)
+    return MultiTableChangefeedRunner(spark, sf, tables=("orders",),
+                                      root=root)
+
+
+def _ingest(family, r, src) -> None:
+    """Ingest one change file of the family's table."""
+    if family == "multitable":
+        r.ingest("orders", src)
+    else:
+        r.ingest(src)
+
+
+def _outputs(family, r) -> tuple:
+    """What an interrupted and a clean run of a family must agree on."""
+    if family == "views":
+        return (_rows(r.agg_trajectory()), _rows(r.delta_log()),
+                _rows(r.topk_log()))
+    return _rows(r.state()), _rows(r.log())
+
+
+def _change_files(sf, tmp_path, n: int, rows: int,
+                  table: str = "events") -> list[str]:
+    """`n` change files of `rows` consecutive rows of `table` each."""
+    t = pq.read_table(os.path.join(sf, f"{table}.parquet"))
     out = []
     for i in range(n):
         p = str(tmp_path / f"change-{i:03d}.parquet")
@@ -48,7 +86,8 @@ def _wait_until(pred, timeout=60.0) -> None:
 
 
 def _rows(df) -> list[tuple]:
-    return sorted(map(tuple, df.collect()))
+    # by repr: rows may hold NULLs, which do not order
+    return sorted(map(tuple, df.collect()), key=repr)
 
 
 class _Pushes:
@@ -64,22 +103,30 @@ class _Pushes:
         self.rows[batch_id] = sorted(tuple(sorted(r.items())) for r in rows)
 
 
-def _live_run(spark, sf, src, pushes, root=None):
-    """Subscribe, start live over `src`, and wait until every file
-    already dropped there committed or the worker stopped. Returns the
-    runner, still live."""
-    r = ChangefeedRunner(spark, sf, key="user_id", root=root)
-    r.subscribe(pushes, name="sub")
-    r.start_live(source_dir=str(src))
-    n = len(os.listdir(src))
-    _wait_until(lambda: r._ptr.batch() == n - 1
-                or not r._live_thread.is_alive())
+def _live_run(family, spark, sf, files, src, pushes, root=None):
+    """Start a live runner over `files`, dropped before start_live on a
+    fresh root (they commit when the worker starts), subscribed when
+    the family pushes, and wait until every file committed or the
+    worker stopped. Returns the runner, still live."""
+    r = _runner(family, spark, sf, root)
+    if family != "views":
+        r.subscribe(pushes, name="sub")
+    if family == "multitable":
+        if root is None:
+            for f in files:
+                r.ingest("orders", f)
+        r.start_live()
+    else:
+        if root is None:
+            _dropped(files, src)
+        r.start_live(source_dir=str(src))
+    _wait_until(lambda: r.committed_batch() == len(files) - 1
+                or not r._live._thread.is_alive())
     return r
 
 
 def _dropped(files, src):
-    """A source dir holding `files` as live-<seq> files, dropped before
-    start_live (they commit when the worker starts)."""
+    """A source dir holding `files` as live-<seq> files."""
     src.mkdir()
     for f in files:
         drop_live_file(str(src), f)
@@ -87,14 +134,23 @@ def _dropped(files, src):
 
 
 @pytest.fixture(scope="module")
-def clean_run(spark, sf_smoke, tmp_path_factory):
-    """State, log and pushes of an uninterrupted live run."""
-    tmp = tmp_path_factory.mktemp("clean")
-    files = _change_files(sf_smoke, tmp, N_FILES, 60)
-    pushes = _Pushes()
-    r = _live_run(spark, sf_smoke, _dropped(files, tmp / "src"), pushes)
-    r.stop_live()
-    return files, _rows(r.state()), _rows(r.log()), pushes
+def clean_runs(spark, sf_smoke, tmp_path_factory):
+    """Per family, on first use: the change files, outputs and pushes
+    of an uninterrupted live run."""
+    runs = {}
+
+    def get(family):
+        if family not in runs:
+            tmp = tmp_path_factory.mktemp(f"clean-{family}")
+            files = _change_files(sf_smoke, tmp, N_FILES, 60,
+                                  _TABLE[family])
+            pushes = _Pushes()
+            r = _live_run(family, spark, sf_smoke, files, tmp / "src",
+                          pushes)
+            r.stop_live()
+            runs[family] = files, _outputs(family, r), pushes
+        return runs[family]
+    return get
 
 
 @pytest.fixture(scope="module")
@@ -105,49 +161,88 @@ def replayed(spark, sf_smoke):
     return r
 
 
-@pytest.mark.parametrize("point", ["after_stage", "after_publish",
-                                   "after_flip"])
+def _is_views_base(store) -> bool:
+    return os.path.basename(store.root) == "base"
+
+
+#: family -> crash point -> (owner, method, which stores crash). A
+#: views batch commits when its base store publishes, after the view
+#: stores: that publish is its flip.
+_CRASHES = {
+    "changefeed": {
+        "after_stage": (BucketedMvccState, "stage_tables", None),
+        "after_publish": (BucketedMvccState, "publish", None),
+        "after_flip": (VersionPointer, "flip", None),
+    },
+    "views": {
+        "after_stage": (BucketedMvccState, "stage_tables", None),
+        "after_publish": (BucketedMvccState, "publish", None),
+        "after_flip": (BucketedMvccState, "publish", _is_views_base),
+    },
+    "multitable": {
+        "after_stage": (BucketedMvccState, "stage", None),
+        "after_publish": (BucketedMvccState, "publish", None),
+        "after_flip": (VersionPointer, "flip", None),
+    },
+}
+
+
+@pytest.mark.parametrize("family,point", [
+    pytest.param(family, point,
+                 id=point if family == "changefeed" else f"{family}-{point}")
+    for family in FAMILIES for point in _CRASHES[family]])
 def test_live_restart_after_crash_point_matches_clean_run(
-        spark, sf_smoke, clean_run, tmp_path, monkeypatch, point):
-    """A worker that dies at batch 2 after stage_tables, after
-    publish() but before the CURRENT flip, or after the flip but
-    before the push, is restarted over the same root and source dir:
-    the final state, the changelog and the delivered batches equal
-    an uninterrupted run's, each batch delivered once."""
-    files, want_state, want_log, want_pushes = clean_run
-    owner, attr = {
-        "after_stage": (BucketedMvccState, "stage_tables"),
-        "after_publish": (BucketedMvccState, "publish"),
-        "after_flip": (VersionPointer, "flip"),
-    }[point]
+        spark, sf_smoke, clean_runs, tmp_path, monkeypatch, family,
+        point):
+    """A worker that dies at batch 2 after staging, after a publish()
+    but before the commit point, or after the commit point (the
+    CURRENT flip; a views batch's base publish) but before the push,
+    is restarted over the same root and source dir: the final state,
+    the changelog and the delivered batches equal an uninterrupted
+    run's, each batch delivered once, and the restart merges only the
+    batches after the committed one."""
+    files, want, want_pushes = clean_runs(family)
+    owner, attr, crashes = _CRASHES[family][point]
     real = getattr(owner, attr)
 
     def crash(self, batch_id, *args):
         real(self, batch_id, *args)
-        if batch_id == 2:
+        if batch_id == 2 and (crashes is None or crashes(self)):
             raise OSError(f"injected crash {point}")
 
     monkeypatch.setattr(owner, attr, crash)
     pushes = _Pushes()
-    src = _dropped(files, tmp_path / "src")
-    a = _live_run(spark, sf_smoke, src, pushes)
-    a._live_thread.join(60)
-    assert not a._live_thread.is_alive()
+    src = tmp_path / "src"
+    a = _live_run(family, spark, sf_smoke, files, src, pushes)
+    a._live._thread.join(60)
+    assert not a._live._thread.is_alive()
     with pytest.raises(RuntimeError, match="live batch 2") as err:
         a.stop_live()
     assert point in str(err.value.__cause__)
     monkeypatch.setattr(owner, attr, real)
+    committed = a.committed_batch()
+    merged = []
+    merge = type(a)._merge_batch
 
-    b = _live_run(spark, sf_smoke, src, pushes, root=a.root)
+    def recorded(self, batch_df, batch_id):
+        merged.append(batch_id)
+        merge(self, batch_df, batch_id)
+
+    monkeypatch.setattr(type(a), "_merge_batch", recorded)
+
+    b = _live_run(family, spark, sf_smoke, files, src, pushes,
+                  root=a.root)
     b.stop_live()
-    assert _rows(b.state()) == want_state
-    assert _rows(b.log()) == want_log
-    assert pushes.order == list(range(N_FILES))
-    assert pushes.rows == want_pushes.rows
+    # the restart resumes after the committed batch, re-merging none
+    assert merged == list(range(committed + 1, N_FILES))
+    assert _outputs(family, b) == want
+    if family != "views":
+        assert pushes.order == list(range(N_FILES))
+        assert pushes.rows == want_pushes.rows
 
 
 def test_catch_up_and_poll_stop_at_the_committed_batch(
-        spark, sf_smoke, clean_run, tmp_path, monkeypatch):
+        spark, sf_smoke, clean_runs, tmp_path, monkeypatch):
     """A worker that dies after stage_tables of batch 2 leaves batch
     2's changelog dir behind an uncommitted CURRENT (v1). Over the
     reopened root a fresh subscriber catches up on [0, 1] only and a
@@ -155,7 +250,7 @@ def test_catch_up_and_poll_stop_at_the_committed_batch(
     arrives once on both."""
     from db_realtime_changefeed_spark.api import Cursor
 
-    files, _state, want_log, want_pushes = clean_run
+    files, (_state, want_log), want_pushes = clean_runs("changefeed")
     real = BucketedMvccState.stage_tables
 
     def crash(self, batch_id, *args):
@@ -167,8 +262,8 @@ def test_catch_up_and_poll_stop_at_the_committed_batch(
     src = _dropped(files, tmp_path / "src")
     a = ChangefeedRunner(spark, sf_smoke, key="user_id")
     a.start_live(source_dir=str(src))
-    a._live_thread.join(60)
-    assert not a._live_thread.is_alive()
+    a._live._thread.join(60)
+    assert not a._live._thread.is_alive()
     with pytest.raises(RuntimeError, match="live batch 2"):
         a.stop_live()
     monkeypatch.setattr(BucketedMvccState, "stage_tables", real)
@@ -193,22 +288,24 @@ def test_catch_up_and_poll_stop_at_the_committed_batch(
     assert _rows(b.log()) == want_log
 
 
+@pytest.mark.parametrize("family", FAMILIES)
 def test_live_worker_error_surfaces_from_ingest_and_stop(
-        spark, sf_smoke, tmp_path):
+        spark, sf_smoke, tmp_path, family):
     """A batch that cannot be read stops the worker; the next ingest()
     (which then drops nothing) and stop_live() raise, naming it."""
-    good = _change_files(sf_smoke, tmp_path, 1, 20)[0]
+    good = _change_files(sf_smoke, tmp_path, 1, 20, _TABLE[family])[0]
     bad = tmp_path / "bad.parquet"
     bad.write_bytes(b"not parquet")
-    r = ChangefeedRunner(spark, sf_smoke, key="user_id")
+    r = _runner(family, spark, sf_smoke)
     src = r.start_live()
-    r.ingest(good)
-    r.ingest(str(bad))
-    r._live_thread.join(60)
-    assert not r._live_thread.is_alive()
-    assert r._ptr.batch() == 0
+    _ingest(family, r, good)
+    # past a table feed's ingest(), which would read it first
+    r._live.ingest(str(bad))
+    r._live._thread.join(60)
+    assert not r._live._thread.is_alive()
+    assert r.committed_batch() == 0
     with pytest.raises(RuntimeError, match="live batch 1"):
-        r.ingest(good)
+        _ingest(family, r, good)
     assert sorted(os.listdir(src)) == ["live-000000.parquet",
                                        "live-000001.parquet"]
     with pytest.raises(RuntimeError, match="live batch 1"):
@@ -249,44 +346,65 @@ def test_live_concurrent_ingests_each_commit_once(spark, sf_smoke,
     assert pushes.order == list(range(40))
 
 
+def _second_batch_jobs(spark, r, files) -> set:
+    """The Spark jobs that a live runner's second batch ran, counted
+    through the status tracker."""
+    tracker = spark.sparkContext.statusTracker()
+    r.start_live()
+    try:
+        r.ingest(files[0])
+        assert r.drain(60)
+        time.sleep(0.5)  # the status store is fed asynchronously
+        before = set(tracker.getJobIdsForGroup(None))
+        r.ingest(files[1])
+        assert r.drain(60)
+        _wait_until(lambda: set(tracker.getJobIdsForGroup(None)) - before)
+        time.sleep(0.5)  # a second job would show up by now
+        return set(tracker.getJobIdsForGroup(None)) - before
+    finally:
+        r.stop_live()
+
+
 def test_live_batch_runs_one_spark_job(spark, sf_smoke, tmp_path):
     """A live batch below the fold gate runs exactly one Spark job (the
     raw collect), counted through the status tracker."""
     files = _change_files(sf_smoke, tmp_path, 2, 50)
-    tracker = spark.sparkContext.statusTracker()
-    r = ChangefeedRunner(spark, sf_smoke, key="user_id")
-    done = threading.Event()
-    r.subscribe(lambda b, rows: b == 1 and done.set(), name="sub")
-    r.start_live()
-    try:
-        r.ingest(files[0])
-        _wait_until(lambda: r._ptr.batch() == 0)
-        time.sleep(0.5)  # the status store is fed asynchronously
-        before = set(tracker.getJobIdsForGroup(None))
-        r.ingest(files[1])
-        assert done.wait(60)
-        _wait_until(lambda: set(tracker.getJobIdsForGroup(None)) - before)
-        time.sleep(0.5)  # a second job would show up by now
-        new = set(tracker.getJobIdsForGroup(None)) - before
-    finally:
-        r.stop_live()
+    new = _second_batch_jobs(
+        spark, ChangefeedRunner(spark, sf_smoke, key="user_id"), files)
     assert len(new) == 1, sorted(new)
 
 
+def test_live_views_batch_runs_one_spark_job(spark, sf_smoke, tmp_path):
+    """A live maintained-views batch below the fold gate runs exactly
+    one Spark job (the fold's collect of the batch and base rows)."""
+    files = _change_files(sf_smoke, tmp_path, 2, 50)
+    new = _second_batch_jobs(spark, MaintainedViewsRunner(spark, sf_smoke),
+                             files)
+    assert len(new) == 1, sorted(new)
+
+
+@pytest.mark.parametrize("family", FAMILIES)
 def test_live_and_replay_refuse_each_others_root(spark, sf_smoke,
-                                                 replayed):
+                                                 replayed, family):
     """run() (or run_phase()) and start_live() number batches from 0
     each, so neither feeds a root the other fed; the error names the
     root."""
-    with pytest.raises(RuntimeError, match=replayed.root):
-        ChangefeedRunner(spark, sf_smoke, root=replayed.root).start_live()
-    live = ChangefeedRunner(spark, sf_smoke)
+    if family == "changefeed":
+        fed = replayed
+    else:
+        fed = _runner(family, spark, sf_smoke)
+        fed.run()
+    with pytest.raises(RuntimeError, match=fed.root):
+        _runner(family, spark, sf_smoke, root=fed.root).start_live()
+    live = _runner(family, spark, sf_smoke)
     live.start_live()
     live.stop_live()
     with pytest.raises(RuntimeError, match=live.root):
-        ChangefeedRunner(spark, sf_smoke, root=live.root).run()
-    with pytest.raises(RuntimeError, match=live.root):
-        run_phase(ChangefeedRunner(spark, sf_smoke, root=live.root), [])
+        _runner(family, spark, sf_smoke, root=live.root).run()
+    if family == "changefeed":
+        with pytest.raises(RuntimeError, match=live.root):
+            run_phase(ChangefeedRunner(spark, sf_smoke, root=live.root),
+                      [])
 
 
 def test_pointer_and_ack_symlinks_and_regular_files_reopen(spark,

@@ -540,7 +540,7 @@ def test_table_live_push_delivers_ingested_batch(spark, sf_smoke):
     from db_realtime_changefeed_spark.tmputil import scratch_dir
 
     feed = (Database(spark, sf_smoke).table("orders")
-            .changes(mode="live", processing_time="250 milliseconds"))
+            .changes(mode="live"))
     try:
         got: list = []
         feed.subscribe(lambda b, rows: got.append((b, len(rows))),

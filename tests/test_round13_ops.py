@@ -221,8 +221,7 @@ def test_composite_live_ingest(spark, sf_smoke):
 
     feed = (Database(spark, sf_smoke).table("orders")
             .changes(key=("o_orderstatus", "o_custkey"),
-                     mode="live",
-                     processing_time="250 milliseconds"))
+                     mode="live"))
     try:
         before = {r.key: r.cnt for r in feed.state().collect()}
         src = (load_table(spark, sf_smoke, "orders")

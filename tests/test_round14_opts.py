@@ -15,12 +15,13 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from db_realtime_changefeed_spark.catalog import load_table
 
 
-def test_final_watermark_ms_reads_last_offsets_entry(tmp_path):
+def test_final_watermark_ms_reads_last_offsets_entry(spark, tmp_path):
     from db_realtime_changefeed_spark.streaming.queries import (
         _final_watermark_ms,
     )
@@ -37,7 +38,37 @@ def test_final_watermark_ms_reads_last_offsets_entry(tmp_path):
         )
     # a non-digit file (e.g. .crc sidecar) must be ignored
     (odir / "2.crc").write_text("junk")
-    assert _final_watermark_ms(str(tmp_path)) == 1_700_003_600_000
+    assert _final_watermark_ms(spark, str(tmp_path)) == 1_700_003_600_000
+
+
+def test_final_watermark_ms_refuses_an_entry_without_watermark(
+        spark, tmp_path):
+    """An offsets entry without batchWatermarkMs, or a session that
+    runs no no-data batches (so the last entry predates the final
+    watermark), raises an error naming the checkpoint instead of
+    returning a wrong watermark."""
+    from db_realtime_changefeed_spark.streaming.queries import (
+        _final_watermark_ms,
+    )
+
+    odir = tmp_path / "offsets"
+    odir.mkdir()
+    (odir / "0").write_text(
+        "v1\n" + json.dumps({"batchTimestampMs": 1}) + "\n{}")
+    with pytest.raises(RuntimeError, match="has no batchWatermarkMs") as e:
+        _final_watermark_ms(spark, str(tmp_path))
+    assert str(tmp_path) in str(e.value)
+    (odir / "0").write_text(
+        "v1\n" + json.dumps({"batchWatermarkMs": 5}) + "\n{}")
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(conf, "false")
+    try:
+        with pytest.raises(RuntimeError, match=conf) as e:
+            _final_watermark_ms(spark, str(tmp_path))
+    finally:
+        spark.conf.unset(conf)
+    assert str(tmp_path) in str(e.value)
+    assert _final_watermark_ms(spark, str(tmp_path)) == 5
 
 
 def test_statefs_footer_counts_and_atomic_put(tmp_path):

@@ -547,7 +547,7 @@ def test_multitable_live_restart_continues_file_sequence(spark, sf_smoke,
         pq.write_table(rows.slice(lo, n), files[-1])
 
     def counted_after_ingest(runner, path, want):
-        runner.start_live(processing_time="250 milliseconds")
+        runner.start_live()
         try:
             runner.ingest("orders", path)
             deadline = time.time() + 60
@@ -564,7 +564,7 @@ def test_multitable_live_restart_continues_file_sequence(spark, sf_smoke,
     b = MultiTableChangefeedRunner(spark, sf_smoke, tables=("orders",),
                                    root=a.root)
     assert counted_after_ingest(b, files[1], 8) == 8
-    assert sorted(os.listdir(os.path.join(b.live_root, "orders"))) == [
+    assert sorted(os.listdir(b.live_root)) == [
         "live-000000.parquet", "live-000001.parquet"]
 
 
@@ -585,7 +585,7 @@ def test_live_ingest_temp_file_invisible_to_spark(spark, sf_smoke,
     src = tmp_path / "live"
     src.mkdir()
     runner = ChangefeedRunner(spark, sf_smoke, key="user_id")
-    runner.source_dir = str(src)
+    runner._live.source_dir = str(src)
     runner.ingest(events)  # a first file gives the dir a schema
     checked = []
 

@@ -365,7 +365,6 @@ def test_views_live_mode_matches_batch_final_state(spark, sf_smoke):
     answer (the live path exercises the identical merge+fold)."""
     import glob
     import os
-    import time
 
     from db_realtime_changefeed_spark.streaming.replay import (
         build_replay_chunks,
@@ -375,26 +374,13 @@ def test_views_live_mode_matches_batch_final_state(spark, sf_smoke):
     )
 
     live = MaintainedViewsRunner(spark, sf_smoke)
-    live.start_live(processing_time="250 milliseconds")
+    live.start_live()
     chunks = build_replay_chunks(spark, sf_smoke)
     files = sorted(glob.glob(os.path.join(chunks, "chunk-*.parquet")))
     for f in files:
         live.ingest(f)
-    from db_realtime_changefeed_spark.catalog import load_table
-
-    total = load_table(spark, sf_smoke, "events").count()
-    deadline = time.time() + 180
-    done = False
-    absorbed: dict = {}
-    while time.time() < deadline and not done:
-        # convergence via the engine's own progress telemetry: every
-        # ingested row has been processed AND committed (numInputRows
-        # is reported only for completed batches)
-        for p in live._live_query.recentProgress:
-            absorbed[p["batchId"]] = p["numInputRows"]
-        done = sum(absorbed.values()) >= total
-        if not done:
-            time.sleep(0.25)
+    # convergence: every ingested file has committed as its batch
+    done = live.drain(180)
     live.stop_live()
     assert done, "live views runner did not absorb all chunks in time"
     # final agg view equals the batch runner's final agg view
