@@ -34,7 +34,13 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from .changefeed import UpsertChangefeedRunner
-from .replay import _chunk_dir, _write_chunk, default_chunks
+from .replay import (
+    _chunk_dir,
+    _write_chunk,
+    chunk_paths,
+    default_chunks,
+    replay_files,
+)
 
 _PAYLOAD_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 
@@ -81,7 +87,7 @@ def build_cdc_ops_chunks(
     delete_on: str = "error",
 ) -> str:
     """Fixture prep: materialize the envelope stream as time-ordered
-    chunk files for the file-source replay (same layout contract as
+    chunk files for the replay (same layout contract as
     replay.build_replay_chunks). Idempotent per (sf_dir, params)."""
     if n_chunks is None:
         n_chunks = default_chunks()
@@ -103,14 +109,6 @@ def build_cdc_ops_chunks(
     with open(done, "w") as f:
         f.write("ok")
     return out
-
-
-def read_cdc_ops_stream(spark: SparkSession, path: str) -> DataFrame:
-    return (
-        spark.readStream.schema(ENVELOPE_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
 
 
 class CdcOpsUpsertRunner(UpsertChangefeedRunner):
@@ -147,17 +145,9 @@ class CdcOpsUpsertRunner(UpsertChangefeedRunner):
         )
 
     def run(self, n_chunks: int | None = None) -> None:
-        from .replay import fresh_sink_name, streaming_shuffle
-
+        """Replay the envelope chunks: chunk i commits as batch i, from
+        the batch after CURRENT (replay.replay_files)."""
         chunks = build_cdc_ops_chunks(self.spark, self.sf_dir, n_chunks)
-        env = read_cdc_ops_stream(self.spark, chunks)
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("cdcops"))
-                .start()
-            )
-            q.awaitTermination()
+        replay_files(
+            self, chunk_paths(chunks),
+            lambda path: self.spark.read.schema(ENVELOPE_DDL).parquet(path))

@@ -17,10 +17,9 @@ Semantics (docs/changefeed-semantics.md):
   {old_count,new_count,old_sum,new_sum,batch_id} row to a changelog
   — the {old_val,new_val} shape of classic changefeeds.
 - durability: a RESTARTED runner (same root) resumes instead of
-  re-merging what it committed. A replay (run()) resumes from its
-  Spark checkpoint under the root. A live feed (start_live()) needs
-  none: its batch id is its file's sequence number, and the worker
-  commits every live file above the CURRENT version.
+  re-merging what it committed. A replay (run()) commits chunk i as
+  batch i and a live feed (start_live()) file seq as batch seq, both
+  from the batch after the CURRENT version (replay.commit_batches).
 
 Scale notes: for every key (a 5-value event_type rollup or a per-user
 feed alike) state is the hash-bucketed MVCC store (state_store.py),
@@ -51,12 +50,9 @@ from ..tmputil import scratch_dir
 from .replay import (
     LiveWorker,
     build_replay_chunks,
-    fresh_sink_name,
-    guard_not_live_fed,
-    guard_not_phase_fed,
+    chunk_paths,
     read_events_file,
-    read_events_stream,
-    streaming_shuffle,
+    replay_files,
 )
 from .state_store import BucketedMvccState, VersionPointer
 
@@ -88,6 +84,19 @@ def cdc_envelope(events: DataFrame) -> DataFrame:
     )
 
 
+def cdc_file(spark: SparkSession, path: str) -> DataFrame:
+    """One event file (a replay chunk or a live change file) as a
+    batch of CDC envelopes."""
+    return cdc_envelope(read_events_file(spark, path))
+
+
+def replay_events(runner, files: list[str]) -> None:
+    """Feed event files to `runner` as a replay: files[i] commits as
+    batch i, after the runner's committed batch
+    (replay.replay_files)."""
+    replay_files(runner, files, lambda path: cdc_file(runner.spark, path))
+
+
 #: grouping keys the CDC payload supports → (Spark DDL, pyarrow type)
 _KEY_TYPES = {
     "event_type": ("string", "string"),
@@ -116,9 +125,9 @@ class ChangefeedRunner:
                  state_buckets: int | None = None):
         """`root`: pass a previous runner's root to RESTART from its
         durable state — the CURRENT pointer names the committed
-        version; a replay resumes from the checkpoint under root, a
-        live feed from the live file after CURRENT (crash-recovery
-        semantics; tested in tests/test_streaming.py and
+        version, and a replay resumes from the chunk after it, a live
+        feed from the live file after it (crash-recovery semantics;
+        tested in tests/test_streaming.py and
         tests/test_live_worker.py). A root whose pointer is not a
         bucketed-store version raises.
         `filter_sql`: SQL predicate over the CDC payload columns
@@ -140,7 +149,6 @@ class ChangefeedRunner:
         self.root = root or scratch_dir(prefix="dbrcf-changefeed-")
         self.log_dir = os.path.join(self.root, "changelog")
         self.state_root = os.path.join(self.root, "state")
-        self.ckpt = os.path.join(self.root, "checkpoint")
         os.makedirs(self.state_root, exist_ok=True)
         os.makedirs(self.log_dir, exist_ok=True)
         # hash-bucketed MVCC store so a micro-batch rewrites only the
@@ -158,8 +166,7 @@ class ChangefeedRunner:
         self._subscribers: list = []
         self._sub_lock = threading.Lock()
         self._live = LiveWorker(
-            self.root, self.ckpt,
-            lambda path: cdc_envelope(read_events_file(spark, path)),
+            self.root, lambda path: cdc_file(spark, path),
             self._merge_batch, self.committed_batch)
 
     def _current_state_df(self) -> DataFrame | None:
@@ -435,17 +442,12 @@ class ChangefeedRunner:
         chunks are event-time-ordered so per-chunk max is monotone
         and min-eligible is the seek answer (exactly a Kafka
         time-index lookup)."""
-        import glob as _glob
-        import os as _os
-
         import pyarrow.parquet as _pq
 
         chunks = build_replay_chunks(self.spark, self.sf_dir,
                                      n_chunks)
         best = None
-        for f in sorted(_glob.glob(_os.path.join(
-                chunks, "chunk-*.parquet"))):
-            idx = int(_os.path.basename(f)[6:-8])
+        for idx, f in enumerate(chunk_paths(chunks)):
             pf = _pq.ParquetFile(f)
             col = pf.schema_arrow.get_field_index("ts")
             mx = None
@@ -459,20 +461,10 @@ class ChangefeedRunner:
         return best
 
     def run(self, n_chunks: int | None = None) -> None:
-        guard_not_phase_fed(self.root)
-        guard_not_live_fed(self.root)
-        chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
-        env = cdc_envelope(read_events_stream(self.spark, chunks))
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("changefeed"))
-                .start()
-            )
-            q.awaitTermination()
+        """Replay the events table: chunk i commits as batch i, from
+        the batch after committed_batch() (replay_events)."""
+        replay_events(self, chunk_paths(
+            build_replay_chunks(self.spark, self.sf_dir, n_chunks)))
 
     def start_live(self, source_dir: str | None = None) -> str:
         """Continuous subscription mode — the namesake behavior a
@@ -609,7 +601,6 @@ class UpsertChangefeedRunner:
         self.root = root or scratch_dir(prefix="dbrcf-upsert-")
         self.log_dir = os.path.join(self.root, "changelog")
         self.state_root = os.path.join(self.root, "state")
-        self.ckpt = os.path.join(self.root, "checkpoint")
         os.makedirs(self.log_dir, exist_ok=True)
         os.makedirs(self.state_root, exist_ok=True)
         self._store = BucketedMvccState(
@@ -800,20 +791,7 @@ class UpsertChangefeedRunner:
         self._last_batch = batch_id
         self._push(batch_id)
 
-    def run(self, n_chunks: int | None = None) -> None:
-        guard_not_phase_fed(self.root)
-        chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
-        env = cdc_envelope(read_events_stream(self.spark, chunks))
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("upsertfeed"))
-                .start()
-            )
-            q.awaitTermination()
+    run = ChangefeedRunner.run
 
     def state(self) -> DataFrame:
         if self.driver_merge:
@@ -870,8 +848,8 @@ class MultiChangefeedRunner:
         # with ts <= resolved_ts once the batch commits — the
         # CockroachDB-style resolved-timestamp surface. Consistency
         # across feeds is per-micro-batch atomic by construction:
-        # all feeds merge inside ONE foreachBatch invocation, which
-        # is Structured Streaming's transaction boundary.
+        # all feeds merge inside ONE _merge_batch call, the batch's
+        # transaction boundary.
         self._resolved: list[tuple[int, object]] = []
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -888,21 +866,15 @@ class MultiChangefeedRunner:
         finally:
             batch_df.unpersist()
 
-    def run(self, n_chunks: int | None = None) -> None:
-        guard_not_phase_fed(self.root)
-        chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
-        env = cdc_envelope(read_events_stream(self.spark, chunks))
-        ckpt = os.path.join(self.root, "checkpoint")
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("multifeed"))
-                .start()
-            )
-            q.awaitTermination()
+    def committed_batch(self) -> int | None:
+        """The last batch every feed committed, None until each has
+        one: a batch that committed on some feeds only is merged
+        again, and each feed rewinds to its own previous version
+        first."""
+        done = [f.committed_batch() for f in self.feeds.values()]
+        return None if None in done else min(done)
+
+    run = ChangefeedRunner.run
 
     def state(self) -> DataFrame:
         """All feeds' states unioned under a feed tag (key rendered
@@ -952,9 +924,17 @@ class JoinViewRunner:
         self.filter_sql = filter_sql
         self.root = root or scratch_dir(prefix="dbrcf-joinview-")
         self.view_dir = os.path.join(self.root, "view")
-        self.ckpt = os.path.join(self.root, "checkpoint")
         os.makedirs(self.view_dir, exist_ok=True)
         self._dim = load_table(spark, sf_dir, "customer")
+
+    def committed_batch(self) -> int | None:
+        """The newest batch whose view file is complete (its
+        `_SUCCESS` marker), None before the first."""
+        return max(
+            (int(d[len("batch-"):]) for d in os.listdir(self.view_dir)
+             if d.startswith("batch-") and os.path.exists(
+                 os.path.join(self.view_dir, d, "_SUCCESS"))),
+            default=None)
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         delta = (
@@ -970,20 +950,7 @@ class JoinViewRunner:
         out = os.path.join(self.view_dir, f"batch-{batch_id:05d}")
         delta.write.mode("overwrite").parquet(out)
 
-    def run(self, n_chunks: int | None = None) -> None:
-        guard_not_phase_fed(self.root)
-        chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
-        env = cdc_envelope(read_events_stream(self.spark, chunks))
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("joinview"))
-                .start()
-            )
-            q.awaitTermination()
+    run = ChangefeedRunner.run
 
     def view(self) -> DataFrame:
         if not _has_parquet(self.view_dir):

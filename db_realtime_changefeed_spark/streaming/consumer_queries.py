@@ -88,11 +88,10 @@ def sink_idempotent_merge(spark, sf_dir):
     with the batch delta in exact DECIMAL — at 100 TB keys this
     becomes the bucketed MVCC store's pruned merge
     (state_store.py); the manifest protocol is identical."""
-    import glob
     import json
     import os
 
-    from .replay import build_replay_chunks, read_events_stream
+    from .replay import build_replay_chunks, chunk_paths, read_events_stream
 
     chunks = build_replay_chunks(spark, sf_dir)
     root = scratch_dir(prefix="dbrcf-idem-")
@@ -153,7 +152,7 @@ def sink_idempotent_merge(spark, sf_dir):
 
     # Upstream retry: re-deliver the FINAL batch under its original
     # id. The manifest must swallow it (no new version, no recount).
-    files = sorted(glob.glob(os.path.join(chunks, "chunk-*.parquet")))
+    files = chunk_paths(chunks)
     last_id = len(files) - 1
     before = _read_manifest()
     apply_batch(spark.read.parquet(files[-1]), last_id)

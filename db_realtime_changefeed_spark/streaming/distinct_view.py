@@ -48,13 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tmputil import scratch_dir
-from .changefeed import cdc_envelope
-from .replay import (
-    build_replay_chunks,
-    fresh_sink_name,
-    read_events_stream,
-    streaming_shuffle,
-)
+from .changefeed import ChangefeedRunner
 from .state_store import BucketedMvccState
 
 
@@ -85,7 +79,6 @@ class DistinctCountViewRunner:
                 "SPARK_GRAFT_ND_BUCKETS", "4"))
         self.nd_buckets = nd_buckets
         self.root = root or scratch_dir(prefix="dbrcf-ndview-")
-        self.ckpt = os.path.join(self.root, "checkpoint")
         self._members = BucketedMvccState(
             spark, os.path.join(self.root, "members"),
             self._MEMBER_DDL, "user_id")
@@ -96,6 +89,11 @@ class DistinctCountViewRunner:
     @property
     def _batches(self) -> list[int]:
         return self._members.versions()
+
+    def committed_batch(self) -> int | None:
+        """The newest committed batch (member-store version, published
+        last), None before the first commit."""
+        return max(self._members.versions(), default=None)
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.select(
@@ -230,19 +228,7 @@ class DistinctCountViewRunner:
             if kept is not None:
                 kept.unpersist()
 
-    def run(self, n_chunks: int | None = None) -> None:
-        chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
-        env = cdc_envelope(read_events_stream(self.spark, chunks))
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("ndview"))
-                .start()
-            )
-            q.awaitTermination()
+    run = ChangefeedRunner.run
 
     def distinct_trajectory(self) -> DataFrame:
         """(batch_id, event_type, nd_users) across committed batches —

@@ -33,13 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import SCHEMAS
-from .changefeed import (
-    _PAYLOAD_DDL,
-    UpsertChangefeedRunner,
-    fresh_sink_name,
-    guard_not_phase_fed,
-    streaming_shuffle,
-)
+from .changefeed import _PAYLOAD_DDL, UpsertChangefeedRunner
+from .replay import chunk_paths, replay_files
 
 #: table -> (key column, value column, event-time expr or None).
 #: Keys must be integer-typed and unique per row (the document id).
@@ -178,27 +173,15 @@ class GenericUpsertChangefeedRunner(UpsertChangefeedRunner):
         )
 
     def run(self, n_chunks: int | None = None) -> None:
+        """Replay the table in key order: chunk i commits as batch i,
+        from the batch after CURRENT (replay.replay_files)."""
         from .generic_views import _keyed_chunks
 
-        guard_not_phase_fed(self.root)
         chunks = _keyed_chunks(
             self.spark, self.sf_dir, self.table, self.key_cols,
             n_chunks)
-        src = (
-            self.spark.readStream.schema(SCHEMAS[self.table])
-            .option("maxFilesPerTrigger", 1).parquet(chunks)
-        )
-        with streaming_shuffle(self.spark):
-            q = (
-                self._envelope(src)
-                .writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name(f"docfeed_{self.table}"))
-                .start()
-            )
-            q.awaitTermination()
+        replay_files(self, chunk_paths(chunks), lambda path: self._envelope(
+            self.spark.read.schema(SCHEMAS[self.table]).parquet(path)))
 
     def _unpack_cols(self, key_col: str = "user_id") -> list:
         """The table's own key column(s), decoded from the envelope

@@ -11,6 +11,7 @@ retract-and-apply path on data the events fixture never shaped).
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 
@@ -20,13 +21,7 @@ from ..catalog import load_table, table_path
 from ..queries import query
 from ..tmputil import scratch_dir
 from .changefeed import ChangefeedRunner
-from .replay import (
-    LiveWorker,
-    default_chunks,
-    fresh_sink_name,
-    guard_not_live_fed,
-    streaming_shuffle,
-)
+from .replay import LiveWorker, chunk_paths, default_chunks, replay_files
 from .state_store import BucketedMvccState
 from .views import MaintainedViewsRunner
 
@@ -87,8 +82,8 @@ class GenericAggViewRunner:
         durable state (the MaintainedViewsRunner contract, ported):
         every store is manifest-committed versioned parquet, the
         delta/top-k logs are per-batch parquet dirs gated to
-        committed versions, and the checkpoint under root resumes
-        from committed offsets — a fresh instance serves identical
+        committed versions, and a replay resumes from the chunk after
+        the newest base version — a fresh instance serves identical
         trajectories without reprocessing (tested)."""
         self.spark = spark
         self.sf_dir = sf_dir
@@ -116,7 +111,6 @@ class GenericAggViewRunner:
         #: itself may be derived and thus absent from the parquet)
         self.arrival = arrival if arrival is not None else seq
         self.root = root or scratch_dir(prefix=f"dbrcf-gview-{table}-")
-        self.ckpt = os.path.join(self.root, "checkpoint")
         #: per-row {old,new} delta log — ONE parquet write of the
         #: batch's already-cached delta relation per micro-batch
         #: (idempotent per-batch-dir overwrite); this is what makes
@@ -167,7 +161,7 @@ class GenericAggViewRunner:
                 self._index_ddl, band_width=index_band_width,
                 n_bands=index_bands)
 
-        self._live = LiveWorker(self.root, self.ckpt, self._read_file,
+        self._live = LiveWorker(self.root, self._read_file,
                                 self._merge_batch, self.committed_batch)
 
     @property
@@ -176,10 +170,14 @@ class GenericAggViewRunner:
 
     committed_batch = MaintainedViewsRunner.committed_batch
 
+    @functools.cached_property
+    def _schema(self):
+        """The table's own schema, which every change file has."""
+        return load_table(self.spark, self.sf_dir, self.table).schema
+
     def _read_file(self, path: str) -> DataFrame:
-        """One live change file, in the table's own schema."""
-        schema = load_table(self.spark, self.sf_dir, self.table).schema
-        return self.spark.read.schema(schema).parquet(path)
+        """One change file (a replay chunk or a live file)."""
+        return self.spark.read.schema(self._schema).parquet(path)
 
     def _fold_idx(self, delta: DataFrame,
                   base: int | None, touched: list[int]) -> DataFrame:
@@ -575,25 +573,12 @@ class GenericAggViewRunner:
             winners.unpersist()
 
     def run(self, n_chunks: int | None = None) -> None:
-        guard_not_live_fed(self.root)
+        """Replay the table in arrival order: chunk i commits as batch
+        i, from the batch after the newest base version
+        (replay.replay_files)."""
         chunks = _keyed_chunks(self.spark, self.sf_dir, self.table,
                                self.arrival, n_chunks)
-        schema = load_table(self.spark, self.sf_dir,
-                            self.table).schema
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(chunks)
-        )
-        with streaming_shuffle(self.spark):
-            q = (
-                stream.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("genericview"))
-                .start()
-            )
-            q.awaitTermination()
+        replay_files(self, chunk_paths(chunks), self._read_file)
 
     # ---- continuous maintenance (r11: the events runner's live
     # ---- mode, mirrored so ANY table's standing views run live)

@@ -5,11 +5,12 @@ changefeed engine's state story).
 Two production behaviors land here:
 
 - **Phased replay** (`run_phase`): drive a runner's standing query
-  over an explicit subset of the replay chunks, then later over
-  more — the same checkpoint resumes exactly where it stopped, so a
-  maintenance operation (rescale, upgrade) can be dropped between
-  two committed micro-batches deterministically. This is the
-  harness-side stand-in for "stop the connector, operate, restart".
+  over an explicit prefix of the replay chunks, then later over a
+  longer one — each call resumes after the runner's committed batch,
+  exactly where the last one stopped, so a maintenance operation
+  (rescale, upgrade) can be dropped between two committed
+  micro-batches deterministically. This is the harness-side
+  stand-in for "stop the connector, operate, restart".
 
 - **Row TTL** (`TtlChangefeedRunner`): every key's state row carries
   `last_ts` (event-time of its latest event); after each merged
@@ -35,65 +36,30 @@ from __future__ import annotations
 import glob
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tmputil import scratch_dir
-from .changefeed import cdc_envelope
-from .replay import (
-    build_replay_chunks,
-    fresh_sink_name,
-    guard_not_live_fed,
-    guard_not_phase_fed,
-    read_events_stream,
-    streaming_shuffle,
-)
+from .changefeed import ChangefeedRunner, replay_events
+from .replay import build_replay_chunks, chunk_paths
 from .state_store import BucketedMvccState, VersionPointer
 
 
 def chunk_files(spark: SparkSession, sf_dir: str,
                 n_chunks: int | None = None) -> list[str]:
     """The replay chunk files, in replay order."""
-    chunks = build_replay_chunks(spark, sf_dir, n_chunks)
-    return sorted(glob.glob(os.path.join(chunks, "chunk-*.parquet")))
+    return chunk_paths(build_replay_chunks(spark, sf_dir, n_chunks))
 
 
 def run_phase(runner, files: list[str]) -> None:
-    """Feed `files` (replay chunk files) into `runner`'s standing
-    query via its OWN durable source dir + checkpoint, AvailableNow.
-    Chunks already present/processed are skipped by the file-source
-    checkpoint, so successive calls with growing prefixes of the
-    chunk list advance the feed deterministically one phase at a
-    time. copy2 preserves the chunk mtimes that encode replay
-    order."""
-    src = os.path.join(runner.root, "src")
-    # reverse of the run() guard: a checkpoint that predates root/src
-    # was created by run() streaming from the replay-chunks dir;
-    # feeding the same checkpoint from src would double-process.
-    if not os.path.exists(src) and os.path.exists(runner.ckpt):
-        raise RuntimeError(
-            "this runner was fed via run(); run_phase() would "
-            "re-deliver the same events from a different path — "
-            "use a fresh runner root")
-    guard_not_live_fed(runner.root)
-    os.makedirs(src, exist_ok=True)
-    for f in files:
-        dst = os.path.join(src, os.path.basename(f))
-        if not os.path.exists(dst):
-            shutil.copy2(f, dst)
-    env = cdc_envelope(read_events_stream(runner.spark, src))
-    with streaming_shuffle(runner.spark):
-        q = (
-            env.writeStream.foreachBatch(runner._merge_batch)
-            .outputMode("update")
-            .option("checkpointLocation", runner.ckpt)
-            .trigger(availableNow=True)
-            .queryName(fresh_sink_name("cf_phase"))
-            .start()
-        )
-        q.awaitTermination()
+    """Feed `files` (a prefix of chunk_files(), chunk i first as batch
+    i) into `runner`'s standing query through the same batch driver as
+    run() (replay.replay_files): the files after the runner's
+    committed batch commit, so successive calls with growing prefixes
+    advance the feed one phase at a time, and a run() after a phase,
+    or a phase after a run(), goes on from the same committed batch."""
+    replay_events(runner, files)
 
 
 class TtlChangefeedRunner:
@@ -124,7 +90,6 @@ class TtlChangefeedRunner:
         self.root = root or scratch_dir(prefix="dbrcf-ttl-")
         self.log_dir = os.path.join(self.root, "expirylog")
         self.state_root = os.path.join(self.root, "state")
-        self.ckpt = os.path.join(self.root, "checkpoint")
         os.makedirs(self.state_root, exist_ok=True)
         os.makedirs(self.log_dir, exist_ok=True)
         self._store = BucketedMvccState(
@@ -133,6 +98,9 @@ class TtlChangefeedRunner:
         )
         self._ptr = VersionPointer(self.root, self._store)
         self._last_batch = self._ptr.batch()
+
+    committed_batch = ChangefeedRunner.committed_batch
+    run = ChangefeedRunner.run
 
     # ---- sidecars ----
     def _sidecar(self, kind: str, batch_id: int) -> str:
@@ -241,21 +209,6 @@ class TtlChangefeedRunner:
         finally:
             delta.unpersist()
         self._last_batch = batch_id
-
-    def run(self, n_chunks: int | None = None) -> None:
-        guard_not_phase_fed(self.root)
-        chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
-        env = cdc_envelope(read_events_stream(self.spark, chunks))
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("ttl_changefeed"))
-                .start()
-            )
-            q.awaitTermination()
 
     # ---- reads ----
     def state(self) -> DataFrame:

@@ -7,9 +7,10 @@ round 1's verdict).
 Unlike MultiChangefeedRunner (N standing queries over one stream),
 this runner is one standing query over N streams: `events` and
 `orders` are replayed as separate time-ordered chunk dirs, each
-normalized to a common envelope {tbl, op, key, ts, value}, unioned
-into a single streaming DataFrame. Every micro-batch merges both
-tables' keyed deltas in ONE foreachBatch transaction, so the state
+normalized to a common envelope {tbl, op, key, ts, value}, and batch
+i is the union of every table's chunk i. Every micro-batch merges
+both tables' keyed deltas in ONE foreachBatch transaction, so the
+state
 version at any committed batch is a consistent cross-table
 snapshot. resolved(batch) = min over tables of that table's
 cumulative max processed ts — a reader at resolved_ts sees every
@@ -38,8 +39,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from .changefeed import ChangefeedRunner
 from .replay import _chunk_dir, _write_chunk, default_chunks
-from .replay import LiveWorker, guard_not_live_fed
-from .replay import fresh_sink_name, streaming_shuffle
+from .replay import LiveWorker, chunk_paths, replay_files
 
 _STATE_DEC = "decimal(28,6)"
 
@@ -506,7 +506,6 @@ class MultiTableChangefeedRunner:
                             else ", d_sum decimal(28,6)"))
         self.root = root or scratch_dir(prefix="dbrcf-mtable-")
         self.state_root = os.path.join(self.root, "state")
-        self.ckpt = os.path.join(self.root, "checkpoint")
         #: per-batch keyed-delta log (r11 — delta cursors on
         #: non-events feeds): one small parquet dir per micro-batch,
         #: written from the SAME persisted delta relation the merge
@@ -540,10 +539,8 @@ class MultiTableChangefeedRunner:
         #: each file holding enveloped rows that carry `tbl`
         self.live_root = os.path.join(self.root, "live-src")
         self._live = LiveWorker(
-            self.root, self.ckpt,
-            lambda path: spark.read.schema(self._env_ddl).parquet(path),
-            self._merge_batch, self.committed_batch,
-            source_dir=self.live_root)
+            self.root, self._read_envelopes, self._merge_batch,
+            self.committed_batch, source_dir=self.live_root)
 
     _current_state_df = ChangefeedRunner._current_state_df
     committed_batch = ChangefeedRunner.committed_batch
@@ -553,6 +550,11 @@ class MultiTableChangefeedRunner:
 
     def versions(self) -> list[int]:
         return self._store.versions()
+
+    def _read_envelopes(self, *paths: str) -> DataFrame:
+        """Enveloped change files (a live file, or chunk i of every
+        table) as one batch."""
+        return self.spark.read.schema(self._env_ddl).parquet(*paths)
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self._last_batch is not None and batch_id <= self._last_batch:
@@ -656,11 +658,10 @@ class MultiTableChangefeedRunner:
         self._last_batch = batch_id
 
     def run(self, n_chunks: int | None = None) -> None:
-        guard_not_live_fed(self.root)
-        streams = [
-            self.spark.readStream.schema(self._env_ddl)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(build_table_chunks(
+        """Replay every table: batch i is the union of each table's
+        chunk i, from the batch after CURRENT (replay.replay_files)."""
+        per_table = [
+            chunk_paths(build_table_chunks(
                 self.spark, self.sf_dir, tbl, n_chunks,
                 self.key_overrides.get(tbl), key_type=self._key_ddl,
                 with_after=self.with_after,
@@ -668,19 +669,8 @@ class MultiTableChangefeedRunner:
                 with_value=not self.key_only))
             for tbl in self.tables
         ]
-        env = streams[0]
-        for s in streams[1:]:
-            env = env.unionByName(s)
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("mtable"))
-                .start()
-            )
-            q.awaitTermination()
+        replay_files(self, list(zip(*per_table)),
+                     lambda chunks: self._read_envelopes(*chunks))
 
     # ---- continuous subscription mode (live feeds on any table) ----
     def start_live(self) -> str:

@@ -32,6 +32,7 @@ from .changefeed import (
 )
 from .replay import (
     build_replay_chunks,
+    chunk_paths,
     default_chunks,
     fresh_sink_name,
     read_events_stream,
@@ -1052,15 +1053,12 @@ def changefeed_live(spark, sf_dir):
     query is stopped and the final state must equal the batch
     aggregate — same oracle as changefeed_core, reached through the
     live path."""
-    import glob
-    import os
-
     key = (id(spark), sf_dir, "__live__")
     if key not in _CF_CACHE:
         runner = ChangefeedRunner(spark, sf_dir)
         runner.start_live()
         chunks = build_replay_chunks(spark, sf_dir)
-        files = sorted(glob.glob(os.path.join(chunks, "chunk-*.parquet")))
+        files = chunk_paths(chunks)
         try:
             for f in files:
                 runner.ingest(f)
@@ -1889,12 +1887,10 @@ def sink_parquet_resumed(spark, sf_dir):
     the checkpoint's WAL; the file sink's manifest makes the
     output atomic per batch — the same pair that survives a real
     driver crash.)"""
-    import glob
     import os
     import shutil
 
-    chunks = build_replay_chunks(spark, sf_dir)
-    files = sorted(glob.glob(os.path.join(chunks, "chunk-*.parquet")))
+    files = chunk_paths(build_replay_chunks(spark, sf_dir))
     staging = scratch_dir(prefix="dbrcf-resume-src-")
     out = scratch_dir(prefix="dbrcf-resume-out-")
     ckpt = scratch_dir(prefix="dbrcf-resume-ckpt-")

@@ -1,22 +1,28 @@
-"""Event-stream replay harness (SURVEY.md §1.1, §2.A3).
+"""Event-stream replay harness and the one batch driver (SURVEY.md
+§1.1, §2.A3).
 
-The graded `events` table is replayed as a Structured Streaming
-source: the parquet is re-chunked (once, into a writable tmp dir)
-into time-ordered files, then read with `readStream` +
-`maxFilesPerTrigger=1` + `Trigger.AvailableNow` — Spark's file
-source processes the chunks oldest-first, giving a deterministic
-sequence of micro-batches that simulates real-time arrival.
+The graded `events` table is replayed as a sequence of files: the
+parquet is re-chunked (once, into a writable tmp dir) into
+time-ordered chunk files, and a runner's run() commits chunk i as
+batch i through its foreachBatch body `_merge_batch(df, i)`, oldest
+first: a deterministic sequence of micro-batches that simulates
+real-time arrival. A live feed (LiveWorker) commits its
+`live-<seq>.parquet` files the same way, as batch seq. Both go
+through commit_batches, which starts after the runner's durable
+commit point, so replay and live share one restart rule; a mark under
+the root (mark_feed) keeps one root to one kind of sequence.
 
 Never touches /root/testdata (read-only): chunks are copies.
 
 100 TB note: in production the source would be Kafka/files-on-
-object-store; everything downstream of `readStream` is source-
+object-store; everything downstream of the file sequence is source-
 agnostic, so this harness IS the swap point.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
 import re
 import shutil
@@ -32,9 +38,8 @@ from ..catalog import EVENTS_NS_SCHEMA, SCHEMAS, ns_to_us, parquet_ts_unit
 
 def _replay_root() -> str:
     """Replay-chunk cache root: co-located with the scratch base
-    (RAM-backed when available — the chunk files are re-read once
-    per micro-batch by the file source, so they benefit from the
-    same placement as the checkpoints; see tmputil.scratch_base)."""
+    (RAM-backed when available — every replay reads its chunk files
+    once per batch; see tmputil.scratch_base)."""
     from ..tmputil import scratch_base
 
     return os.path.join(
@@ -47,8 +52,8 @@ _REPLAY_ROOT = _replay_root()
 def default_chunks() -> int:
     """Replay micro-batch count. Streaming results are chunking-
     invariant (tested: tests/test_streaming.py), so correctness runs
-    use few chunks — per-micro-batch scheduler+checkpoint cost is the
-    dominant term locally. 4 keeps multi-batch semantics (watermark
+    use few chunks — per-micro-batch scheduler cost is the dominant
+    term locally. 4 keeps multi-batch semantics (watermark
     advancement, incremental merges) observable."""
     return int(os.environ.get("SPARK_GRAFT_STREAM_CHUNKS", "4"))
 
@@ -274,42 +279,89 @@ def run_available_now(
     return ckpt
 
 
-def guard_not_phase_fed(root: str) -> None:
-    """Refuse run() on a runner root that lifecycle.run_phase already
-    fed: run_phase streams from root/src while run() streams from the
-    shared replay-chunks dir with the SAME checkpoint, and the file
-    source tracks paths — mixing the two feeds would re-deliver every
-    event under a second path. (run_phase holds the reverse guard.)"""
-    if os.path.exists(os.path.join(root, "src")):
+def chunk_paths(chunks_dir: str) -> list[str]:
+    """The chunk files of a replay chunk dir, in replay order: chunk
+    i is batch i."""
+    return sorted(glob.glob(os.path.join(chunks_dir, "chunk-*.parquet")))
+
+
+def commit_batches(files, read_batch, merge_batch, committed):
+    """The one batch driver of every replay and live feed: commit
+    `files[i]` as batch i, by `merge_batch(read_batch(files[i]), i)`
+    (the runner's foreachBatch body), for every i from `committed()` +
+    1 (0 before the first commit) in order, on the caller's thread.
+    Yields each batch id once its merge returned. A feed restarted over
+    its root thus resumes after its durable commit point, and a file's
+    index in `files` is its batch id."""
+    last = committed()
+    for i in range(0 if last is None else last + 1, len(files)):
+        merge_batch(read_batch(files[i]), i)
+        yield i
+
+
+#: the pointer under a runner root naming the kind of sequence that
+#: feeds it (mark_feed)
+FEED_MARK = "FEED"
+
+
+def mark_feed(root: str, kind: str) -> None:
+    """Record that a `kind` sequence feeds the runner root `root`:
+    "replay" (run(), lifecycle.run_phase()), "live" (start_live()) or
+    "stream" (a views runner's run_from_stream()). Each kind numbers
+    its batches from 0 in its own sequence, so a root that one kind fed
+    refuses every other: raises, naming the root."""
+    from .statefs import STATE_FS
+
+    path = os.path.join(root, FEED_MARK)
+    fed = STATE_FS.read_pointer(path)
+    if fed is None:
+        os.makedirs(root, exist_ok=True)
+        STATE_FS.put_pointer(path, kind)
+    elif fed != kind:
         raise RuntimeError(
-            "this runner was fed via run_phase(); run() would "
-            "re-deliver the same events from a different path — "
-            "use a fresh runner root")
+            f"runner root {root} is fed by a {fed} sequence; a {kind} "
+            "feed would reuse its batch ids — use a fresh root")
 
 
-#: a file under a changefeed root that start_live() fed
-LIVE_MARK = "LIVE"
+def replay_files(runner, files, read_batch) -> None:
+    """Feed `files` (chunk i first as batch i) to `runner` as a replay:
+    mark its root replay-fed, then commit every file after
+    `runner.committed_batch()` through `runner._merge_batch`
+    (commit_batches), inside streaming_shuffle on the caller's thread.
+    A second call over the same root, or one with a longer list,
+    commits only the files past the committed batch."""
+    mark_feed(runner.root, "replay")
+    with streaming_shuffle(runner.spark):
+        for _ in commit_batches(files, read_batch, runner._merge_batch,
+                                runner.committed_batch):
+            pass
 
 
-def guard_not_live_fed(root: str) -> None:
-    """Refuse a replay (run(), run_phase()) on a changefeed root that
-    start_live() fed: a live feed numbers its batches by file sequence
-    and a replay by its checkpoint, both from 0, so the replay's batch
-    0 would rewind onto the live feed's state. (start_live() holds the
-    reverse guard.)"""
-    if os.path.exists(os.path.join(root, LIVE_MARK)):
-        raise RuntimeError(
-            f"changefeed root {root} was fed live; a replay would "
-            "reuse its batch ids — use a fresh root")
+class _Landed:
+    """A live source dir's files as a sequence indexed by seq
+    (`live-<seq>.parquet`), as long as the run of landed files from
+    `start` on."""
+
+    def __init__(self, source_dir: str, start: int):
+        self.source_dir = source_dir
+        self._len = start
+        while os.path.exists(self[self._len]):
+            self._len += 1
+
+    def __len__(self) -> int:
+        return self._len
+
+    def __getitem__(self, seq: int) -> str:
+        return os.path.join(self.source_dir, live_file_name(seq))
 
 
 class LiveWorker:
     """The live (start_live) mode of every live runner: the runner
     owns the batch sequence. One worker thread commits
     `live-<seq>.parquet` from the source dir in order, with batch id =
-    seq, as `merge_batch(read_batch(path), seq)` (the runner's
-    foreachBatch body, so a batch merges exactly as a replay's
-    micro-batch does); ingest() wakes it, and an idle feed waits on a
+    seq, through commit_batches and the runner's foreachBatch body
+    `merge_batch(read_batch(path), seq)`, so a batch merges exactly as
+    a replay's; ingest() wakes it, and an idle feed waits on a
     condition without polling. It starts at `committed()` + 1 (0 on a
     fresh root), so files dropped before start(), left pending by
     stop(), or landed before a crash commit then. It stops at its
@@ -317,10 +369,9 @@ class LiveWorker:
     never sets session conf: a concurrent reader of the session would
     see it change."""
 
-    def __init__(self, root: str, ckpt: str, read_batch, merge_batch,
-                 committed, source_dir: str | None = None):
+    def __init__(self, root: str, read_batch, merge_batch, committed,
+                 source_dir: str | None = None):
         self.root = root
-        self._ckpt = ckpt
         self._read = read_batch
         self._merge = merge_batch
         self._committed = committed
@@ -335,20 +386,13 @@ class LiveWorker:
 
     def start(self, source_dir: str | None = None) -> str:
         """Start the worker over `source_dir` (or the one given at
-        construction) and mark the root live-fed. Refuses a root that a
-        replay fed (it has a checkpoint): both number batches from 0.
-        Returns the source dir."""
-        # the reverse of guard_not_live_fed
-        if os.path.exists(self._ckpt):
-            raise RuntimeError(
-                f"changefeed root {self.root} was fed by a replay "
-                "(run()); start_live() would reuse its batch ids — use "
-                "a fresh root")
+        construction) and mark the root live-fed (mark_feed: a root
+        that a replay fed is refused). Returns the source dir."""
         if self._thread is not None:
             raise RuntimeError(f"changefeed {self.root} is already live")
+        mark_feed(self.root, "live")
         self.source_dir = source_dir or self.source_dir
         os.makedirs(self.source_dir, exist_ok=True)
-        open(os.path.join(self.root, LIVE_MARK), "a").close()
         base = self._committed()
         self._next = 0 if base is None else base + 1
         self._stopping = False
@@ -360,16 +404,26 @@ class LiveWorker:
 
     def _loop(self) -> None:
         while True:
-            seq = self._next
-            path = os.path.join(self.source_dir, live_file_name(seq))
             with self._cv:
-                while not self._stopping and not os.path.exists(path):
+                while not self._stopping and not os.path.exists(
+                        os.path.join(self.source_dir,
+                                     live_file_name(self._next))):
                     self._cv.wait()
                 if self._stopping:
                     return
             try:
-                self._merge(self._read(path), seq)
+                for seq in commit_batches(
+                        _Landed(self.source_dir, self._next), self._read,
+                        self._merge, lambda: self._next - 1):
+                    with self._cv:
+                        self._next = seq + 1
+                        self._cv.notify_all()
+                        if self._stopping:
+                            return
             except Exception as e:
+                # batches commit in order: the one that failed is _next
+                seq = self._next
+                path = os.path.join(self.source_dir, live_file_name(seq))
                 err = RuntimeError(
                     f"changefeed {self.root}: live batch {seq} "
                     f"({path}) failed: {e!r}")
@@ -378,9 +432,6 @@ class LiveWorker:
                     self._error = err
                     self._cv.notify_all()
                 return
-            with self._cv:
-                self._next = seq + 1
-                self._cv.notify_all()
 
     def _raise_error(self) -> None:
         if self._error is not None:

@@ -438,10 +438,7 @@ def changefeed_view_live(spark, sf_dir):
     worker is stopped.  Graded on the FINAL agg view: the answer is
     chunking-invariant, so the final state must equal the batch
     keep-latest-visible aggregate however the batches fell."""
-    import glob
-    import os
-
-    from .replay import build_replay_chunks
+    from .replay import build_replay_chunks, chunk_paths
     from .views import MaintainedViewsRunner
 
     key = (id(spark), sf_dir, "__view_live__")
@@ -449,8 +446,7 @@ def changefeed_view_live(spark, sf_dir):
         live = MaintainedViewsRunner(spark, sf_dir)
         live.start_live()
         chunks = build_replay_chunks(spark, sf_dir)
-        files = sorted(
-            glob.glob(os.path.join(chunks, "chunk-*.parquet")))
+        files = chunk_paths(chunks)
         try:
             for f in files:
                 live.ingest(f)

@@ -57,14 +57,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..tmputil import scratch_dir
 from . import changefeed
-from .changefeed import _has_parquet, cdc_envelope
+from .changefeed import _has_parquet, cdc_envelope, cdc_file
 from .replay import (
     LiveWorker,
-    build_replay_chunks,
     fresh_sink_name,
-    guard_not_live_fed,
-    read_events_file,
-    read_events_stream,
+    mark_feed,
     streaming_shuffle,
 )
 from .state_store import BucketedMvccState
@@ -399,8 +396,9 @@ class MaintainedViewsRunner:
                  root: str | None = None):
         """`root`: pass a previous runner's root to RESTART from its
         durable state — every view store is versioned parquet with
-        manifest commits, the top-k delta log is parquet, and the
-        checkpoint under root resumes from committed offsets, so a
+        manifest commits, the top-k delta log is parquet, and a replay
+        resumes from the chunk after the newest base version (a
+        run_from_stream() feed from its checkpoint under root), so a
         fresh instance serves identical trajectories without
         re-processing (crash-recovery; tested)."""
         self.spark = spark
@@ -442,8 +440,7 @@ class MaintainedViewsRunner:
         self._topk_cache: tuple[int, list] | None = None
         self._sample_cache: tuple[int, list] | None = None
         self._live = LiveWorker(
-            self.root, self.ckpt,
-            lambda path: cdc_envelope(read_events_file(spark, path)),
+            self.root, lambda path: cdc_file(spark, path),
             self._merge_batch, self.committed_batch)
 
     @property
@@ -1320,20 +1317,7 @@ class MaintainedViewsRunner:
             .parquet(self.sample_dir)
         )
 
-    def run(self, n_chunks: int | None = None) -> None:
-        guard_not_live_fed(self.root)
-        chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
-        env = cdc_envelope(read_events_stream(self.spark, chunks))
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("viewsfeed"))
-                .start()
-            )
-            q.awaitTermination()
+    run = changefeed.ChangefeedRunner.run
 
     def run_from_stream(self, env_source: DataFrame) -> None:
         """Run the same merge+folds over ANY streaming DataFrame of
@@ -1341,8 +1325,10 @@ class MaintainedViewsRunner:
         — the composition seam that lets the network-shaped tail
         source (queries/scans.py TailStreamSource) feed the
         maintained views end to end: wire bytes -> Arrow-parsed
-        micro-batches -> CDC envelope -> IVM folds."""
-        guard_not_live_fed(self.root)
+        micro-batches -> CDC envelope -> IVM folds. Spark's checkpoint
+        under root numbers the batches, so a root fed this way takes
+        no replay or live feed (replay.mark_feed)."""
+        mark_feed(self.root, "stream")
         env = cdc_envelope(env_source)
         with streaming_shuffle(self.spark):
             q = (
@@ -1477,8 +1463,7 @@ class DeltaJoinViewRunner:
                  a_type: str = "purchase", b_type: str = "click",
                  root: str | None = None, how: str = "inner"):
         """`root`: a previous runner's root RESTARTS from its durable
-        stores + checkpoint (same contract as
-        MaintainedViewsRunner).
+        stores (same contract as MaintainedViewsRunner).
         `how`: "inner" or "left" — the LEFT-OUTER view preserves
         every A-side key and null-extends the B columns; the
         touched-key recompute handles the outer semantics for free
@@ -1495,7 +1480,6 @@ class DeltaJoinViewRunner:
         self.b_type = b_type
         self.how = how
         self.root = root or scratch_dir(prefix="dbrcf-deltajoin-")
-        self.ckpt = os.path.join(self.root, "checkpoint")
         self._a = BucketedMvccState(
             spark, os.path.join(self.root, "sideA"),
             self._SIDE_DDL, "user_id")
@@ -1514,6 +1498,11 @@ class DeltaJoinViewRunner:
         """Committed batch ids from the durable view-store manifests
         — survives restart, immune to retry double-count."""
         return self._v.versions()
+
+    def committed_batch(self) -> int | None:
+        """The newest committed batch (view-store version, published
+        last), None before the first commit."""
+        return max(self._v.versions(), default=None)
 
     def _side_winners(self, batch_df: DataFrame,
                       etype: str) -> DataFrame:
@@ -1702,19 +1691,7 @@ class DeltaJoinViewRunner:
             da.unpersist()
             db.unpersist()
 
-    def run(self, n_chunks: int | None = None) -> None:
-        chunks = build_replay_chunks(self.spark, self.sf_dir, n_chunks)
-        env = cdc_envelope(read_events_stream(self.spark, chunks))
-        with streaming_shuffle(self.spark):
-            q = (
-                env.writeStream.foreachBatch(self._merge_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.ckpt)
-                .trigger(availableNow=True)
-                .queryName(fresh_sink_name("deltajoin"))
-                .start()
-            )
-            q.awaitTermination()
+    run = changefeed.ChangefeedRunner.run
 
     def join_trajectory(self) -> DataFrame:
         parts = [

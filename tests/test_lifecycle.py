@@ -110,7 +110,7 @@ def test_ttl_stats_sidecar_tracks_live_min(ttl_runner):
 
 
 def test_ttl_restart_resumes_without_change(spark, sf_smoke, ttl_runner):
-    """A fresh runner over the same root finds the checkpoint fully
+    """A fresh runner over the same root finds every chunk
     committed: no new batches, identical state."""
     before = {(r["user_id"], r["cnt"], r["last_ts_us"])
               for r in ttl_runner.state().collect()}
@@ -252,7 +252,7 @@ def test_keyed_lifecycle_on_both_merge_paths(spark, sf_smoke, monkeypatch,
         assert last == {k: c for k, c, _ in want}, key
 
 
-# ------------------------------------------------- feed exclusivity
+# ------------------------------------------------- feed sequence
 
 def test_empty_batch_before_any_meta_is_noop(spark, sf_smoke):
     """ADVICE r7: an empty micro-batch arriving before any meta
@@ -265,18 +265,30 @@ def test_empty_batch_before_any_meta_is_noop(spark, sf_smoke):
     assert r._ptr.batch() is None  # nothing committed
 
 
-def test_run_after_run_phase_refuses(spark, sf_smoke):
-    """run() and run_phase() share a checkpoint but stream different
-    paths; mixing them would double-process (ADVICE r7)."""
-    files = chunk_files(spark, sf_smoke)
+def test_run_phase_and_run_continue_one_sequence(spark, sf_smoke,
+                                                monkeypatch):
+    """run_phase() and run() feed one batch sequence (chunk i is batch
+    i): a phase over the first chunk followed by run() ends equal to a
+    clean run(), and a phase after run() commits nothing."""
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    clean = ChangefeedRunner(spark, sf_smoke, key="user_id")
+    clean.run()
     r = ChangefeedRunner(spark, sf_smoke, key="user_id")
+    files = chunk_files(spark, sf_smoke)
     run_phase(r, files[:1])
-    with pytest.raises(RuntimeError, match="run_phase"):
-        r.run()
-
-
-def test_run_phase_after_run_refuses(spark, sf_smoke):
-    r = TtlChangefeedRunner(spark, sf_smoke, ttl_us=_TTL_US)
+    assert r.versions() == [0]
     r.run()
-    with pytest.raises(RuntimeError, match="fresh runner root"):
-        run_phase(r, chunk_files(spark, sf_smoke)[:1])
+    assert r.versions() == clean.versions()
+    assert rows(r.state()) == rows(clean.state())
+    assert rows(r.log()) == rows(clean.log())
+
+    merged = []
+    merge = ChangefeedRunner._merge_batch
+    monkeypatch.setattr(
+        ChangefeedRunner, "_merge_batch",
+        lambda self, df, b: (merged.append(b), merge(self, df, b)))
+    run_phase(clean, files[:1])
+    assert merged == []
+    assert rows(clean.state()) == rows(r.state())

@@ -1,11 +1,12 @@
 """The live worker (replay.LiveWorker) of every live runner family —
 ChangefeedRunner, MaintainedViewsRunner and MultiTableChangefeedRunner
 here: each ingested file commits as its own batch (batch id = file
-sequence) through the same merge as a replay, with no streaming
-query. Covers concurrent ingests, restarts after a crash at each
-commit step, worker errors, the one Spark job per batch, the refusal
-to mix live and replay feeds on one root, and the symlink CURRENT and
-ack pointers next to the regular files older runners wrote."""
+sequence) through the same merge and batch driver as a replay, with no
+streaming query. Covers concurrent ingests, restarts of a live feed and
+of a replay after a crash at each commit step, worker errors, the one
+Spark job per batch, the refusal to mix live and replay feeds on one
+root, and the symlink CURRENT and ack pointers next to the regular
+files older runners wrote."""
 
 from __future__ import annotations
 
@@ -103,14 +104,21 @@ class _Pushes:
         self.rows[batch_id] = sorted(tuple(sorted(r.items())) for r in rows)
 
 
+def _opened(family, spark, sf, pushes, root=None):
+    """A runner on a fresh root, or reopened over `root`, subscribed
+    when the family pushes."""
+    r = _runner(family, spark, sf, root)
+    if family != "views":
+        r.subscribe(pushes, name="sub")
+    return r
+
+
 def _live_run(family, spark, sf, files, src, pushes, root=None):
     """Start a live runner over `files`, dropped before start_live on a
     fresh root (they commit when the worker starts), subscribed when
     the family pushes, and wait until every file committed or the
     worker stopped. Returns the runner, still live."""
-    r = _runner(family, spark, sf, root)
-    if family != "views":
-        r.subscribe(pushes, name="sub")
+    r = _opened(family, spark, sf, pushes, root)
     if family == "multitable":
         if root is None:
             for f in files:
@@ -135,21 +143,28 @@ def _dropped(files, src):
 
 @pytest.fixture(scope="module")
 def clean_runs(spark, sf_smoke, tmp_path_factory):
-    """Per family, on first use: the change files, outputs and pushes
-    of an uninterrupted live run."""
+    """Per family and mode, on first use: the change files (live
+    mode), the batch count, and the outputs and pushes of an
+    uninterrupted live run or run()."""
     runs = {}
 
-    def get(family):
-        if family not in runs:
-            tmp = tmp_path_factory.mktemp(f"clean-{family}")
-            files = _change_files(sf_smoke, tmp, N_FILES, 60,
-                                  _TABLE[family])
+    def get(family, mode="live"):
+        if (family, mode) not in runs:
             pushes = _Pushes()
-            r = _live_run(family, spark, sf_smoke, files, tmp / "src",
-                          pushes)
-            r.stop_live()
-            runs[family] = files, _outputs(family, r), pushes
-        return runs[family]
+            if mode == "live":
+                tmp = tmp_path_factory.mktemp(f"clean-{family}")
+                files = _change_files(sf_smoke, tmp, N_FILES, 60,
+                                      _TABLE[family])
+                r = _live_run(family, spark, sf_smoke, files,
+                              tmp / "src", pushes)
+                r.stop_live()
+            else:
+                files = None
+                r = _opened(family, spark, sf_smoke, pushes)
+                r.run()
+            runs[family, mode] = (files, r.committed_batch() + 1,
+                                  _outputs(family, r), pushes)
+        return runs[family, mode]
     return get
 
 
@@ -187,21 +202,24 @@ _CRASHES = {
 }
 
 
-@pytest.mark.parametrize("family,point", [
-    pytest.param(family, point,
-                 id=point if family == "changefeed" else f"{family}-{point}")
-    for family in FAMILIES for point in _CRASHES[family]])
+@pytest.mark.parametrize("mode,family,point", [
+    pytest.param(mode, family, point,
+                 id=("" if mode == "live" else "replay-")
+                 + (point if family == "changefeed"
+                    else f"{family}-{point}"))
+    for mode in ("live", "replay") for family in FAMILIES
+    for point in _CRASHES[family]])
 def test_live_restart_after_crash_point_matches_clean_run(
-        spark, sf_smoke, clean_runs, tmp_path, monkeypatch, family,
-        point):
-    """A worker that dies at batch 2 after staging, after a publish()
-    but before the commit point, or after the commit point (the
-    CURRENT flip; a views batch's base publish) but before the push,
-    is restarted over the same root and source dir: the final state,
-    the changelog and the delivered batches equal an uninterrupted
-    run's, each batch delivered once, and the restart merges only the
-    batches after the committed one."""
-    files, want, want_pushes = clean_runs(family)
+        spark, sf_smoke, clean_runs, tmp_path, monkeypatch, mode,
+        family, point):
+    """A live worker, or a run(), that dies at batch 2 after staging,
+    after a publish() but before the commit point, or after the commit
+    point (the CURRENT flip; a views batch's base publish) but before
+    the push, is restarted over the same root (and source dir): the
+    final state, the changelog and the delivered batches equal an
+    uninterrupted run's, each batch delivered once, and the restart
+    merges only the batches after the committed one."""
+    files, n, want, want_pushes = clean_runs(family, mode)
     owner, attr, crashes = _CRASHES[family][point]
     real = getattr(owner, attr)
 
@@ -213,12 +231,17 @@ def test_live_restart_after_crash_point_matches_clean_run(
     monkeypatch.setattr(owner, attr, crash)
     pushes = _Pushes()
     src = tmp_path / "src"
-    a = _live_run(family, spark, sf_smoke, files, src, pushes)
-    a._live._thread.join(60)
-    assert not a._live._thread.is_alive()
-    with pytest.raises(RuntimeError, match="live batch 2") as err:
-        a.stop_live()
-    assert point in str(err.value.__cause__)
+    if mode == "live":
+        a = _live_run(family, spark, sf_smoke, files, src, pushes)
+        a._live._thread.join(60)
+        assert not a._live._thread.is_alive()
+        with pytest.raises(RuntimeError, match="live batch 2") as err:
+            a.stop_live()
+        assert point in str(err.value.__cause__)
+    else:
+        a = _opened(family, spark, sf_smoke, pushes)
+        with pytest.raises(OSError, match=point):
+            a.run()
     monkeypatch.setattr(owner, attr, real)
     committed = a.committed_batch()
     merged = []
@@ -230,14 +253,18 @@ def test_live_restart_after_crash_point_matches_clean_run(
 
     monkeypatch.setattr(type(a), "_merge_batch", recorded)
 
-    b = _live_run(family, spark, sf_smoke, files, src, pushes,
-                  root=a.root)
-    b.stop_live()
+    if mode == "live":
+        b = _live_run(family, spark, sf_smoke, files, src, pushes,
+                      root=a.root)
+        b.stop_live()
+    else:
+        b = _opened(family, spark, sf_smoke, pushes, root=a.root)
+        b.run()
     # the restart resumes after the committed batch, re-merging none
-    assert merged == list(range(committed + 1, N_FILES))
+    assert merged == list(range(committed + 1, n))
     assert _outputs(family, b) == want
     if family != "views":
-        assert pushes.order == list(range(N_FILES))
+        assert pushes.order == list(range(n))
         assert pushes.rows == want_pushes.rows
 
 
@@ -250,7 +277,7 @@ def test_catch_up_and_poll_stop_at_the_committed_batch(
     arrives once on both."""
     from db_realtime_changefeed_spark.api import Cursor
 
-    files, (_state, want_log), want_pushes = clean_runs("changefeed")
+    files, _n, (_state, want_log), want_pushes = clean_runs("changefeed")
     real = BucketedMvccState.stage_tables
 
     def crash(self, batch_id, *args):

@@ -443,8 +443,8 @@ def test_generic_runner_restart_serves_identical_state(
     """A fresh GenericAggViewRunner on the SAME root (driver
     restart) serves identical trajectories — batches from durable
     manifests, logs from committed parquet, top-k from the durable
-    index — without reprocessing (the checkpoint holds the
-    committed offsets; run() is a no-op replay)."""
+    index — without reprocessing (every chunk is at or below the
+    newest base version; run() is a no-op replay)."""
     from db_realtime_changefeed_spark.streaming.generic_views import (
         GenericAggViewRunner,
     )
@@ -456,7 +456,7 @@ def test_generic_runner_restart_serves_identical_state(
         group="o_orderstatus", value="o_totalprice",
         index_band_width=62500.0, root=r.root)
     assert r2._batches == r._batches
-    r2.run(n_chunks=7)  # resumes from committed offsets: no new work
+    r2.run(n_chunks=7)  # resumes after the committed batch: no new work
     assert r2._batches == r._batches
     a = sorted(map(tuple, r.agg_trajectory().collect()))
     b = sorted(map(tuple, r2.agg_trajectory().collect()))

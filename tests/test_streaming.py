@@ -271,13 +271,13 @@ def test_changefeed_time_travel(spark, sf_smoke):
 
 def test_changefeed_restart_run_does_not_double_count(spark, sf_smoke):
     """ADVICE r1: a restarted runner that calls run() again must NOT
-    re-merge already-committed chunks — the checkpoint under root
-    resumes from committed offsets, so state is unchanged."""
+    re-merge already-committed chunks — the replay resumes after the
+    CURRENT batch under root, so state is unchanged."""
     a = ChangefeedRunner(spark, sf_smoke)
     a.run()
     sa = sorted(map(tuple, a.state().collect()))
     b = ChangefeedRunner(spark, sf_smoke, root=a.root)
-    b.run()  # same checkpoint: no new files -> no new batches
+    b.run()  # every chunk committed: no new batches
     sb = sorted(map(tuple, b.state().collect()))
     assert sa == sb
 
@@ -667,7 +667,7 @@ def test_multitable_resolved_snapshot_consistency(spark, sf_smoke):
 
 def test_multitable_restart_no_double_count(spark, sf_smoke):
     """Multi-table runner restarted from the same root must not
-    re-merge committed batches (checkpoint under root)."""
+    re-merge committed batches (CURRENT under root)."""
     from db_realtime_changefeed_spark.streaming.multitable import (
         MultiTableChangefeedRunner,
     )

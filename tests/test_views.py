@@ -337,10 +337,10 @@ def test_consumer_groups_preserve_per_key_order(spark, sf_smoke):
 def test_views_runner_restart_serves_identical_trajectories(
         spark, sf_smoke):
     """Crash recovery: a brand-new runner instance constructed on the
-    old runner's root (durable stores + parquet logs + checkpoint)
-    must serve identical trajectories and top-k deltas WITHOUT
-    re-processing — and a re-run() on the restored checkpoint is a
-    no-op (availableNow finds no new data)."""
+    old runner's root (durable stores + parquet logs) must serve
+    identical trajectories and top-k deltas WITHOUT re-processing —
+    and a re-run() over the restored root is a no-op (every chunk is
+    at or below the newest base version)."""
     from db_realtime_changefeed_spark.streaming.views import (
         MaintainedViewsRunner,
     )
@@ -355,7 +355,7 @@ def test_views_runner_restart_serves_identical_trajectories(
         assert a.exceptAll(b).count() == 0
         assert b.exceptAll(a).count() == 0
     before = fresh._batches
-    fresh.run()  # same checkpoint: no new chunks, nothing reprocessed
+    fresh.run()  # every chunk committed: nothing reprocessed
     assert fresh._batches == before
 
 
@@ -575,7 +575,7 @@ def test_delta_join_runner_restart_serves_identical_views(
         spark, sf_smoke):
     """Crash recovery parity for the delta-join dataflow: a fresh
     instance on the old root serves identical join and cascade
-    trajectories, and a re-run() on the restored checkpoint is a
+    trajectories, and a re-run() over the restored root is a
     no-op."""
     from db_realtime_changefeed_spark.streaming.view_queries import (
         _dj_runner,
